@@ -1,307 +1,127 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Timing sweep over `SparkEntry.queries`: each query runs REPS times
+  * and keeps its minimum. Prints a `detail` line with every query's time,
+  * then the `total` line last.
+  *
+  * Env: `SPARK_GRAFT_SF_DIR` (input tables, required), `SPARK_GRAFT_CPUS`
+  * (see [[Sessions]]), `SPARK_GRAFT_BENCH_REPS` (default 2) and
+  * `SPARK_GRAFT_BENCH_ONLY` (comma-separated query names; an unknown name
+  * is an error). A query that throws is named in the `failed` field, left
+  * out of the total, and makes the run exit non-zero. */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def makeSession(): SparkSession = {
-      // initialPartitionNum: the cluster-side knob for data-scaled
-      // shuffle granularity (set ≈ input/128 MB on a real cluster). The
-      // default stays = cpus on this box: the sf10 A/B measured 8× cpus
-      // as PURE overhead — no benefit at sf10 (292.8 → 354.8 s on the
-      // string-keyed exactjoin; the md5-long hashing was the real fix)
-      // and a 1.4–3× regression at sf0.1 on iterative/persisted queries
-      // (events_rfm 3.7 → 9.3 s, orders_pareto 2.2 → 6.6 s: persisted
-      // and checkpointed frames keep the inflated partition count and
-      // every round pays the tiny-task scheduling, which AQE's
-      // post-shuffle coalescing cannot reach).
-      val initParts = sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", cpus)
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          initParts)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = makeSession()
-    // noop sink, NOT count(): under a bare count Catalyst prunes every
-    // column, so projection-only queries would time a row count instead of
-    // the actual computation
-    def exhaust(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-                dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-    // min-of-REPS with NO separate warm-up pass: the first timed run IS the
-    // warm-up (JIT + codegen + file listing + page cache) and the min
-    // discards it — same wall-clock as warm-up + (REPS-1) timed passes,
-    // strictly more information. Default 2: this box shows multi-second
-    // scheduler stalls (a 0.4 s query has measured 21 s single-shot, and
-    // whole suite totals swing 62→97 s between invocations), so more reps
-    // give a better steady-state estimate — but a measured min-of-3 suite
-    // ran past 10 minutes on a bad hour (r3's min-of-3 plus a separate
-    // warm-up pass was rc=124, no parsed total), and an artifact that
-    // exists beats a slightly cleaner one that might not. min-of-2 walls
-    // measured 188–286 s. Diagnosing stalls locally: REPS=3 + BUDGET_SECS
-    // raised.
-    // default stays min-of-2 at EVERY suite size: a single-rep sweep was
-    // measured (227 queries, back-to-back hours) at median_vs_clean 1.45
-    // with the re-time pass only reaching 29 queries, while the min-of-2
-    // sweep in the adjacent hour read 1.06 — single-shot bias dominates
-    // anything it saves, and SWEEP_FRAC=0.6 already guarantees the
-    // re-time pass its budget on contended hours.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    // hard wall-budget backstop: a bench that produces NO number is worth
-    // less than a noisy one, so once the suite has spent this many seconds,
-    // remaining queries drop to a single rep — the JSON line always prints
-    val budgetSecs =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SECS", "420").toDouble
-    // the min-of-REPS sweep may spend at most this fraction of the budget
-    // before degrading to single-rep: the re-time pass below NEEDS wall
-    // budget left over, and it needs it MOST on exactly the contended runs
-    // where a 2-rep sweep would otherwise eat all 420 s (the r6 artifact:
-    // min-of-2 read 340 s on a ~177 s engine because one stall covered
-    // both back-to-back reps of query after query — and a full-budget
-    // sweep leaves the defense mechanism no time to run)
-    // 0.6: a contended 209-query sweep measured ~395 s even with the
-    // tail degraded at 0.7·420 — leaving the re-time pass zero budget in
-    // exactly the run that needed it (retimed: 0, total read 226 s on a
-    // ~180 s engine). At 0.6 the contended sweep ends ~360 s and the
-    // worst movers still get fresh-session re-times.
-    val sweepBudget = budgetSecs *
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_SWEEP_FRAC", "0.6").toDouble
-    // optional comma-separated query filter — fresh-JVM measurement of a
-    // subset (the scale experiments re-time outliers in isolation: one
-    // long-lived session accumulates cache/GC state that can inflate
-    // later queries several-fold at 10× data; see SCALE.md)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
-    // between-query session hygiene, OUTSIDE the timers: streaming drains
-    // leave their memory-sink tables in the catalog (a 10×-scale run pins
-    // millions of sink rows on the heap for the rest of the suite) and the
-    // dedup skew guards leave one persisted candidate index each — in a
-    // 71-query session that accumulation measured as multi-fold GC
-    // inflation on UNRELATED later queries (a pure-scan query timed 369×
-    // its fresh-JVM cost before this). Queries are self-contained, so
-    // dropping temp views and cached frames between them changes nothing
-    // but the noise floor.
-    def resetSessionState(): Unit = {
-      try {
-        spark.catalog.listTables().collect()
-          .filter(_.tableType == "TEMPORARY")
-          .foreach(t => spark.catalog.dropTempView(t.name))
-        spark.catalog.clearCache()
-      } catch { case _: Throwable => () }
-    }
-    // the pinned-clean map is read BEFORE the sweep: it both caps sweep
-    // reps (below) and ranks the reserved re-time pass
-    val cleanPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_CLEAN",
-      "BENCH_CLEAN.json")
-    val cleanMap: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(cleanPath)), "UTF-8")
-      val pair = """"([A-Za-z0-9_]+)":\s*([0-9]+\.[0-9]+)""".r
-      pair.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
-    val suiteStart = System.nanoTime()
-    def elapsedSecs: Double = (System.nanoTime() - suiteStart) / 1e9
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try exhaust(fn, sfDir) catch { case _: Throwable => () }
-      val t = (System.nanoTime() - t0) / 1e9
-      // hygiene BETWEEN REPS, not just between queries (outside the timer):
-      // persist-heavy queries (the dedup exactjoins persist a candidate
-      // index) would otherwise plan-match rep 1's still-cached frames in
-      // rep 2, and min-of-2 records a warm-cache time the engine never
-      // produces fresh — the r9 judge measured the containment pin at
-      // 0.69 s cached vs 3.6–3.8 s in two independent fresh runs
-      resetSessionState()
-      t
-    }
-    // SWEEP-REP CAP: a first rep reading > 5× its pinned clean time is a
-    // stall, and repeating a stalled query inside the same contended
-    // window mostly measures the stall again (BENCH_r08: one query read
-    // 130 s against a 4.5 s clean pin and its second rep burned budget the
-    // re-time pass then lacked). Skip its remaining reps and DEFER it to
-    // the reserved re-time pass, which runs under a fresh session.
-    val mustRetime = collection.mutable.Set.empty[String]
-    val firstPass = selected.map { case (name, fn) =>
-      val overBudget = elapsedSecs > sweepBudget
-      val t1 = timeOnce(fn)
-      val stalled = cleanMap.get(name).exists(c => c > 0.05 && t1 > 5.0 * c)
-      if (stalled) mustRetime += name
-      val times =
-        if (overBudget || stalled) Seq(t1)
-        else t1 +: (1 until reps).map(_ => timeOnce(fn))
-      name -> times.min
-    }
-    // OUTLIER RE-TIME PASS: min-of-REPS is defenseless when one scheduler
-    // stall spans both back-to-back reps — the r6 official artifact read
-    // 340 s on an engine that isolated re-times put at ~180 s because
-    // nearly every query absorbed contention during that one driver run.
-    // So after the sweep, spend whatever remains of the wall budget
-    // re-running the slowest queries under a FRESH SparkSession (sheds any
-    // accumulated session/GC state; JIT warmth survives in the same JVM)
-    // and fold each new time in via min. A stall can only ever ADD time,
-    // so folding a later, cleaner measurement in is strictly
-    // variance-reducing — it can never make a result look faster than the
-    // engine is on an idle box. Passes repeat over the current
-    // slowest-first order until the margin for one more re-time (2× the
-    // query's own current time + fixed overhead) no longer fits, or a
-    // full pass improves nothing by >20%.
-    var results = collection.mutable.LinkedHashMap(firstPass.toSeq: _*)
-    val retimed = collection.mutable.Map.empty[String, Int]
-    // RESERVED RE-TIME: the opportunistic loop below is gated on budget
-    // left over, which is zero on exactly the hours that need it most
-    // (BENCH_r08 shipped retimed:0 with 10–29× inflated tails because the
-    // contended sweep alone blew the 420 s budget). So the top movers
-    // vs the pinned clean map ALWAYS get one fresh-session re-time, even
-    // past budget — bounded extra wall: at most RESERVE_SECS plus the one
-    // re-time admitted under the per-query cost gate below (a mover whose
-    // expected fresh cost no longer fits the remaining reserve is skipped,
-    // so a single stalled re-time can no longer overshoot arbitrarily —
-    // r08 measured a 130 s single re-time against the 75 s reserve).
-    // Movers rank by t/clean (deferred stalls first; queries absent from
-    // the clean map rank by raw seconds so new heavy queries still
-    // qualify).
-    // one fresh session shared by both re-time passes, created lazily so
-    // a run with nothing to re-time never pays the restart
-    var sessionFresh = false
-    def ensureFreshSession(): Unit = if (!sessionFresh) {
-      spark.stop()
-      spark = makeSession()
-      sessionFresh = true
-    }
-    if (results.nonEmpty) {
-      val reserveSecs = sys.env
-        .getOrElse("SPARK_GRAFT_BENCH_RESERVE_SECS", "75").toDouble
-      val reserveK = sys.env
-        .getOrElse("SPARK_GRAFT_BENCH_RESERVE_K", "10").toInt
-      def moverScore(name: String, t: Double): Double =
-        (if (mustRetime(name)) 1e9 else 0.0) +
-          cleanMap.get(name).filter(_ > 0.05).map(t / _).getOrElse(t)
-      // a deferred stall bypasses the t > 0.5 floor: the whole point of
-      // the sweep cap is that ITS reading is the inflated one, so a
-      // sub-0.5 s stalled query must still get its fresh re-time
-      val movers = results.toSeq
-        .map { case (n, t) => (n, t, moverScore(n, t)) }
-        .filter { case (n, t, s) => (t > 0.5 || mustRetime(n)) && s >= 1.5 }
-        .sortBy(-_._3).take(reserveK)
-      if (movers.nonEmpty) ensureFreshSession()
-      val reserveStart = elapsedSecs
-      // queries with NO clean pin (added after the last re-pin) have no
-      // cost estimate but are exactly the new-heavy-query case the
-      // reserve exists for — their sweep reading is the inflated one, so
-      // gating on it would skip them (the r08 failure shape). Allow ONE
-      // unestimated re-time per run: bounded overshoot, fresh number.
-      var unknownUsed = false
-      for ((name, cur, _) <- movers) {
-        // per-query cost gate: predict the fresh re-time by the clean pin
-        // (the sweep's own `cur` is the inflated reading for exactly the
-        // queries that land here); skip pinned movers that no longer fit.
-        // A tiny pin (≤ 0.05 s) is still an ESTIMATE — floored, not
-        // dropped: stalled tiny queries rank first by ratio, and letting
-        // them fall into the None branch would burn the single
-        // unknown-slot the reserve keeps for genuinely UNPINNED heavy
-        // queries (the r08 failure shape the slot exists for)
-        val est = cleanMap.get(name).map(math.max(_, 0.05))
-        val admit = est match {
-          case Some(e) => elapsedSecs - reserveStart + e < reserveSecs
-          case None =>
-            if (unknownUsed || elapsedSecs - reserveStart >= reserveSecs)
-              false
-            else { unknownUsed = true; true }
-        }
-        if (admit) {
-          val t = timeOnce(selected(name))
-          retimed(name) = retimed.getOrElse(name, 0) + 1
-          if (t < cur) results(name) = t
-        }
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Per-query minimum seconds of the queries that ran, and the names
+    * (with their error) of those that threw. */
+  final case class Sweep(times: Seq[(String, Double)],
+                         failed: Seq[(String, String)]) {
+    def total: Double = times.map(_._2).sum
+  }
+
+  /** The queries `only` names, in `all`'s order; every query when `only`
+    * is unset. Fails naming any name `all` does not declare. */
+  def select(all: Map[String, Query], only: Option[String])
+      : Seq[(String, Query)] = only match {
+    case None => all.toSeq
+    case Some(spec) =>
+      val names = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.filterNot(all.contains).toSeq.sorted
+      if (unknown.nonEmpty) throw new IllegalArgumentException(
+        s"unknown query name(s): ${unknown.mkString(", ")}")
+      all.toSeq.filter(kv => names(kv._1))
+  }
+
+  /** Drop temp views and cached frames. Streaming drains leave their
+    * memory-sink tables in the catalog and the dedup skew guards leave a
+    * persisted candidate index each; in a long session that accumulation
+    * measured as multi-fold GC inflation on unrelated later queries, and
+    * a second rep would plan-match the first rep's cached frames and time
+    * a warm cache the engine never sees fresh. Queries are
+    * self-contained, so this changes nothing but the noise floor. */
+  def resetSessionState(spark: SparkSession): Unit = {
+    spark.catalog.listTables().collect()
+      .filter(_.tableType == "TEMPORARY")
+      .foreach(t => spark.catalog.dropTempView(t.name))
+    spark.catalog.clearCache()
+  }
+
+  /** Min-of-`reps` wall time per query. The first rep is the warm-up
+    * (JIT, codegen, file listing, page cache) and the min discards it.
+    * The output goes to the noop sink, not count(): under a bare count
+    * Catalyst prunes every column, so projection-only queries would time
+    * a row count. The session is reset after every rep, outside the
+    * timer. A query that throws stops repeating and is reported failed. */
+  def sweep(spark: SparkSession, sfDir: String,
+            queries: Seq[(String, Query)], reps: Int): Sweep = {
+    val times = Seq.newBuilder[(String, Double)]
+    val failed = Seq.newBuilder[(String, String)]
+    queries.foreach { case (name, fn) =>
+      var best = Double.PositiveInfinity
+      var error: Option[Throwable] = None
+      var rep = 0
+      while (rep < reps && error.isEmpty) {
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          best = math.min(best, (System.nanoTime() - t0) / 1e9)
+        } catch { case e: Exception => error = Some(e) }
+        resetSessionState(spark)
+        rep += 1
+      }
+      error match {
+        case Some(e) => failed += name -> String.valueOf(e.getMessage)
+        case None => times += name -> best
       }
     }
-    if (elapsedSecs + 10.0 < budgetSecs && results.nonEmpty) {
-      ensureFreshSession()
-      var improving = true
-      var budgetLeft = true
-      while (improving && budgetLeft) {
-        improving = false
-        val slowestFirst = results.toSeq.sortBy(-_._2)
-        for ((name, cur) <- slowestFirst if budgetLeft) {
-          // a re-time of a query costs about its own runtime; require
-          // 2× + 5 s headroom so the official line always prints in budget
-          if (elapsedSecs + 2.0 * cur + 5.0 > budgetSecs) budgetLeft = false
-          else if (cur > 0.5 && retimed.getOrElse(name, 0) < 3) {
-            val t = timeOnce(selected(name))
-            retimed(name) = retimed.getOrElse(name, 0) + 1
-            if (t < cur) {
-              results(name) = t
-              if (t < cur * 0.8) improving = true
-            }
-          }
-        }
-      }
-    }
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    // SELF-ADJUDICATION vs the pinned clean reference: BENCH_CLEAN.json
-    // holds a verified clean hour's per-query map; the official line
-    // carries median(t_i / clean_i) over the shared queries. Contention
-    // on this box is UNIFORM (measured median ratios 1.1–1.2 on contended
-    // hours vs 0.95–1.06 between clean hours), so a total that reads high
-    // while median_vs_clean sits near 1.1 is box noise, and a genuine
-    // regression shows as specific queries moving with the median still
-    // near 1 — readable from the artifact alone, no external re-run
-    // needed. The median (not mean) is immune to the handful of real
-    // movers any round adds. Meaningful for FULL-suite runs only: the
-    // reference was measured deep in a warm 222-query session, so a
-    // small BENCH_ONLY subset (cold JIT, first-query listing costs)
-    // reads 1.5-2× against it even on an idle box.
-    val medianVsClean: Option[Double] = {
-      val ratios = results.toSeq.collect {
-        case (name, t) if cleanMap.get(name).exists(_ > 0.05) =>
-          t / cleanMap(name)
-      }.sorted
-      if (ratios.size < 10) None
-      else Some(ratios(ratios.size / 2))
-    }
-    // Locale.ROOT: the f-interpolator honors the JVM default locale, and a
-    // comma decimal separator would corrupt the JSON
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def entry(k: String, v: Double): String = "\"" + k + "\":" + fmt(v)
-    // full per-query detail, own line — for local diagnosis / SCALE work.
-    // The driver captures only the LAST ~2000 chars of output, so this
-    // line may arrive front-truncated there; that is fine, it is not the
-    // official artifact.
-    val fullQs = results.map { case (k, v) => entry(k, v) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"detail","nq":${results.size},"retimed":${retimed.size},"queries":$fullQs}""")
-    // official line LAST, and it must fit the driver's 2000-char tail
-    // capture IN FULL (r4's single 3.5k-char line was front-truncated
-    // there → parsed:null, no official perf number). Per-query entries
-    // are included slowest-first until a hard character budget; the
-    // detail line above always carries the complete map.
-    val tailBudget = 1600
-    val slowestFirst = results.toSeq.sortBy(-_._2)
+    Sweep(times.result(), failed.result())
+  }
+
+  // Locale.ROOT: the f-interpolator honors the JVM default locale, and a
+  // comma decimal separator would corrupt the JSON
+  private def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  private def entry(k: String, v: Double): String = "\"" + k + "\":" + fmt(v)
+
+  /** The `detail` and `total` JSON lines. The total line carries the
+    * slowest queries until `tailBudget` characters, so it survives a
+    * reader that keeps only the last ~2000 characters of output; the
+    * detail line carries every query. */
+  def report(r: Sweep, sfDir: String, tailBudget: Int = 1600): Seq[String] = {
+    val failed = r.failed.map(f => "\"" + f._1 + "\"").mkString("[", ",", "]")
+    val all = r.times.map { case (k, v) => entry(k, v) }.mkString("{", ",", "}")
     val sb = new StringBuilder
     var shown = 0
-    for ((k, v) <- slowestFirst) {
+    for ((k, v) <- r.times.sortBy(-_._2)) {
       val e = entry(k, v)
       if (sb.length + e.length + 1 <= tailBudget) {
         if (sb.nonEmpty) sb.append(',')
         sb.append(e); shown += 1
       }
     }
-    val mvc = medianVsClean.map(fmt).getOrElse("null")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nq":${results.size},"retimed":${retimed.size},"median_vs_clean":$mvc,"shown":$shown,"queries":{${sb.toString}},"sf":"$sfDir"}""")
-    spark.stop()
+    Seq(
+      s"""{"metric":"detail","nq":${r.times.size},"failed":$failed,"queries":$all}""",
+      s"""{"metric":"total","value":${fmt(r.total)},"unit":"sec","nq":${r.times.size},"failed":$failed,"shown":$shown,"queries":{$sb},"sf":"$sfDir"}""")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      sys.error("SPARK_GRAFT_SF_DIR must name the input tables' directory"))
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
+    val selected =
+      try select(SparkEntry.queries, sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"[bench] SPARK_GRAFT_BENCH_ONLY: ${e.getMessage}")
+        sys.exit(2)
+      }
+    val spark = Sessions.local()
+    val result = try sweep(spark, sfDir, selected, reps) finally spark.stop()
+    result.failed.foreach { case (name, msg) =>
+      System.err.println(s"[bench] $name failed: $msg")
+    }
+    report(result, sfDir).foreach(println)
+    if (result.failed.nonEmpty) sys.exit(1)
   }
 }

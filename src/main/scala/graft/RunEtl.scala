@@ -69,17 +69,7 @@ object RunEtl {
     val (schemaPath, mappingPath, dumpsDir, outDir) =
       resolveInputs(positional.toSeq, sys.env)
     val tuning = Settings.sparkTuning(sys.env)
-    val builder = SparkSession.builder()
-      .master(tuning.master)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      // reliable checkpoints (written when a checkpoint dir is set — see
-      // Frames.truncate) are only garbage-collected with this on; the
-      // default (false) accretes one rdd-<id> dir per iteration round
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+    val builder = Sessions.builder(master = Some(tuning.master))
       .appName("graft-etl")
     tuning.executorMemory.foreach(builder.config("spark.executor.memory", _))
     tuning.driverMemory.foreach(builder.config("spark.driver.memory", _))

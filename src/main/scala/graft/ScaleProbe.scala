@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off scale probes for operators whose realistic operating point is
@@ -26,18 +25,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val op = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", cpus))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     def docsShingled = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"),
@@ -249,8 +237,8 @@ object ScaleProbe {
         functions.Similarity.kCenterSelect(emb, "vec_id", "embedding",
           args(2).toInt).count()
       case "kcenter_batched" =>
-        functions.Similarity.kCenterSelectBatched(emb, "vec_id", "embedding",
-          args(2).toInt, args(3).toInt).count()
+        functions.Similarity.kCenterSelect(emb, "vec_id", "embedding",
+          args(2).toInt, batch = args(3).toInt).count()
       case "bpe_trie" =>
         // serving shape: vocabulary aggregated once, trained driver-local
         // at realistic merge count, then ONE encodeWords pass over the

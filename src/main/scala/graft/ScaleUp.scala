@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical-scaling data generator: replicate the sf0.1 corpus `factor`×
@@ -57,15 +57,9 @@ object ScaleUp {
             s"(known: ${KnownTables.toSeq.sorted.mkString(", ")})")
         names
       } else _ => true
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      // events carry INT64-nanos timestamps; read them as longs and write
-      // them back as plain int64 — normalizeTs handles both forms
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session reads INT64-nanos event timestamps as longs, so they are
+    // written back as plain int64 — normalizeTs handles both forms
+    val spark = Sessions.local()
 
     def copies(name: String)(f: (DataFrame, Int) => DataFrame): Unit =
       if (wanted(name)) {

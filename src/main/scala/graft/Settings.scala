@@ -123,9 +123,10 @@ object Settings {
     if (url.startsWith("file://")) url.stripPrefix("file://") else url
 
   /** Spark tuning (settings.py:103-105): master defaults to the engine's
-    * local[N] (reference default is local[1]); executor/driver memory are
-    * only APPLIED when the env sets them — in local mode a reference-
-    * default 2g/512m would shrink the JVM rather than match it. */
+    * local[N], N from [[Sessions.defaultCores]] (reference default is
+    * local[1]); executor/driver memory are only APPLIED when the env sets
+    * them — in local mode a reference-default 2g/512m would shrink the
+    * JVM rather than match it. */
   final case class SparkTuning(master: String,
                                executorMemory: Option[String],
                                driverMemory: Option[String])
@@ -133,7 +134,7 @@ object Settings {
   def sparkTuning(env: Map[String, String]): SparkTuning =
     SparkTuning(
       master = env.get("SPARK_MASTER").filter(_.nonEmpty)
-        .getOrElse(s"local[${env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"),
+        .getOrElse(s"local[${Sessions.defaultCores(env)}]"),
       executorMemory = env.get("SPARK_EXECUTOR_MEMORY").filter(_.nonEmpty),
       driverMemory = env.get("SPARK_DRIVER_MEMORY").filter(_.nonEmpty))
 }

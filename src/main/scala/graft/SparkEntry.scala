@@ -44,6 +44,10 @@ object SparkEntry {
     * out per guide §6 (128 MB–1 GB files / row groups) plans ≥ cores
     * splits and this is the identity — no shuffle is ever added at scale.
     *
+    * Re-measured at local[4] on a 4-vCPU VM, sf0.1, over all 46
+    * consumers (plans/r16-fan-ab): 81.5 s fanned vs 103.7 s plain in the
+    * sum of per-query minimums, 43 of 46 slower plain.
+    *
     * Measured A/B at sf0.1 (isolated fresh-JVM min-of-3, this box) that
     * sets the policy boundaries:
     *   - heavy documents/events consumers WIN big: events_rfm 6.9→4.4,
@@ -69,22 +73,19 @@ object SparkEntry {
     * probe batch). */
   private val fanOutKey =
     Map("documents" -> "doc_id", "events" -> "event_id")
-  /** Fan-out A/B switch (off|auto) and the data-relative partition
-    * quantum: the fan target is `inputBytes / quantum`, capped at the
-    * session's cores — so the task count scales with the DATA, never
-    * with the box alone, and a tiny probe input (sf0.001/sf0.01) stops
-    * producing `cores` near-empty partitions whose scheduling overhead
-    * exceeds their work. 16 KiB of compressed text per task ≈ 250 docs
-    * ≈ 100s of ms of shingle/token kernel work — enough to amortize a
-    * task launch many times over; at a §6-compliant production layout
-    * (≥128 MB files/row groups) the scan already plans ≥ cores splits
-    * and the whole guard is the identity. */
-  private val fanOutMode = sys.env.getOrElse("SPARK_GRAFT_FANOUT", "auto")
-  private val fanQuantumBytes =
-    sys.env.getOrElse("SPARK_GRAFT_FAN_QUANTUM_BYTES", "16384").toLong
+  /** The data-relative partition quantum: the fan target is
+    * `inputBytes / quantum`, capped at the session's cores — so the task
+    * count scales with the DATA, never with the box alone, and a tiny
+    * probe input (sf0.001/sf0.01) stops producing `cores` near-empty
+    * partitions whose scheduling overhead exceeds their work. 16 KiB of
+    * compressed text per task ≈ 250 docs ≈ 100s of ms of shingle/token
+    * kernel work — enough to amortize a task launch many times over; at
+    * a §6-compliant production layout (≥128 MB files/row groups) the
+    * scan already plans ≥ cores splits and the whole guard is the
+    * identity. */
+  private val FanQuantumBytes = 16384L
   private def tFan(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = t(s, dir, name)
-    if (fanOutMode == "off") return df
     val cores = s.sparkContext.defaultParallelism
     fanOutKey.get(name) match {
       // split probe caveat: getNumPartitions counts planned byte-range
@@ -95,7 +96,7 @@ object SparkEntry {
         // logical stats = file bytes for a bare parquet scan (cheap, no
         // job); clamp target to [1, cores] by data size
         val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        val target = (bytes / fanQuantumBytes)
+        val target = (bytes / FanQuantumBytes)
           .min(BigInt(cores)).max(BigInt(1)).toInt
         if (target > df.rdd.getNumPartitions * 2)
           df.repartition(target, col(key))
@@ -1936,7 +1937,7 @@ object SparkEntry {
     // center set, one least()-fold update scan per round — ⌈(k−1)/B⌉
     // jobs instead of k−1 at coreset-realistic k
     "embedding_kcenter_batched" -> ((s, dir) =>
-      Similarity.kCenterSelectBatched(
+      Similarity.kCenterSelect(
         t(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", k = 5, batch = 2)),
 

@@ -1,40 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // data-scaled shuffle granularity knob for cluster runs; default =
-      // cpus on this box (see the measured A/B in Bench.makeSession)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY=a,b,c restricts the dump to named queries (an
+    // iteration aid; unset, the dump is complete)
+    val selected =
+      try Bench.select(SparkEntry.queries, sys.env.get("SPARK_GRAFT_ONLY"))
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"[verify] SPARK_GRAFT_ONLY: ${e.getMessage}")
+        sys.exit(2)
+      }
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=a,b,c restricts the dump to named queries (builder
-    // iteration aid; the driver never sets it so its runs stay complete)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = selected.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Exception =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -53,5 +41,12 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // every query that ran is dumped; the run then fails naming the
+    // queries that threw
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -394,80 +394,24 @@ object Similarity {
     * therefore the argmax ORDER (dist DESC, id ASC) and the reported
     * µ-floors — cannot straddle. Zero-norm vectors are the caller's
     * problem (cosine undefined), as in every cosine op here.
-    * Output: (step, id, dist_mu) — dist_mu NULL on the seed row. */
-  def kCenterSelect(corpus: DataFrame, idCol: String, vecCol: String,
-                    k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
-    val spark = corpus.sparkSession
-    val base = corpus.select(col(idCol), col(vecCol))
-      .withColumn("_n", norm(col(vecCol)))
-    def distTo(vec: Seq[Float], n: Double): Column =
-      lit(1.0) - dot(col(vecCol), typedLit(vec)) / (col("_n") * lit(n))
-    // type-faithful empty frame (the id column keeps the caller's type)
-    def emptyResult: DataFrame = corpus.select(
-      lit(0).cast("int").as("step"), col(idCol),
-      lit(0L).cast("long").as("dist_mu")).limit(0)
-    val seedRows = base
-      .orderBy(Sampling.stableBucket(col(idCol), 1 << 30), col(idCol))
-      .limit(1).collect()
-    if (seedRows.isEmpty) return emptyResult
-    val seed = seedRows(0)
-    val picks = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, Any, Option[Long])]
-    picks += ((1, seed.get(0), None))
-    var mind = Frames.truncate(base.withColumn("mind",
-      distTo(seed.getSeq[Float](1), seed.getDouble(2))))
-    var step = 2
-    var done = false
-    while (step <= k && !done) {
-      val sel = picks.map(_._2).toSeq
-      val top = mind.filter(!col(idCol).isin(sel: _*))
-        .orderBy(col("mind").desc, col(idCol))
-        .limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val r = top(0)
-        picks += ((step, r.get(0),
-          Some(math.floor(r.getDouble(3) * 1e6).toLong)))
-        // the running min is only needed by a NEXT round — the final
-        // pick skips the (corpus-sized) update scan entirely
-        if (step < k) {
-          val prev = mind
-          mind = Frames.truncate(mind.withColumn("mind",
-            least(col("mind"), distTo(r.getSeq[Float](1), r.getDouble(2)))))
-          Frames.release(prev)
-        }
-      }
-      step += 1
-    }
-    Frames.release(mind)
-    picks.map { case (st, id, d) =>
-      spark.range(1).select(lit(st).cast("int").as("step"),
-        lit(id).as(idCol),
-        d.map(v => lit(v)).getOrElse(lit(null)).cast("long").as("dist_mu"))
-    }.reduce(_ unionByName _)
-  }
-
-  /** BATCHED k-center selection — [[kCenterSelect]] picking `batch`
-    * points per round instead of one: the round takes the `batch`
-    * LARGEST current min-distances simultaneously (dist DESC, id ASC —
-    * so within a batch every distance is w.r.t. the centers selected in
-    * EARLIER rounds; the batch's own members don't see each other), then
-    * runs ONE update scan folding `least` over all `batch` new literal
-    * vectors. k sequential Spark jobs become ⌈(k−1)/batch⌉ — the answer
-    * to "Gonzalez is inherently sequential" at realistic coreset k
-    * (batch farthest-point traversal, the standard batch active-learning
-    * relaxation of Sener & Savarese ICLR'18; the 2-approximation loosens
-    * to 2 + ε on adversarial batches but batch ≪ k keeps the same
-    * geometry in practice — the spec pins batch=1 ≡ exact Gonzalez
-    * frame-for-frame and planted-cluster coverage at batch>1).
     *
-    * Output matches [[kCenterSelect]]: (step, id, dist_mu), dist_mu NULL
-    * on the seed, steps within a round assigned in (dist DESC, id ASC)
-    * order. Same cross-engine-exact distance tree, same deterministic
-    * hash seed. */
-  def kCenterSelectBatched(corpus: DataFrame, idCol: String, vecCol: String,
-                           k: Int, batch: Int): DataFrame = {
+    * `batch` > 1 picks that many points per round instead of one: the
+    * round takes the `batch` LARGEST current min-distances at once (dist
+    * DESC, id ASC — so within a batch every distance is w.r.t. the
+    * centers selected in EARLIER rounds; the batch's own members don't
+    * see each other), then runs ONE update scan folding `least` over all
+    * `batch` new literal vectors. k sequential Spark jobs become
+    * ⌈(k−1)/batch⌉ — the answer to "Gonzalez is inherently sequential"
+    * at realistic coreset k (batch farthest-point traversal, the standard
+    * batch active-learning relaxation of Sener & Savarese ICLR'18; the
+    * 2-approximation loosens to 2 + ε on adversarial batches but
+    * batch ≪ k keeps the same geometry in practice). `batch` = 1 is
+    * exact Gonzalez.
+    *
+    * Output: (step, id, dist_mu) — dist_mu NULL on the seed row, steps
+    * within a round assigned in (dist DESC, id ASC) order. */
+  def kCenterSelect(corpus: DataFrame, idCol: String, vecCol: String,
+                    k: Int, batch: Int = 1): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(batch >= 1, s"batch must be >= 1: $batch")
     val spark = corpus.sparkSession
@@ -475,6 +419,7 @@ object Similarity {
       .withColumn("_n", norm(col(vecCol)))
     def distTo(vec: Seq[Float], n: Double): Column =
       lit(1.0) - dot(col(vecCol), typedLit(vec)) / (col("_n") * lit(n))
+    // type-faithful empty frame (the id column keeps the caller's type)
     def emptyResult: DataFrame = corpus.select(
       lit(0).cast("int").as("step"), col(idCol),
       lit(0L).cast("long").as("dist_mu")).limit(0)
@@ -503,6 +448,8 @@ object Similarity {
             Some(math.floor(r.getDouble(3) * 1e6).toLong)))
           step += 1
         }
+        // the running min is only needed by a NEXT round — the final
+        // round skips the (corpus-sized) update scan entirely
         if (step <= k) {
           val prev = mind
           val upd = top.foldLeft(col("mind")) { (acc, r) =>

@@ -48,14 +48,6 @@ object AggExpr {
     case other  => throw new IllegalArgumentException(s"agg merge fn $other")
   }
 
-  /** `fn` applied where the input column is itself an array (set-over-array
-    * flattens then dedups — reference parser.py:216-240 typing rules). */
-  def aggOverArray(fn: String, c: Column): Column = fn match {
-    case "set"  => array_sort(array_distinct(flatten(collect_list(c))))
-    case "list" => array_sort(flatten(collect_list(c)))
-    case other  => agg(other, c)
-  }
-
   /** Zero-value semantics for empty groups in final documents
     * (reference: base/lambdas.py:260-281): set/list → [], count/sum → 0,
     * min/max/first → null. Applied after left joins reintroduce

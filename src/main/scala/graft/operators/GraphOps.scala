@@ -30,51 +30,6 @@ object GraphOps {
     child.join(e, Seq(childKey), "inner")
   }
 
-  /** J1-equivalent with explicit keys + duplicate elimination. The
-    * reference always `drop_duplicates()` after joins because multi-path
-    * graphs double-count (SURVEY.md §7.4); callers that know the join is
-    * key-unique should skip this. */
-  def joinDedup(a: DataFrame, b: DataFrame, on: Seq[String],
-                how: String = "inner"): DataFrame =
-    a.join(b, on, how).dropDuplicates()
-
-  /** J3 — parent-chain walk: attach props from a chain of ancestors to the
-    * root. Each element of `chain` is (edge(childId→parentId), parentDF,
-    * childKey, parentKey, props-at-this-ancestor). Returns one row per root
-    * id with `set` (sorted, deduped) or `first` semantics per prop —
-    * reference: aggregation/new_translator.py:432-472 (`walk_through_graph`).
-    *
-    * Expressed as a single multi-join plan + one aggregation, not the
-    * reference's per-hop materialization. */
-  def parentChain(
-      root: DataFrame, rootKey: String,
-      chain: Seq[(DataFrame, DataFrame, String, String)],
-      props: Seq[(PropDef, String)],   // (prop, fn = "set" | "first")
-      broadcastParents: Boolean = true): DataFrame = {
-    val joined = chain.foldLeft(root) { case (acc, (edge, parent, ck, pk)) =>
-      val p = if (broadcastParents) broadcast(parent) else parent
-      acc.join(edge, Seq(ck), "left_outer").join(p, Seq(pk), "left_outer")
-    }
-    val aggs = props.map { case (p, fn) =>
-      val c = Project.propCol(p)
-      (if (fn == "first") AggExpr.agg("first", c) else AggExpr.agg("set", c))
-        .alias(p.name)
-    }
-    joined.groupBy(col(rootKey)).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** A3 — direct-child flatten: attach one-hop child props 1:1 to root
-    * (left join keeps childless roots). Reference: aggregation/
-    * new_translator.py:234-289. */
-  def flattenChild(root: DataFrame, rootKey: String, edge: DataFrame,
-                   child: DataFrame, childKey: String,
-                   props: Seq[PropDef]): DataFrame = {
-    val childSel = child.select(col(childKey) +: props.map(Project.propCol): _*)
-    root.join(edge, Seq(rootKey), "left_outer")
-        .join(childSel, Seq(childKey), "left_outer")
-        .drop(childKey)
-  }
-
   /** A4 — top-1-per-group (`sorted_by`): many-to-one flatten picks one child
     * row per root by max/min of a sort column. Implemented with `max_by` /
     * `min_by` over a struct of all wanted props — a single hash aggregate,
@@ -166,18 +121,6 @@ object GraphOps {
     * new_translator.py:72-76). */
   def unionLeaves(leaves: Seq[DataFrame]): DataFrame =
     leaves.reduce(_.unionByName(_, allowMissingColumns = true)).distinct()
-
-  /** A6 — injection final re-agg: injected props re-aggregated per doc key,
-    * deduping across multi-parent paths; array-of-array flattened
-    * (reference: injection/new_translator.py:215-259). */
-  def injectionReAgg(docs: DataFrame, key: String,
-                     aggProps: Seq[(String, String)],  // (col, fn in {set,list})
-                     passThrough: Seq[String]): DataFrame = {
-    val aggs = aggProps.map { case (c, fn) =>
-      AggExpr.agg(fn, col(c)).alias(c)
-    } ++ passThrough.map(c => first(col(c)).alias(c))
-    docs.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
-  }
 
   /** Bloom-filter join pruning: drop `df` rows whose `key` cannot match any
     * `buildKey` BEFORE the exact join, so non-matching rows never enter the

@@ -39,13 +39,6 @@ object Project {
     coalesce(element_at(map(entries: _*), c), c)
   }
 
-  /** P4 — null columns with the right type for props absent from a branch
-    * (reference: injection/new_translator.py:60-66). */
-  def nullFill(df: DataFrame, missing: Map[String, DataType]): DataFrame =
-    missing.foldLeft(df) { case (d, (name, dt)) =>
-      d.withColumn(name, lit(null).cast(dt))
-    }
-
   /** P6 — project_id synthesis: `concat_ws("-", program, code)` when absent
     * (reference: aggregation/new_translator.py:372-384). */
   def projectId(program: Column, code: Column): Column =
@@ -81,9 +74,4 @@ object Project {
       coalesce(element_at(map(entries: _*), code), dflt)
     }
   }
-
-  /** P8 — source_node tag for collector indices
-    * (reference: injection/new_translator.py:46). */
-  def sourceNode(df: DataFrame, label: String): DataFrame =
-    df.withColumn("source_node", lit(label))
 }

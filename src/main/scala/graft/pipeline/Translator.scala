@@ -506,6 +506,24 @@ final class Translator(schema: GraphSchema, source: GraphSource,
 
 object Translator {
 
+  /** The frames the last [[runAll]] persisted. They stay cached while
+    * that run's documents (lazy, reading them) are published, and are
+    * released when the next `runAll` starts: a table re-read from the
+    * same path plan-matches a persisted frame, so a second run over
+    * rewritten dumps would otherwise be served the first run's rows. */
+  private val persisted = scala.collection.mutable.ArrayBuffer[DataFrame]()
+
+  private def persist(df: DataFrame): DataFrame = persisted.synchronized {
+    persisted += df
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  private def releasePersisted(): Unit = persisted.synchronized {
+    persisted.filterNot(_.sparkSession.sparkContext.isStopped)
+      .foreach(_.unpersist())
+    persisted.clear()
+  }
+
   /** Phase 1+2 driver: run all indices, then resolve `joining_props` in
     * topological order (producer indices first — reference
     * interpreter.py:34-62). Persist only frames consumed by another index.
@@ -516,15 +534,14 @@ object Translator {
              mapping: EtlMapping,
              rootBloomPrune: Option[Long] = None): Map[String, DataFrame] = {
     MappingValidator.validateOrThrow(schema, mapping)
+    releasePersisted()
     val t = new Translator(schema, sharedRootSource(source, mapping),
       rootBloomPrune)
     val base: Map[String, DataFrame] =
       mapping.indices.map(m => m.name -> t.translate(m)).toMap
     val consumed = mapping.indices.flatMap(_.joiningProps.map(_.otherIndex)).toSet
     val cached = base.map { case (n, df) =>
-      n -> (if (consumed.contains(n))
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df)
+      n -> (if (consumed.contains(n)) persist(df) else df)
     }
     // topo order: indices with no joining deps first; cycles rejected
     val order = topoOrder(mapping)
@@ -560,8 +577,7 @@ object Translator {
         label =>
           if (shared.contains(label))
             cache.synchronized {
-              cache.getOrElseUpdate(label, source.nodeDf(label)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+              cache.getOrElseUpdate(label, persist(source.nodeDf(label)))
             }
           else source.nodeDf(label),
         source.edgeDf,

@@ -75,14 +75,4 @@ object Types {
       }
     case _ => itemType
   }
-
-  /** JSON-schema scalar name → Spark type (reference: tube/utils/
-    * spark.py:88-117). */
-  def fromJsonSchemaName(name: String): DataType = name match {
-    case "number"  => FloatType
-    case "integer" => LongType
-    case "boolean" => BooleanType
-    case "array"   => ArrayType(StringType)
-    case _         => StringType
-  }
 }

@@ -109,7 +109,7 @@ class Round13PlanSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val plans = capturePlans {
       graft.functions.Similarity
-        .kCenterSelectBatched(emb, "vec_id", "embedding", k = 5, batch = 2)
+        .kCenterSelect(emb, "vec_id", "embedding", k = 5, batch = 2)
         .collect()
     }
     val rounds = plans.filterNot(_.contains("Range (0, 1"))

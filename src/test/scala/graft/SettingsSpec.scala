@@ -75,6 +75,21 @@ class SettingsSpec extends AnyFunSuite {
     assert(t1.driverMemory === Some("2g"))
   }
 
+  test("Sessions.defaultCores: SPARK_GRAFT_CPUS, else every core; a bad " +
+      "value is an error naming it") {
+    assert(Sessions.defaultCores(Map("SPARK_GRAFT_CPUS" -> "3")) === 3)
+    assert(Sessions.defaultCores(Map.empty) ===
+      Runtime.getRuntime.availableProcessors)
+    assert(Settings.sparkTuning(Map.empty).master ===
+      s"local[${Runtime.getRuntime.availableProcessors}]")
+    Seq("four", "0").foreach { v =>
+      val e = intercept[IllegalArgumentException](
+        Sessions.defaultCores(Map("SPARK_GRAFT_CPUS" -> v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") &&
+        e.getMessage.contains(s"'$v'"))
+    }
+  }
+
   test("RunEtl.resolveInputs: positional wins; 2-arg form pulls schema from DICTIONARY_URL and mapping from the search path") {
     assert(RunEtl.resolveInputs(Seq("s", "m", "d", "o"), Map.empty) ===
       (("s", "m", "d", "o")))

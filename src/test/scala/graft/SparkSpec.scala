@@ -5,17 +5,11 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
-  * session startup dominates test wall-clock otherwise). */
+  * session startup dominates test wall-clock otherwise). Four cores
+  * whatever the box: the plan-shape specs assume four partitions. */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Sessions.builder(cores = 4).appName("graft-test").getOrCreate()
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

@@ -46,12 +46,15 @@ class KCenterSpec extends SparkSpec {
     picks
   }
 
+  /** The engine's seed: the stable-bucket-lowest id. */
+  private def seedOf(df: org.apache.spark.sql.DataFrame): Long = df
+    .orderBy(Sampling.stableBucket(col("vec_id"), 1 << 30), col("vec_id"))
+    .limit(1).as[(Long, Array[Float])].collect()(0)._1
+
   test("matches the independent Gonzalez greedy (order, picks, floors)") {
     val vs = fixture(30)
     val df = vs.toDF("vec_id", "embedding")
-    val seed = df
-      .orderBy(Sampling.stableBucket(col("vec_id"), 1 << 30), col("vec_id"))
-      .limit(1).as[(Long, Array[Float])].collect()(0)._1
+    val seed = seedOf(df)
     val got = Similarity.kCenterSelect(df, "vec_id", "embedding", k = 5)
       .as[(Int, Long, Option[Long])].collect().toSeq.sortBy(_._1)
     assert(got === refGreedy(vs, seed, 5))
@@ -62,12 +65,11 @@ class KCenterSpec extends SparkSpec {
   test("BATCHED with batch=1 is the exact Gonzalez greedy frame-for-frame") {
     val vs = fixture(30)
     val df = vs.toDF("vec_id", "embedding")
-    val exact = Similarity.kCenterSelect(df, "vec_id", "embedding", k = 6)
-      .as[(Int, Long, Option[Long])].collect().toSeq.sortBy(_._1)
+    val seed = seedOf(df)
     val batched = Similarity
-      .kCenterSelectBatched(df, "vec_id", "embedding", k = 6, batch = 1)
+      .kCenterSelect(df, "vec_id", "embedding", k = 6, batch = 1)
       .as[(Int, Long, Option[Long])].collect().toSeq.sortBy(_._1)
-    assert(batched === exact)
+    assert(batched === refGreedy(vs, seed, 6))
   }
 
   test("BATCHED covers planted clusters and rounds are non-increasing " +
@@ -81,7 +83,7 @@ class KCenterSpec extends SparkSpec {
     val vs = (0 until 5).map(i => (100L + i, cl(0, i))) ++
       (0 until 5).map(i => (200L + i, cl(3, i))) ++
       (0 until 5).map(i => (300L + i, cl(6, i)))
-    val got = Similarity.kCenterSelectBatched(
+    val got = Similarity.kCenterSelect(
         vs.toDF("vec_id", "embedding"), "vec_id", "embedding",
         k = 4, batch = 2)
       .as[(Int, Long, Option[Long])].collect().toSeq.sortBy(_._1)

@@ -278,6 +278,55 @@ class TranslatorSpec extends SparkSpec {
     assert(docs("subj_b").collect().length === 3)
   }
 
+  test("a second runAll in one session over rewritten tables publishes " +
+      "the new rows, not the first run's cached frames") {
+    // file-backed tables: a re-read of the same path plan-matches the
+    // first run's persisted frames, which in-memory frames never would.
+    // The tables are replaced outside Spark, as a dump job would (a Spark
+    // write to the path would itself refresh the cache entries over it).
+    import java.nio.file.{Files, Path}
+    val dir = Files.createTempDirectory("translator-rerun")
+    def path(name: String) = dir.resolve(name).toString
+    def rmTree(p: Path): Unit = if (Files.exists(p))
+      Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(f => Files.delete(f))
+    def writeTables(alphaName: String): Unit = {
+      val staging = Files.createTempDirectory("translator-rerun-staging")
+      val tables = nodes.updated("project",
+        Seq(("projA", alphaName), ("projB", "Beta"))
+          .toDF("_project_id", "proj_name")) ++
+        edges.map { case ((c, p), df) => s"${c}_$p" -> df }
+      tables.foreach { case (name, df) =>
+        df.write.parquet(staging.resolve(name).toString)
+        rmTree(dir.resolve(name))
+        Files.move(staging.resolve(name), dir.resolve(name))
+      }
+    }
+    val fileSource = new GraphSource(l => spark.read.parquet(path(l)),
+      (c, p) => spark.read.parquet(path(s"${c}_$p")))
+    // `project` is a joining_props producer (persisted) and a root shared
+    // by two indices (its node frame is persisted)
+    val mapping = EtlMapping(Seq(
+      subjectMapping.copy(joiningProps = Seq(JoiningDef("project",
+        Seq("project_name"),
+        Seq(PropDef("proj_names", "proj_name", fn = Some("set")))))),
+      IndexMapping(name = "project", docType = "project", root = "project",
+        props = Seq(PropDef("project_name", "proj_name"),
+          PropDef("proj_name", "proj_name"))),
+      IndexMapping(name = "project_ids", docType = "project",
+        root = "project", props = Seq(PropDef("proj_name", "proj_name")))))
+    def run(): (Seq[String], Set[String]) = {
+      val out = Translator.runAll(schema, fileSource, mapping)
+      val s1 = out("subject").filter($"_subject_id" === "s1").collect()(0)
+      (s1.getSeq[String](s1.fieldIndex("proj_names")),
+        out("project_ids").collect().map(_.getAs[String]("proj_name")).toSet)
+    }
+    writeTables("Alpha")
+    assert(run() === ((Seq("Alpha"), Set("Alpha", "Beta"))))
+    writeTables("Alpha2")
+    assert(run() === ((Seq("Alpha2"), Set("Alpha2", "Beta"))))
+  }
+
   test("set-relation parent chain: edge-backed root with NO edge rows gets " +
       "an empty array, same as FK-backed sources and the SQL oracle") {
     // s3's project edge removed: an edge-backed walk never sees s3

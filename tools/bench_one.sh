@@ -1,23 +1,21 @@
 #!/bin/bash
-# Isolated fresh-JVM timing of a query subset.
-# Usage: SF_DIR=... REPS=3 tools/bench_one.sh q1[,q2...]
-# Prints the detail JSON line to stdout; fails loudly (non-zero) when the
-# JVM dies before printing it.
+# Isolated fresh-JVM timing of a query subset, run against the compiled
+# classes (build first with `sbt compile`).
+# Usage: SF_DIR=<tables dir> [REPS=3] [CPUS=n] tools/bench_one.sh q1[,q2...]
+# CPUS defaults to the session factory's rule (every core the JVM sees).
+# Prints the detail JSON line to stdout; fails loudly (non-zero) when a
+# query throws, a name is unknown, or the JVM dies before printing it.
 set -u -o pipefail
-REPO=/root/repo
-SF_DIR=${SF_DIR:-/root/testdata/sf0.1}
-REPS=${REPS:-3}
-CPUS=${CPUS:-32}
-JOPTS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/jdk.internal.ref=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
-out=$(SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS="$CPUS" \
-  SPARK_GRAFT_BENCH_ONLY="$1" SPARK_GRAFT_BENCH_REPS="$REPS" \
-  SPARK_GRAFT_BENCH_BUDGET_SECS=${BUDGET:-3000} \
-  SPARK_GRAFT_BENCH_CLEAN="$REPO/BENCH_CLEAN.json" \
-  java -Xmx${XMX:-100g} $JOPTS \
-    -cp "$REPO/target/scala-2.13/classes:$(cat "$REPO/target/cp.txt")" \
-    graft.Bench 2>/dev/null | grep '"metric":"detail"' | tail -1)
-if [ -z "$out" ]; then
-  echo "bench_one: no detail line for '$1' (JVM died?)" >&2
+HERE="$(cd "$(dirname "$0")" && pwd)"
+: "${SF_DIR:?SF_DIR must name the input tables directory}"
+out=$(env SPARK_GRAFT_SF_DIR="$SF_DIR" ${CPUS:+SPARK_GRAFT_CPUS="$CPUS"} \
+  SPARK_GRAFT_BENCH_ONLY="$1" SPARK_GRAFT_BENCH_REPS="${REPS:-3}" \
+  "$HERE/run_main.sh" graft.Bench)
+rc=$?
+line=$(echo "$out" | grep '"metric":"detail"' | tail -1)
+if [ -z "$line" ]; then
+  echo "bench_one: no detail line for '$1' (exit $rc)" >&2
   exit 1
 fi
-echo "$out"
+echo "$line"
+exit $rc

@@ -31,7 +31,11 @@ def normalize(rows, cols):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     return sorted(tuple(r[i] for i in order) for r in rows)
 
-fails = []
+# a query with an oracle but no output directory threw (or never ran)
+fails = [name for name in sorted(oracles)
+         if not os.path.isdir(os.path.join(outdir, name))]
+for name in fails:
+    print(f"{name:22s} FAIL no output directory")
 for name in sorted(os.listdir(outdir)):
     p = os.path.join(outdir, name)
     if not os.path.isdir(p): continue
