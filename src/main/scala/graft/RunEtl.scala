@@ -139,8 +139,10 @@ object RunEtl {
     * run_etl.py:91-103 `check_to_run_etl`) skips an index whose sink
     * timestamp already covers the source's latest change; `force`
     * overrides. With no source-change information the gate always runs
-    * (safe default). Row counts come from the published parquet footers —
-    * the translation frame is never executed twice.
+    * (safe default). Row counts are summed from the footers of the
+    * published parquet files (`EsPublisher.publishCounted`): no Spark job
+    * runs for them, and the translation frame is never executed twice. Each dump table's frame is built once per run and shared by
+    * every index that reads it (the `Translator` memo).
     *
     * Gate granularity: with `perTableTxMillis` (a table → latest-change
     * map, e.g. from `MappingDeps.dumpTableTimes` or a CDC feed) each index

@@ -2346,16 +2346,16 @@ object SparkEntry {
       // exploded endpoints to |V| rows BEFORE the community join (the
       // old shape shipped every endpoint row through the join), and one
       // |V|-sized pass then yields n_nodes AND d_sum in a single
-      // aggregation — the separate nNodes exchange drops out. Every comm
-      // node has >= 1 edge (comm labels exactly the pair endpoints), so
-      // the left join's coalesce(0) branch is unreachable and the old
-      // inner-join semantics are preserved.
+      // aggregation — the separate nNodes exchange drops out. The join is
+      // inner, like the oracle's `nn JOIN deg`: a community with no edge
+      // has no cell. n_nodes counts the nodes with an edge, which is every
+      // comm node (comm labels exactly the pair endpoints, and pairs
+      // never pair a document with itself).
       val nodeDeg = und.select(explode(array(col("u"), col("v"))).as("id"))
         .groupBy(col("id")).agg(count(lit(1)).as("_deg"))
-      val cells = comm.join(nodeDeg, Seq("id"), "left")
+      val cells = comm.join(nodeDeg, Seq("id"))
         .groupBy(col("community"))
-        .agg(count(lit(1)).as("n_nodes"),
-          sum(coalesce(col("_deg"), lit(0L))).as("d_sum"))
+        .agg(count(lit(1)).as("n_nodes"), sum(col("_deg")).as("d_sum"))
         .join(eIn, Seq("community"), "left")
         .crossJoin(broadcast(mm))
         .select(col("community"), col("n_nodes"),

@@ -962,6 +962,15 @@ object Similarity {
       .groupBy(col("node")).agg(collect_set(col("nbr")).as("_cs"))
       .select(col("node"), explode(col("_cs")).as("nbr"))
 
+    // Cost shape: each bucket is ONE window partition, so one task sorts
+    // (and buffers, spilling past the window spill threshold) all of a
+    // bucket's rows. Nothing caps a bucket: `bits` sign bits give at most
+    // 2^bits buckets per table, so the step has at most 2^bits-way
+    // parallelism and a bucket holds ~n / 2^bits rows on spread-out
+    // vectors — but up to all n on clustered or duplicated vectors. Only
+    // `bits` and the data bound it. Salting the bucket would cut the band
+    // at every salt boundary and change the links, which the AnnGraphSpec
+    // bit-determinism pins and the ann_graph_* oracles hold fixed.
     def windowLinks(bucketCol: String): DataFrame = {
       val wBucket = Window.partitionBy(col(bucketCol))
         .orderBy(Dedup.Md5Hasher(col("_nid").cast("string")), col("_nid"))
@@ -1182,7 +1191,9 @@ object Similarity {
       .groupBy(col("node")).agg(collect_set(col("nbr")).as("_cs"))
       .select(col("node"), explode(col("_cs")).as("nbr"))
 
-    // rebuild-identical init links, kept only where a new node is touched
+    // rebuild-identical init links, kept only where a new node is touched;
+    // the same one-task-per-bucket sort, bounded only by `bits` and the
+    // data (see nnDescentGraph's windowLinks)
     def windowLinks(bucketCol: String): DataFrame = {
       val wBucket = Window.partitionBy(col(bucketCol))
         .orderBy(Dedup.Md5Hasher(col("_nid").cast("string")), col("_nid"))

@@ -10,7 +10,9 @@ import graft.schema._
   * Scope: graph-structural checks (labels and links). Prop-level checks are
   * intentionally out: node tables may carry more columns than the schema
   * declares (the parquet-backed sources do), so prop existence is only
-  * knowable at bind time.
+  * knowable at bind time. The one type check is on `joining_props` keys
+  * that are arrays by construction (a set, a nested block, or a
+  * dictionary array type).
   */
 object MappingValidator {
 
@@ -35,10 +37,6 @@ object MappingValidator {
   private def hasLink(schema: GraphSchema, child: String, parent: String): Boolean =
     schema.links.exists(l => l.child == child && l.parent == parent)
 
-  /** Every output column NAME an index's document set declares — fully
-    * static (the Translator selects exactly the declared props), so both
-    * collision checks and joining_props key checks can run before any
-    * Spark job. */
   /** The Gen3 auto-injection pairs a collector gets (mirrors
     * Translator.translateCollector's autoInj condition exactly). */
   private def gen3AutoInj(schema: GraphSchema): Seq[(String, String)] =
@@ -49,8 +47,9 @@ object MappingValidator {
         (l, n)
     }
 
-  private def declaredOutNames(schema: GraphSchema, m: IndexMapping): Seq[String] = {
-    val injNames = m.injection.toSeq.flatMap { inj =>
+  /** A collector's injected output names, auto-injections included. */
+  private def injectedNames(schema: GraphSchema, m: IndexMapping): Seq[String] =
+    m.injection.toSeq.flatMap { inj =>
       val declared = inj.injectingProps.values.flatten.map(_.name).toSeq
       // the Translator suppresses an auto-injection only when the SAME
       // ancestor label already declares that name — a same-named prop
@@ -62,12 +61,43 @@ object MappingValidator {
       }
       declared ++ auto
     }
-    m.props.map(_.name) ++ injNames ++
+
+  /** Every output column NAME an index's document set declares — fully
+    * static (the Translator selects exactly the declared props), so both
+    * collision checks and joining_props key checks can run before any
+    * Spark job. */
+  private def declaredOutNames(schema: GraphSchema, m: IndexMapping): Seq[String] =
+    m.props.map(_.name) ++ injectedNames(schema, m) ++
       m.parentProps.flatMap(_.steps.flatMap(_.props.map(_.name))) ++
       m.flattenProps.flatMap(_.props.map(_.name)) ++
       m.aggregatedProps.map(_.name) ++
       m.nestedProps.map(_.name) ++
       m.joiningProps.flatMap(_.props.map(_.name))
+
+  /** The output columns statically known to be ARRAYS: 1-n parent chain
+    * sets, set/list aggregations, nested documents, collector injections,
+    * aggregated joining props, and props the dictionary declares as
+    * arrays. `GraphOps.indexJoin` explodes an array key on the producer
+    * side only, so a consumer's array key cannot join. */
+  private def arrayOutNames(schema: GraphSchema, m: IndexMapping): Set[String] = {
+    val setFns = Set("set", "list")
+    def declaredArray(label: String, p: PropDef): Boolean =
+      schema.nodes.find(_.label == label).flatMap(_.props.get(p.src))
+        .exists(_.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+    val propLabels =
+      if (m.kind == "collector")
+        m.injection.toSeq.flatMap(inj =>
+          schema.nodes.filter(_.category == inj.category).map(_.label))
+      else Seq(m.root)
+    val chains = m.parentProps.flatMap(c => c.steps.flatMap(s =>
+      s.props.filter(p => c.relation != "1-1" || declaredArray(s.label, p))))
+    val joined = m.joiningProps.filter(_.props.exists(_.fn.isDefined))
+      .flatMap(_.props.filter(p => setFns(p.fn.getOrElse("set"))))
+    (m.props.filter(p => propLabels.exists(declaredArray(_, p))) ++ chains ++
+      m.flattenProps.flatMap(f => f.props.filter(declaredArray(f.path, _))) ++
+      joined).map(_.name).toSet ++
+      m.aggregatedProps.filter(a => setFns(a.fn)).map(_.name) ++
+      m.nestedProps.map(_.name) ++ injectedNames(schema, m)
   }
 
   /** The full static output-column set: declared names + the doc key +
@@ -149,7 +179,10 @@ object MappingValidator {
               "index's output") ++
             j.joinOn.filterNot(outputColumns(schema, o).contains).map(k =>
               s"$at: joining_props: join_on column '$k' is not in index " +
-                s"'${o.name}''s output")
+                s"'${o.name}''s output") ++
+            j.joinOn.filter(arrayOutNames(schema, m).contains).map(k =>
+              s"$at: joining_props: join_on column '$k' is an array in " +
+                "this index's output; join on a scalar key")
       }
     }
     // every prop family writes into one flat document namespace — a name

@@ -5,6 +5,18 @@ import org.apache.spark.sql.functions._
 import graft.schema._
 import graft.operators._
 
+/** Where a [[Translator]] reads the graph: one frame per node label and
+  * one per edge (child, parent). */
+final class GraphSource(
+    val nodeDf: String => DataFrame,   // label → node table (has _{label}_id)
+    val edgeDf: (String, String) => DataFrame, // (child,parent) → (childId,parentId)
+    /** labels whose node table ALREADY carries the parent's `_{parent}_id`
+      * column (a foreign key, e.g. relational sources where the edge table is
+      * a projection of the child table). The Translator rides these to skip
+      * the child ⋈ edge self-join entirely — at scale that removes a full
+      * shuffle (or an impossible broadcast) per graph hop. */
+    val fkParents: String => Set[String] = _ => Set.empty)
+
 /** The mapping interpreter: turns a declarative `IndexMapping` over a
   * `GraphSchema` into a single lazy DataFrame plan per output document set —
   * the Spark-native replacement for the reference's translator classes
@@ -16,21 +28,14 @@ import graft.operators._
   * aggregates hop by hop; we emit ONE Catalyst plan per index (parents +
   * flatten + aggregation paths + nested docs all join into the root), so
   * the optimizer sees the whole tree: column pruning reaches every scan,
-  * partial aggregation is automatic, AQE re-plans skewed joins. The only
-  * materialization barrier kept is the cross-index `joining_props` phase
-  * (reference interpreter.py:34-62), driven here by a topological order.
-  */
-final class GraphSource(
-    val nodeDf: String => DataFrame,   // label → node table (has _{label}_id)
-    val edgeDf: (String, String) => DataFrame, // (child,parent) → (childId,parentId)
-    /** labels whose node table ALREADY carries the parent's `_{parent}_id`
-      * column (a foreign key, e.g. relational sources where the edge table is
-      * a projection of the child table). The Translator rides these to skip
-      * the child ⋈ edge self-join entirely — at scale that removes a full
-      * shuffle (or an impossible broadcast) per graph hop. */
-    val fkParents: String => Set[String] = _ => Set.empty)
-
-/** @param rootBloomPrune opt-in runtime pruning for SELECTIVE mapping
+  * partial aggregation is automatic, AQE re-plans skewed joins. Only
+  * [[Translator.runAll]] persists, and only what several indices read:
+  * the documents of an index another index consumes through
+  * `joining_props` (the reference's phase barrier, interpreter.py:34-62,
+  * driven here by a topological order), and the node frame of a root
+  * label that two or more aggregator indices share.
+  *
+  * @param rootBloomPrune opt-in runtime pruning for SELECTIVE mapping
   *        filters: the caller's estimate of how many roots survive the
   *        index filter (sizes the sketch). When set and the filter touches
   *        only root columns, the surviving root ids are sketched ONCE
@@ -39,9 +44,39 @@ final class GraphSource(
   *        filtered-out roots never enter any join or aggregation shuffle.
   *        Off by default: the sketch costs one eager root-projection pass
   *        per filtered index, which only pays when the filter is selective
-  *        and the fact sides are big (the 100 TB shape; see SCALE.md). */
-final class Translator(schema: GraphSchema, source: GraphSource,
-                       rootBloomPrune: Option[Long] = None) {
+  *        and the fact sides are big (the 100 TB shape; see SCALE.md).
+  *
+  * Source frames are memoised per instance: each node label and each edge
+  * is asked of `source` once, however many indices and walk steps read it,
+  * so a text-dump source resolves, lists and parses each dump once per
+  * instance instead of once per use site. The memo dies with the instance,
+  * so a new instance (each `runAll` builds one) re-reads the source. The
+  * memo is also where `runAll` persists its shared roots (`sharedRoots`):
+  * each index is its own action, so without it every index would re-scan
+  * (and re-parse) the root. */
+final class Translator private (schema: GraphSchema, source: GraphSource,
+                                rootBloomPrune: Option[Long],
+                                sharedRoots: Set[String]) {
+
+  def this(schema: GraphSchema, source: GraphSource,
+           rootBloomPrune: Option[Long] = None) =
+    this(schema, source, rootBloomPrune, Set.empty)
+
+  private val nodeFrames = scala.collection.mutable.Map[String, DataFrame]()
+  private val edgeFrames =
+    scala.collection.mutable.Map[(String, String), DataFrame]()
+
+  private def nodeDf(label: String): DataFrame = nodeFrames.synchronized {
+    nodeFrames.getOrElseUpdate(label, {
+      val df = source.nodeDf(label)
+      if (sharedRoots.contains(label)) Translator.persist(df) else df
+    })
+  }
+
+  private def edgeDf(child: String, parent: String): DataFrame =
+    edgeFrames.synchronized {
+      edgeFrames.getOrElseUpdate((child, parent), source.edgeDf(child, parent))
+    }
 
   private def idOf(label: String) = schema.idCol(label)
 
@@ -92,12 +127,12 @@ final class Translator(schema: GraphSchema, source: GraphSource,
                          extra: Seq[Column] = Nil): DataFrame = {
     val cid = idOf(child); val pid = idOf(parent)
     if (hasFk(child, parent))
-      source.nodeDf(child).select((col(pid) +: col(cid) +: extra).distinct: _*)
+      nodeDf(child).select((col(pid) +: col(cid) +: extra).distinct: _*)
     else if (extra.isEmpty)
-      source.edgeDf(child, parent).select(col(pid), col(cid))
+      edgeDf(child, parent).select(col(pid), col(cid))
     else
-      source.edgeDf(child, parent)
-        .join(source.nodeDf(child).select((col(cid) +: extra).distinct: _*),
+      edgeDf(child, parent)
+        .join(nodeDf(child).select((col(cid) +: extra).distinct: _*),
           Seq(cid))
   }
 
@@ -117,7 +152,7 @@ final class Translator(schema: GraphSchema, source: GraphSource,
     // narrow projection, instead of the reference's drop_duplicates on the
     // final wide document (base/translator.py:373) — same semantics (every
     // later join side is unique per root id), a fraction of the shuffle.
-    val rootDf = source.nodeDf(m.root)
+    val rootDf = nodeDf(m.root)
     var doc = rootDf
       .select(((col(rootId) +: chainFks.map(col)) ++
         boundProps(m.root, rootDf, m.props)).distinct: _*)
@@ -153,7 +188,7 @@ final class Translator(schema: GraphSchema, source: GraphSource,
             // fan the document out (the reference's `first` picks one row —
             // so do we, arbitrarily, via the narrow edge dedup)
             doc = doc.join(
-              source.edgeDf(cur, step.label)
+              edgeDf(cur, step.label)
                 .select(col(idOf(cur)), col(pid)).dropDuplicates(idOf(cur)),
               Seq(idOf(cur)), "left_outer")
           }
@@ -161,7 +196,7 @@ final class Translator(schema: GraphSchema, source: GraphSource,
           // the parent view carries the NEXT hop's FK when it can ride along
           val nextFk = chain.steps.lift(i + 1).toSeq
             .filter(n => hasFk(step.label, n.label)).map(n => col(idOf(n.label)))
-          val pdf = source.nodeDf(step.label)
+          val pdf = nodeDf(step.label)
           val pview = pdf.select(
             ((col(pid) +: nextFk) ++ boundProps(step.label, pdf, step.props)).distinct: _*)
           doc = doc.join(broadcast(pview), Seq(pid), "left_outer")
@@ -182,7 +217,7 @@ final class Translator(schema: GraphSchema, source: GraphSource,
               childFrame(step.label, next.label),
               Seq(idOf(step.label)), "left_outer")
           }
-          val pdf = source.nodeDf(step.label)
+          val pdf = nodeDf(step.label)
           val pview = pdf.select((col(idOf(step.label)) +:
             boundProps(step.label, pdf, step.props)).distinct: _*)
           walked = walked.join(broadcast(pview), Seq(idOf(step.label)), "left_outer")
@@ -219,7 +254,7 @@ final class Translator(schema: GraphSchema, source: GraphSource,
             "props, or opt out via settings.bypass_multiplicity_check — " +
             "an arbitrary child row then survives per root)")
       val top = prune(childFrame(f.path, m.root,
-          boundProps(f.path, source.nodeDf(f.path), f.props)))
+          boundProps(f.path, nodeDf(f.path), f.props)))
         .drop(idOf(f.path)).dropDuplicates(rootId)
       doc = doc.join(top, Seq(rootId), "left_outer")
     }
@@ -235,7 +270,7 @@ final class Translator(schema: GraphSchema, source: GraphSource,
       val ads = aggsByPath.getOrElse(Seq(label), Nil)
       val childId = idOf(label)
       val extra = (fls.flatMap(f => col(f.sortedBy.get._1) +:
-        boundProps(label, source.nodeDf(label), f.props)) ++
+        boundProps(label, nodeDf(label), f.props)) ++
         ads.flatMap(_.src).map(col))
         .groupBy(_.toString).map(_._2.head).toSeq
       val cv = prune(childFrame(label, m.root, extra))
@@ -311,9 +346,9 @@ final class Translator(schema: GraphSchema, source: GraphSource,
     // skipping that hop's edge join on FK sources
     val nearParent = labels(labels.length - 2)
     val fkCol = if (hasFk(nodeLabel, nearParent)) Seq(col(idOf(nearParent))) else Nil
-    var child = source.nodeDf(nodeLabel)
+    var child = nodeDf(nodeLabel)
       .select(((col(nodeId) +: fkCol) ++
-        boundProps(nodeLabel, source.nodeDf(nodeLabel), nd.props)).distinct: _*)
+        boundProps(nodeLabel, nodeDf(nodeLabel), nd.props)).distinct: _*)
     nd.filter.foreach(f => child = child.filter(FilterDsl.compile(f)))
     // attach grandchildren nested blocks first (leaf-first recursion)
     nd.children.foreach { sub =>
@@ -323,7 +358,7 @@ final class Translator(schema: GraphSchema, source: GraphSource,
     val joined = labels.sliding(2).toSeq.reverse.foldLeft(child) {
       case (acc, Seq(parent, ch)) =>
         if (ch == nodeLabel && hasFk(ch, parent)) acc // FK already on frame
-        else acc.join(source.edgeDf(ch, parent), Seq(idOf(ch)), "inner")
+        else acc.join(edgeDf(ch, parent), Seq(idOf(ch)), "inner")
     }
     // struct fields: declared props + child nested blocks + the node's id —
     // intermediate hop ids stay out of the document
@@ -398,7 +433,7 @@ final class Translator(schema: GraphSchema, source: GraphSource,
         case (_, _, Seq(pl)) if singleHops(pl) && pl.length > 1 && hasFk(leaf, pl(1)) =>
           idOf(pl(1))
       }.distinct
-      val leafDf = source.nodeDf(leaf)
+      val leafDf = nodeDf(leaf)
       val have = leafDf.columns.toSet ++ schema.node(leaf).props.keySet
       val (present, absent) = leafProps.partition(p => have.contains(p.src))
       var df = leafDf
@@ -410,7 +445,7 @@ final class Translator(schema: GraphSchema, source: GraphSource,
       var dropCols: List[String] = fkFirst.toList
       paths.foreach { case (ancestorLabel, props, pls) =>
         val ancId = idOf(ancestorLabel)
-        val ancDf = source.nodeDf(ancestorLabel)
+        val ancDf = nodeDf(ancestorLabel)
         val anc = ancDf.select(
           col(ancId) +: boundProps(ancestorLabel, ancDf, props): _*)
         if (pls.length == 1 && singleHops(pls.head)) {
@@ -423,7 +458,7 @@ final class Translator(schema: GraphSchema, source: GraphSource,
             // previous ancestor's chain shares this path prefix
             if (!df.columns.contains(pid))
               df = df.join(
-                source.edgeDf(c, p).select(col(idOf(c)), col(pid))
+                edgeDf(c, p).select(col(idOf(c)), col(pid))
                   .dropDuplicates(idOf(c)),
                 Seq(idOf(c)), "left_outer")
             if (!dropCols.contains(pid)) dropCols ::= pid
@@ -446,9 +481,9 @@ final class Translator(schema: GraphSchema, source: GraphSource,
           // (leafId, ancestorId), union the reachable ancestor instances,
           // and aggregate ONE set per leaf across all of them
           val reached = pls.map { pl =>
-            pl.sliding(2).foldLeft(source.nodeDf(leaf).select(col(leafId))) {
+            pl.sliding(2).foldLeft(nodeDf(leaf).select(col(leafId))) {
               case (acc, Seq(child, parent)) =>
-                acc.join(source.edgeDf(child, parent).select(
+                acc.join(edgeDf(child, parent).select(
                   col(idOf(child)), col(idOf(parent))), Seq(idOf(child)), "left_outer")
             }.select(col(leafId), col(ancId))
           }.reduce(_ union _)
@@ -526,7 +561,9 @@ object Translator {
 
   /** Phase 1+2 driver: run all indices, then resolve `joining_props` in
     * topological order (producer indices first — reference
-    * interpreter.py:34-62). Persist only frames consumed by another index.
+    * interpreter.py:34-62). Persists only what another index reads: the
+    * documents of `joining_props` producers and the node frames of roots
+    * shared by several aggregator indices (see the class doc).
     * `rootBloomPrune` passes through to every per-index [[Translator]]
     * (see the class doc — opt-in walk pruning for selective root
     * filters). */
@@ -535,8 +572,14 @@ object Translator {
              rootBloomPrune: Option[Long] = None): Map[String, DataFrame] = {
     MappingValidator.validateOrThrow(schema, mapping)
     releasePersisted()
-    val t = new Translator(schema, sharedRootSource(source, mapping),
-      rootBloomPrune)
+    // shared roots: the first index materializes the scan, the rest read
+    // cached COLUMNAR batches (InMemoryTableScan still prunes columns per
+    // consumer, so a narrow index doesn't pay for a wide sibling)
+    val sharedRoots = mapping.indices.filterNot(_.kind == "collector")
+      .map(_.root).groupBy(identity).collect {
+        case (label, uses) if uses.size >= 2 => label
+      }.toSet
+    val t = new Translator(schema, source, rootBloomPrune, sharedRoots)
     val base: Map[String, DataFrame] =
       mapping.indices.map(m => m.name -> t.translate(m)).toMap
     val consumed = mapping.indices.flatMap(_.joiningProps.map(_.otherIndex)).toSet
@@ -554,34 +597,6 @@ object Translator {
         }
         acc + (m.name -> joined)
       }
-    }
-  }
-
-  /** A root label used by SEVERAL indices would be scanned (and, for text
-    * sources, re-parsed) once per index — each index is its own action, so
-    * Catalyst's ReusedExchange can never bridge them. Wrap the source so
-    * shared-root node frames are persisted: the first index materializes
-    * the scan, the rest read cached COLUMNAR batches (InMemoryTableScan
-    * still prunes columns per consumer, so a narrow index doesn't pay for
-    * a wide sibling). Non-shared labels pass through untouched. */
-  private def sharedRootSource(source: GraphSource,
-                               mapping: EtlMapping): GraphSource = {
-    val roots = mapping.indices.filterNot(_.kind == "collector").map(_.root)
-    val shared = roots.groupBy(identity).collect {
-      case (label, uses) if uses.size >= 2 => label
-    }.toSet
-    if (shared.isEmpty) source
-    else {
-      val cache = scala.collection.mutable.Map[String, DataFrame]()
-      new GraphSource(
-        label =>
-          if (shared.contains(label))
-            cache.synchronized {
-              cache.getOrElseUpdate(label, persist(source.nodeDf(label)))
-            }
-          else source.nodeDf(label),
-        source.edgeDf,
-        source.fkParents)
     }
   }
 

@@ -2,6 +2,10 @@ package graft.sinks
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import graft.schema.EsMapping
 
@@ -130,9 +134,10 @@ object EsPublisher {
               docType: String, nowMillis: Long, keep: Int = 1): String =
     publishCounted(client, alias, docs, docType, nowMillis, keep)._1
 
-  /** Like `publish`, but also returns the written document count — read
-    * back from the published parquet footers (a metadata-only job), NOT by
-    * re-running the unmaterialized translation frame a second time. */
+  /** Like `publish`, but also returns the written document count: the sum
+    * of the row counts in the footers of the part files the write just
+    * produced, read in this process. No Spark job runs for it, and the
+    * unmaterialized translation frame is never executed a second time. */
   def publishCounted(client: FsEsClient, alias: String, docs: DataFrame,
                      docType: String, nowMillis: Long,
                      keep: Int = 1): (String, Long) = {
@@ -146,7 +151,21 @@ object EsPublisher {
     Files.write(client.root.resolve(s"$alias-array-config").resolve("config.json"),
       EsMapping.arrayConfig(docs.schema, docType).getBytes("UTF-8"))
     client.setTimestamp(alias, nowMillis)
-    (target, docs.sparkSession.read.parquet(outPath).count())
+    (target, footerRowCount(outPath,
+      docs.sparkSession.sparkContext.hadoopConfiguration))
+  }
+
+  /** Rows in the `part-*.parquet` files directly under `dir`, from their
+    * footers alone. */
+  private def footerRowCount(dir: String, conf: Configuration): Long = {
+    val path = new HPath(dir)
+    path.getFileSystem(conf).listStatus(path).iterator.filter { st =>
+      val name = st.getPath.getName
+      name.startsWith("part-") && name.endsWith(".parquet")
+    }.map { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
   }
 
   /** `publish` preceded by a backup of the outgoing live index into the

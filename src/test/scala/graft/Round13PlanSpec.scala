@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Round-13 pins. The selection-operator tests capture the plans of the
   * OPERATORS' OWN executed rounds through a QueryExecutionListener (the
@@ -12,34 +10,6 @@ import org.apache.spark.sql.util.QueryExecutionListener
 class Round13PlanSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  /** Run `body`, return every query plan the session executed for it.
-    * QueryExecutionListener delivery is asynchronous — poll until the
-    * captured set stops growing (bounded wait, generous for CI noise). */
-  private def capturePlans(body: => Unit): Seq[String] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      var last = -1
-      var stable = 0
-      while (System.nanoTime() < deadline && stable < 3) {
-        Thread.sleep(200)
-        val n = plans.size()
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    plans.asScala.toSeq
-  }
 
   private def docsShingled = spark.read.parquet(s"$dir/documents.parquet")
     .select(col("doc_id"),

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,5 +19,33 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.sparkContext.setLogLevel("ERROR")
+  }
+
+  /** Run `body`, return every query plan the session executed for it.
+    * QueryExecutionListener delivery is asynchronous — poll until the
+    * captured set stops growing (bounded wait, generous for CI noise). */
+  protected def capturePlans(body: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+      var last = -1
+      var stable = 0
+      while (System.nanoTime() < deadline && stable < 3) {
+        Thread.sleep(200)
+        val n = plans.size()
+        if (n == last) stable += 1 else { stable = 0; last = n }
+      }
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
   }
 }

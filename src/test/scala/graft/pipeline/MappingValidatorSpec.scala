@@ -19,7 +19,7 @@ class MappingValidatorSpec extends AnyFunSuite {
     val ok = IndexMapping(name = "s", docType = "s", root = "subject",
       parentProps = Seq(ParentChainDef(Seq(
         PathStep("project", Seq(PropDef.of("code"))),
-        PathStep("program", Seq(PropDef.of("name")))))),
+        PathStep("program", Seq(PropDef.of("name")))), relation = "1-1")),
       joiningProps = Seq(JoiningDef("p", Seq("code"), Nil)))
     val p = IndexMapping(name = "p", docType = "p", root = "project",
       props = Seq(PropDef.of("code")))
@@ -113,5 +113,52 @@ class MappingValidatorSpec extends AnyFunSuite {
     val b = IndexMapping(name = "dup", docType = "b", root = "subject")
     val errs = MappingValidator.validate(schema, EtlMapping(Seq(a, b)))
     assert(errs.exists(_.contains("duplicate index name")))
+  }
+
+  test("joining_props keys that are arrays on the consuming index are " +
+      "flagged, naming the index and the key; a producer-side array is not") {
+    import org.apache.spark.sql.types.ArrayType
+    val typed = schema.copy(nodes = schema.nodes :+
+      NodeDef("tagged", "tagged", Map("tags" -> ArrayType(StringType)), "x"))
+    val p = IndexMapping(name = "p", docType = "p", root = "project",
+      props = Seq(PropDef.of("code"), PropDef.of("n"), PropDef.of("kids"),
+        PropDef.of("tags")))
+    def flagged(m: IndexMapping, key: String): Boolean =
+      MappingValidator.validate(typed, EtlMapping(Seq(m, p))).exists(e =>
+        e.contains(s"index '${m.name}'") && e.contains(s"'$key' is an array"))
+    val join = (k: String) => Seq(JoiningDef("p", Seq(k), Nil))
+    // a 1-n parent chain collects a set
+    assert(flagged(IndexMapping(name = "chain", docType = "s", root = "subject",
+      parentProps = Seq(ParentChainDef(Seq(PathStep("project",
+        Seq(PropDef.of("code")))))), joiningProps = join("code")), "code"))
+    // set/list aggregations and nested blocks
+    assert(flagged(IndexMapping(name = "agg", docType = "p2", root = "project",
+      aggregatedProps = Seq(AggregatedPropDef("n", Seq("subject"),
+        Some("age"), "set")), joiningProps = join("n")), "n"))
+    assert(flagged(IndexMapping(name = "nest", docType = "p3", root = "project",
+      nestedProps = Seq(NestedDef("kids", Seq("subject"),
+        Seq(PropDef.of("age")))), joiningProps = join("kids")), "kids"))
+    // a collector's injected props are sets
+    assert(flagged(IndexMapping(name = "coll", docType = "f", root = "subject",
+      kind = "collector", injection = Some(InjectionDef("clinical",
+        Map("project" -> Seq(PropDef.of("code"))))),
+      joiningProps = join("code")), "code"))
+    // a prop the dictionary declares as an array
+    assert(flagged(IndexMapping(name = "arr", docType = "t", root = "tagged",
+      props = Seq(PropDef.of("tags")), joiningProps = join("tags")), "tags"))
+    // scalar keys pass: a 1-1 chain, a count
+    val scalar = IndexMapping(name = "ok", docType = "p4", root = "project",
+      props = Seq(PropDef.of("code")),
+      aggregatedProps = Seq(AggregatedPropDef("n", Seq("subject"), None,
+        "count")), joiningProps = Seq(JoiningDef("p", Seq("code", "n"), Nil)))
+    assert(MappingValidator.validate(typed, EtlMapping(Seq(scalar, p))) === Nil)
+    // the producer's array key is exploded by GraphOps.indexJoin: allowed
+    val q = IndexMapping(name = "q", docType = "q", root = "subject",
+      parentProps = Seq(ParentChainDef(Seq(PathStep("project",
+        Seq(PropDef.of("code")))))))
+    val consumer = IndexMapping(name = "c", docType = "c", root = "project",
+      props = Seq(PropDef.of("code")), joiningProps = Seq(JoiningDef("q",
+        Seq("code"), Nil)))
+    assert(MappingValidator.validate(typed, EtlMapping(Seq(consumer, q))) === Nil)
   }
 }

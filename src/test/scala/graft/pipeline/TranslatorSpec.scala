@@ -356,4 +356,115 @@ class TranslatorSpec extends SparkSpec {
     val problems = MappingValidator.validate(schema, EtlMapping(Seq(dup)))
     assert(problems.exists(p => p.contains("tissue") && p.contains("nested")))
   }
+
+  /** `src` wrapped to count how often each node label and edge is asked
+    * for: (label or "child->parent") → calls. */
+  private def counting(src: GraphSource)
+      : (GraphSource, scala.collection.mutable.Map[String, Int]) = {
+    val calls = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    def hit(k: String): Unit = calls.synchronized { calls(k) += 1 }
+    (new GraphSource(
+      l => { hit(l); src.nodeDf(l) },
+      (c, p) => { hit(s"$c->$p"); src.edgeDf(c, p) },
+      src.fkParents), calls)
+  }
+
+  test("runAll asks the source for each node label and each edge at most " +
+      "once per run, and a second run asks again") {
+    // sample (non-root) and sample->subject are read by the aggregation,
+    // the nested block, the deep path of project_docs and the collector
+    val subjDocs = subjectMapping.copy(name = "subject_docs")
+    val subjAges = IndexMapping(name = "subject_ages", docType = "subject",
+      root = "subject", props = Seq(PropDef("age", "age")),
+      aggregatedProps = Seq(
+        AggregatedPropDef("max_vol", Seq("sample"), Some("vol"), "max")))
+    val projDocs = IndexMapping(name = "project_docs", docType = "project",
+      root = "project", props = Seq(PropDef("proj_name", "proj_name")),
+      aggregatedProps = Seq(AggregatedPropDef("samples", Seq("subject",
+        "sample"), None, "count")))
+    val files = IndexMapping(name = "files", docType = "files",
+      root = "sample", kind = "collector",
+      props = Seq(PropDef("tissue", "tissue")),
+      injection = Some(InjectionDef("biospec",
+        Map("project" -> Seq(PropDef("project_set", "proj_name"))))))
+    val mapping = EtlMapping(Seq(subjDocs, subjAges, projDocs, files))
+    val (src, calls) = counting(source)
+    val out = Translator.runAll(schema, src, mapping)
+    out.values.foreach(_.collect())
+    assert(calls.keySet.toSet === Set("subject", "sample", "project",
+      "program", "sample->subject", "subject->project", "project->program"))
+    assert(calls.values.forall(_ == 1), calls)
+    // documents equal a fresh per-index translation over the plain source
+    mapping.indices.foreach { m =>
+      val fresh = new Translator(schema, source).translate(m)
+      assert(out(m.name).collect().map(_.toString).sorted ===
+        fresh.collect().map(_.toString).sorted, m.name)
+    }
+    Translator.runAll(schema, src, mapping)
+    assert(calls.values.forall(_ == 2), calls)
+  }
+
+  test("collector with several routes to one ancestor: the walks and the " +
+      "join back all derive from one memoised leaf frame") {
+    // sample reaches project twice: through subject, and by a direct edge
+    val diamond = GraphSchema(
+      nodes = Seq(
+        NodeDef("project", "project", Map.empty, "admin"),
+        NodeDef("subject", "subject", Map.empty, "clinical"),
+        NodeDef("sample", "sample", Map.empty, "biospec")),
+      links = Seq(
+        LinkDef("subject", "project", "e_sp"),
+        LinkDef("sample", "subject", "e_ss"),
+        LinkDef("sample", "project", "e_sprj")))
+    val tables: Map[String, DataFrame] = Map(
+      "project" -> Seq(("projA", "Alpha"), ("projB", "Beta"))
+        .toDF("_project_id", "proj_name"),
+      "subject" -> Seq(Tuple1("s1")).toDF("_subject_id"),
+      "sample" -> Seq(("m1", "blood"), ("m2", "saliva"), ("m3", "blood"),
+        ("m4", "urine")).toDF("_sample_id", "tissue"))
+    val links: Map[(String, String), DataFrame] = Map(
+      ("subject", "project") -> Seq(("s1", "projA"))
+        .toDF("_subject_id", "_project_id"),
+      ("sample", "subject") -> Seq(("m1", "s1"), ("m2", "s1"))
+        .toDF("_sample_id", "_subject_id"),
+      ("sample", "project") -> Seq(("m1", "projB"), ("m3", "projB"))
+        .toDF("_sample_id", "_project_id"))
+    val m = IndexMapping(name = "files", docType = "files", root = "sample",
+      kind = "collector", props = Seq(PropDef("tissue", "tissue")),
+      injection = Some(InjectionDef("biospec",
+        Map("project" -> Seq(PropDef("project_set", "proj_name"))))))
+    val (src, calls) = counting(
+      new GraphSource(tables(_), (c, p) => links((c, p))))
+    val rows = new Translator(diamond, src).translate(m).collect().map { r =>
+      (r.getString(r.fieldIndex("_files_id")),
+        r.getString(r.fieldIndex("tissue")),
+        r.getString(r.fieldIndex("source_node")),
+        r.getSeq[String](r.fieldIndex("project_set")))
+    }.toSet
+    assert(rows === Set(
+      ("m1", "blood", "sample", Seq("Alpha", "Beta")),
+      ("m2", "saliva", "sample", Seq("Alpha")),
+      ("m3", "blood", "sample", Seq("Beta")),
+      ("m4", "urine", "sample", Seq.empty[String])))
+    assert(calls("sample") === 1)
+  }
+
+  test("a joining_props key that is an array on the consuming index is " +
+      "rejected before translation, naming the index and the key") {
+    // a 1-n chain makes subject's project_name a set (array) column
+    val consumer = IndexMapping(name = "subject", docType = "subject",
+      root = "subject", props = Seq(PropDef("age", "age")),
+      parentProps = Seq(ParentChainDef(Seq(
+        PathStep("project", Seq(PropDef("project_name", "proj_name")))))),
+      joiningProps = Seq(JoiningDef("project", Seq("project_name"),
+        Seq(PropDef("proj_names", "proj_name", fn = Some("set"))))))
+    val producer = IndexMapping(name = "project", docType = "project",
+      root = "project", props = Seq(PropDef("project_name", "proj_name"),
+        PropDef("proj_name", "proj_name")))
+    val ex = intercept[IllegalArgumentException] {
+      Translator.runAll(schema, source, EtlMapping(Seq(consumer, producer)))
+    }
+    assert(ex.getMessage.contains("index 'subject'"), ex.getMessage)
+    assert(ex.getMessage.contains("'project_name' is an array"), ex.getMessage)
+  }
 }

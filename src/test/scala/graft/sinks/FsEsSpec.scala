@@ -99,4 +99,33 @@ class FsEsSpec extends SparkSpec {
     val v3 = EsPublisher.publish(es, "subject", docs, "subject", 3000L)
     assert(v3 === "subject_3")
   }
+
+  test("publishCounted returns the exact row count from the part-file " +
+      "footers, for a multi-partition frame and for an empty one") {
+    val es = new FsEsClient(Files.createTempDirectory("fses-count"))
+    val many = spark.range(0, 1003, 1, 7)
+      .select(col("id").cast("string").as("_x_id"), (col("id") % 5).as("k"))
+    val (idx, n) = EsPublisher.publishCounted(es, "x", many, "x", 1000L)
+    assert(n === 1003L)
+    val parts = Files.list(es.root.resolve(idx).resolve("docs")).toArray
+      .map(_.toString).filter(_.endsWith(".parquet"))
+    assert(parts.length > 1)
+    val (_, none) = EsPublisher.publishCounted(es, "x",
+      many.filter(lit(false)), "x", 2000L)
+    assert(none === 0L)
+  }
+
+  test("publishCounted runs one query execution, the write: the count " +
+      "reads no parquet back") {
+    val root = Files.createTempDirectory("fses-jobs")
+    val es = new FsEsClient(root)
+    var n = 0L
+    // only this index's executions: plans name their output or input path
+    val plans = capturePlans {
+      n = EsPublisher.publishCounted(es, "y", docs, "y", 1000L)._2
+    }.filter(_.contains(root.toString))
+    assert(n === 2L)
+    assert(plans.length === 1, plans)
+    assert(plans.head.contains("InsertIntoHadoopFsRelationCommand"))
+  }
 }
