@@ -45,6 +45,11 @@ object Sessions {
       // Frames.truncate) are only garbage-collected with this on; the
       // default (false) accretes one rdd-<id> dir per iteration round
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      // the generated-class cache is JVM-wide and sized once, when
+      // CodeGenerator first initialises; Spark's 100 entries are fewer
+      // than one pass of the Tube run (~130 classes) or of an operator
+      // suite (~205), so every warm pass recompiled them all
+      .config("spark.sql.codegen.cache.maxEntries", 1000L)
 
   /** A local session at `cores`, logging warnings and up. */
   def local(cores: Int = defaultCores()): SparkSession = {

@@ -42,17 +42,28 @@ object PageRank {
     * Output: (node, rank_u12) — bigint u12 units. */
   def run(edges: DataFrame, src: String, dst: String, iters: Int,
           dampingPct: Int = 85): DataFrame = {
+    val teleport = lit((100L - dampingPct) * 10000000000L) // (1-d)·10¹² exact
+      .cast(DecimalType(38, 0))
+    iterate(edges.select(col(src).as("src"), col(dst).as("dst")), iters,
+      dampingPct)(_ => (lit(1000000000000L).cast(DecimalType(38, 0)), teleport))
+  }
+
+  /** The iteration [[run]] and [[runPersonalized]] share, over (src, dst)
+    * edges. `start` sees the node frame (one column, `node`) once the
+    * edge and degree frames are cached, and returns r₀ and the teleport
+    * term, both DECIMAL(38,0) columns over `node`. */
+  private def iterate(srcDst: DataFrame, iters: Int, dampingPct: Int)(
+      start: DataFrame => (Column, Column)): DataFrame = {
     require(iters >= 0 && dampingPct >= 0 && dampingPct <= 100,
       s"bad params iters=$iters dampingPct=$dampingPct")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst")).distinct()
+    val e = srcDst.distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // both orientations present ⇒ every node occurs as a source
     val nodes = deg.select(col("src").as("node"))
-    val teleport = (100L - dampingPct) * 10000000000L // (1-d)·10¹² exact
-    var rank = nodes.withColumn("rank",
-      lit(1000000000000L).cast(DecimalType(38, 0)))
+    val (rank0, teleport) = start(nodes)
+    var rank = nodes.withColumn("rank", rank0)
     for (i <- 0 until iters) {
       val inSum = rank
         .join(deg, rank("node") === deg("src"))
@@ -62,7 +73,7 @@ object PageRank {
         .agg(sum(col("contrib")).as("in_sum"))
       rank = nodes.join(inSum, Seq("node"), "left")
         .select(col("node"),
-          (lit(teleport).cast(DecimalType(38, 0)) +
+          (teleport +
             intDiv(lit(dampingPct.toLong) *
               coalesce(col("in_sum"), lit(0).cast(DecimalType(38, 0))),
               lit(100L))).as("rank"))
@@ -100,43 +111,17 @@ object PageRank {
   def runPersonalized(edges: DataFrame, src: String, dst: String,
                       iters: Int, seeds: Seq[String],
                       dampingPct: Int = 85): DataFrame = {
-    require(iters >= 0 && dampingPct >= 0 && dampingPct <= 100,
-      s"bad params iters=$iters dampingPct=$dampingPct")
     require(seeds.nonEmpty, "personalized PageRank needs a seed set")
-    val e = edges.select(col(src).cast("string").as("src"),
-        col(dst).cast("string").as("dst")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = deg.select(col("src").as("node"))
-    val n = nodes.count()
-    val seedTeleport =
-      (BigInt(100 - dampingPct) * BigInt("1000000000000") * n / 100 /
-        seeds.size).toLong
-    val teleport = when(col("node").isin(seeds: _*), lit(seedTeleport))
-      .otherwise(lit(0L)).cast(DecimalType(38, 0))
-    var rank = nodes.withColumn("rank", teleport)
-    for (i <- 0 until iters) {
-      val inSum = rank
-        .join(deg, rank("node") === deg("src"))
-        .select(col("src"), intDiv(col("rank"), col("outdeg")).as("contrib"))
-        .join(e, "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("contrib")).as("in_sum"))
-      rank = nodes.join(inSum, Seq("node"), "left")
-        .select(col("node"),
-          (teleport +
-            intDiv(lit(dampingPct.toLong) *
-              coalesce(col("in_sum"), lit(0).cast(DecimalType(38, 0))),
-              lit(100L))).as("rank"))
-      if ((i + 1) % 4 == 0 && i + 1 < iters)
-        rank = rank.transform(Frames.truncate)
+    iterate(edges.select(col(src).cast("string").as("src"),
+      col(dst).cast("string").as("dst")), iters, dampingPct) { nodes =>
+      val n = nodes.count()
+      val seedTeleport =
+        (BigInt(100 - dampingPct) * BigInt("1000000000000") * n / 100 /
+          seeds.size).toLong
+      val teleport = when(col("node").isin(seeds: _*), lit(seedTeleport))
+        .otherwise(lit(0L)).cast(DecimalType(38, 0))
+      (teleport, teleport)
     }
-    if (iters > 0) rank = rank.transform(Frames.truncate)
-    val out = rank.select(col("node"), col("rank").cast("long").as("rank_u12"))
-    e.unpersist(false)
-    deg.unpersist(false)
-    out
   }
 
   /** HITS hubs & authorities (Kleinberg, JACM 1999) over DIRECTED edges —

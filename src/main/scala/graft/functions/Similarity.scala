@@ -928,40 +928,78 @@ object Similarity {
     require(rounds >= 0, "rounds must be >= 0")
     require(initWindow >= 1, "initWindow must be >= 1")
     val bk = math.max(k, buildK)
-    val b = corpus.select(col(idCol).as("_nid"), col(vecCol).as("_nv"))
+    val b = nnIndex(corpus, idCol, vecCol, bits, dim)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val initPairs = nnInitLinks(b, initWindow, newOnly = false)
+    var g = Frames.truncate(nnTopK(nnScore(b, initPairs), bk, "_r").drop("_r"))
+    (1 to rounds).foreach { _ =>
+      val cand = nnDedup(nnCandidates(g, bk, ball = None)
+        .unionByName(g.select(col("node"), col("nbr"))))
+      val next =
+        Frames.truncate(nnTopK(nnScore(b, cand), bk, "_r").drop("_r"))
+      Frames.release(g) // checkpoint blocks — Dataset.unpersist is a no-op
+      g = next
+    }
+    val out = nnTopK(g, k, "rank")
+      .select(col("node").as("node_id"), col("rank"), col("nbr")
+        .as("neighbor_id"), round(col("sim"), 6).as("sim"))
+      .transform(Frames.truncate)
+    // truncate above is eager, so the final round's blocks (and the
+    // corpus index) release before the caller consumes the graph —
+    // the persists-die-at-query-end hygiene rule
+    Frames.release(g)
+    b.unpersist(false)
+    out
+  }
+
+  // The NN-descent steps, shared by the rebuild ([[nnDescentGraph]]) and
+  // the incremental path ([[appendToGraph]], and [[deleteFromGraph]]
+  // through it): append's links and rounds must be the rebuild's.
+
+  /** The corpus index every step reads: (_nid, _nv, its norm _nn, and
+    * its bucket in LSH tables 0 and 1). */
+  private def nnIndex(vectors: DataFrame, idCol: String, vecCol: String,
+                      bits: Int, dim: Int): DataFrame =
+    vectors.select(col(idCol).as("_nid"), col(vecCol).as("_nv"))
       .withColumn("_nn", norm(col("_nv")))
       .withColumn("_bucket", rhpSignature(col("_nv"), bits, dim))
       .withColumn("_bucket2", rhpSignature(col("_nv"), bits, dim, table = 1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    def score(pairs: DataFrame): DataFrame = pairs
-      .join(b.select(col("_nid").as("node"), col("_nv").as("_v1"),
-        col("_nn").as("_n1")), Seq("node"))
-      .join(b.select(col("_nid").as("nbr"), col("_nv").as("_v2"),
-        col("_nn").as("_n2")), Seq("nbr"))
-      .withColumn("sim", cosinePrenormed(col("_v1"), col("_v2"),
-        col("_n1"), col("_n2")))
-      .select(col("node"), col("nbr"), col("sim"))
+  /** (node, nbr) pairs → (node, nbr, sim), cosine over the index `b`. */
+  private def nnScore(b: DataFrame, pairs: DataFrame): DataFrame = pairs
+    .join(b.select(col("_nid").as("node"), col("_nv").as("_v1"),
+      col("_nn").as("_n1")), Seq("node"))
+    .join(b.select(col("_nid").as("nbr"), col("_nv").as("_v2"),
+      col("_nn").as("_n2")), Seq("nbr"))
+    .withColumn("sim", cosinePrenormed(col("_v1"), col("_v2"),
+      col("_n1"), col("_n2")))
+    .select(col("node"), col("nbr"), col("sim"))
 
-    val wNode = Window.partitionBy(col("node"))
-      .orderBy(col("sim").desc, col("nbr").asc)
-    def topK(scored: DataFrame): DataFrame = scored
-      .withColumn("_r", row_number().over(wNode))
-      .filter(col("_r") <= bk).drop("_r")
+  /** Each node's top `n` by (sim DESC, nbr ASC), ranked 1..n in `rankCol`. */
+  private def nnTopK(scored: DataFrame, n: Int, rankCol: String): DataFrame =
+    scored
+      .withColumn(rankCol, row_number().over(Window.partitionBy(col("node"))
+        .orderBy(col("sim").desc, col("nbr").asc)))
+      .filter(col(rankCol) <= n)
 
-    // pair dedup as a per-node set aggregate, NOT `.distinct()`: the
-    // same pairs survive (set semantics per node), but the frame comes
-    // out hash-partitioned by `node` — the partitioning the `score`
-    // broadcast joins preserve and the top-k window needs — so each
-    // round runs ONE exchange (here) instead of two (pair-wise distinct
-    // + window repartition). Set size is bounded by the round invariant
-    // (≤ 4·buildK² candidates per node), so the per-node array is safe
-    // at any corpus size. Candidate order inside the set is irrelevant:
-    // the window's (sim DESC, nbr ASC) order is total.
-    def dedupByNode(pairs: DataFrame): DataFrame = pairs
-      .groupBy(col("node")).agg(collect_set(col("nbr")).as("_cs"))
-      .select(col("node"), explode(col("_cs")).as("nbr"))
+  // pair dedup as a per-node set aggregate, NOT `.distinct()`: the
+  // same pairs survive (set semantics per node), but the frame comes
+  // out hash-partitioned by `node` — the partitioning the `nnScore`
+  // broadcast joins preserve and the top-k window needs — so each
+  // round runs ONE exchange (here) instead of two (pair-wise distinct
+  // + window repartition). Set size is bounded by the round invariant
+  // (≤ 4·buildK² candidates per node), so the per-node array is safe
+  // at any corpus size. Candidate order inside the set is irrelevant:
+  // the window's (sim DESC, nbr ASC) order is total.
+  private def nnDedup(pairs: DataFrame): DataFrame = pairs
+    .groupBy(col("node")).agg(collect_set(col("nbr")).as("_cs"))
+    .select(col("node"), explode(col("_cs")).as("nbr"))
 
+  /** The init links of [[nnDescentGraph]], both directions, deduplicated
+    * per node. `newOnly` keeps just the links that touch a row whose
+    * `_isnew` is set (append's screen; `b` must then carry `_isnew`). */
+  private def nnInitLinks(b: DataFrame, initWindow: Int,
+                          newOnly: Boolean): DataFrame = {
     // Cost shape: each bucket is ONE window partition, so one task sorts
     // (and buffers, spilling past the window spill threshold) all of a
     // bucket's rows. Nothing caps a bucket: `bits` sign bits give at most
@@ -974,6 +1012,12 @@ object Similarity {
     def windowLinks(bucketCol: String): DataFrame = {
       val wBucket = Window.partitionBy(col(bucketCol))
         .orderBy(Dedup.Md5Hasher(col("_nid").cast("string")), col("_nid"))
+      // under `newOnly` the later row's is-new flag rides its lead beside
+      // its id, so the screen sees both ends of a link
+      val carry = if (newOnly) Seq(col("_isnew")) else Nil
+      val later =
+        if (newOnly) struct(col("_nid").as("n"), col("_isnew").as("i"))
+        else col("_nid")
       // pair row i with rows i+1 … i+initWindow of its bucket via lead()
       // over ONE window: the former self-join on the ≤ 2^bits bucket key
       // materialized |bucket|² intermediate rows per bucket — quadratic
@@ -982,53 +1026,43 @@ object Similarity {
       // band and nothing else (nulls past the partition end filtered).
       // Leads materialize in their own projection — a window expression
       // may not live inside the generator.
-      b.select(col(bucketCol) +: col("_nid") +:
+      val band = b.select(col(bucketCol) +: col("_nid") +: carry ++:
           (1 to initWindow).map(d =>
-            lead(col("_nid"), d).over(wBucket).as(s"_l$d")): _*)
-        .select(col("_nid").as("node"),
+            lead(later, d).over(wBucket).as(s"_l$d")): _*)
+        .select(Seq(col("_nid").as("node")) ++ carry :+
           explode(array((1 to initWindow).map(d => col(s"_l$d")): _*))
-            .as("nbr"))
+            .as("nbr"): _*)
         .filter(col("nbr").isNotNull)
+      if (newOnly) band.filter(col("_isnew") || col("nbr.i"))
+        .select(col("node"), col("nbr.n").as("nbr"))
+      else band
     }
     val fwd = windowLinks("_bucket").unionByName(windowLinks("_bucket2"))
-    val initPairs = dedupByNode(fwd
+    nnDedup(fwd
       .unionByName(fwd.select(col("nbr").as("node"), col("node").as("nbr"))))
+  }
 
-    var g = Frames.truncate(topK(score(initPairs)))
-    (1 to rounds).foreach { _ =>
-      val rev = g.select(col("nbr").as("node"), col("node").as("nbr"))
-        .withColumn("_r", row_number().over(Window.partitionBy(col("node"))
-          .orderBy(Dedup.Md5Hasher(col("nbr").cast("string")), col("nbr"))))
-        .filter(col("_r") <= bk).drop("_r")
-      // rel deduped by node: the neighbor-of-neighbor join reads rel
-      // twice — keyed by `node` (as _mid, build side) and by `_mid` —
-      // and the node-partitioned form feeds the second read without a
-      // fresh exchange
-      val rel = dedupByNode(
-        g.select(col("node"), col("nbr")).unionByName(rev))
-      val non = rel.select(col("node"), col("nbr").as("_mid"))
-        .join(rel.select(col("node").as("_mid"), col("nbr").as("_cand")),
-          Seq("_mid"))
-        .filter(col("node") =!= col("_cand"))
-        .select(col("node"), col("_cand").as("nbr"))
-      val cand = dedupByNode(
-        non.unionByName(g.select(col("node"), col("nbr"))))
-      val next = Frames.truncate(topK(score(cand)))
-      Frames.release(g) // checkpoint blocks — Dataset.unpersist is a no-op
-      g = next
-    }
-    val out = g
-      .withColumn("rank", row_number().over(wNode))
-      .filter(col("rank") <= k)
-      .select(col("node").as("node_id"), col("rank"), col("nbr")
-        .as("neighbor_id"), round(col("sim"), 6).as("sim"))
-      .transform(Frames.truncate)
-    // truncate above is eager, so the final round's blocks (and the
-    // corpus index) release before the caller consumes the graph —
-    // the persists-die-at-query-end hygiene rule
-    Frames.release(g)
-    b.unpersist(false)
-    out
+  /** One refinement round's new candidates over the graph `g`: reverse
+    * edges capped at `bk` per target in (md5, id) order, then every
+    * neighbor of a neighbor over current ∪ reverse edges. `ball` limits
+    * the first hop to its nodes (append's in-ball round). */
+  private def nnCandidates(g: DataFrame, bk: Int,
+                           ball: Option[DataFrame]): DataFrame = {
+    val rev = g.select(col("nbr").as("node"), col("node").as("nbr"))
+      .withColumn("_r", row_number().over(Window.partitionBy(col("node"))
+        .orderBy(Dedup.Md5Hasher(col("nbr").cast("string")), col("nbr"))))
+      .filter(col("_r") <= bk).drop("_r")
+    // rel deduped by node: the neighbor-of-neighbor join reads rel
+    // twice — keyed by `node` (as _mid, build side) and by `_mid` —
+    // and the node-partitioned form feeds the second read without a
+    // fresh exchange
+    val rel = nnDedup(g.select(col("node"), col("nbr")).unionByName(rev))
+    ball.fold(rel)(rel.join(_, Seq("node"), "left_semi"))
+      .select(col("node"), col("nbr").as("_mid"))
+      .join(rel.select(col("node").as("_mid"), col("nbr").as("_cand")),
+        Seq("_mid"))
+      .filter(col("node") =!= col("_cand"))
+      .select(col("node"), col("_cand").as("nbr"))
   }
 
   /** KNN-SHAPLEY data valuation (Jia, Dao, Wang et al., VLDB 2019 —
@@ -1154,67 +1188,13 @@ object Similarity {
     val all = oldCorpus.select(col(idCol), col(vecCol))
       .unionByName(newVectors.select(col(idCol), col(vecCol)))
     val newIds = newVectors.select(col(idCol).as("_newid"))
-    val b = all.select(col(idCol).as("_nid"), col(vecCol).as("_nv"))
-      .withColumn("_nn", norm(col("_nv")))
-      .withColumn("_bucket", rhpSignature(col("_nv"), bits, dim))
-      .withColumn("_bucket2", rhpSignature(col("_nv"), bits, dim, table = 1))
+    val b = nnIndex(all, idCol, vecCol, bits, dim)
       .join(newIds, col("_nid") === col("_newid"), "left")
       .withColumn("_isnew", col("_newid").isNotNull)
       .drop("_newid")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    def score(pairs: DataFrame): DataFrame = pairs
-      .join(b.select(col("_nid").as("node"), col("_nv").as("_v1"),
-        col("_nn").as("_n1")), Seq("node"))
-      .join(b.select(col("_nid").as("nbr"), col("_nv").as("_v2"),
-        col("_nn").as("_n2")), Seq("nbr"))
-      .withColumn("sim", cosinePrenormed(col("_v1"), col("_v2"),
-        col("_n1"), col("_n2")))
-      .select(col("node"), col("nbr"), col("sim"))
-
-    val wNode = Window.partitionBy(col("node"))
-      .orderBy(col("sim").desc, col("nbr").asc)
-    // rank assigned HERE, inside the ball, from unrounded sims — and
-    // carried verbatim for out-of-ball rows: re-ranking untouched nodes
-    // from the stored round-6 sims could flip near-tie orders a rebuild
-    // (which ranks on unrounded sims) would not, and would make even an
-    // empty append not an identity
-    def topKRanked(scored: DataFrame): DataFrame = scored
-      .withColumn("rank", row_number().over(wNode))
-      .filter(col("rank") <= bk)
-
-    // per-node set dedup instead of pair-wise distinct — same pairs,
-    // but the output is hash-partitioned by `node` so the broadcast
-    // score joins and the rank window run without a second exchange
-    // (the [[nnDescentGraph]] round rewrite, applied to the ball)
-    def dedupByNode(pairs: DataFrame): DataFrame = pairs
-      .groupBy(col("node")).agg(collect_set(col("nbr")).as("_cs"))
-      .select(col("node"), explode(col("_cs")).as("nbr"))
-
-    // rebuild-identical init links, kept only where a new node is touched;
-    // the same one-task-per-bucket sort, bounded only by `bits` and the
-    // data (see nnDescentGraph's windowLinks)
-    def windowLinks(bucketCol: String): DataFrame = {
-      val wBucket = Window.partitionBy(col(bucketCol))
-        .orderBy(Dedup.Md5Hasher(col("_nid").cast("string")), col("_nid"))
-      // same lead()-band emission as the rebuild (the links must be
-      // IDENTICAL to nnDescentGraph's — only the is-new screen differs);
-      // the struct lead carries the later row's _isnew for the screen,
-      // and leads materialize before the generator (window-in-explode is
-      // rejected at analysis)
-      b.select(col(bucketCol) +: col("_nid") +: col("_isnew") +:
-          (1 to initWindow).map(d =>
-            lead(struct(col("_nid").as("n"), col("_isnew").as("i")), d)
-              .over(wBucket).as(s"_l$d")): _*)
-        .select(col("_nid"), col("_isnew"),
-          explode(array((1 to initWindow).map(d => col(s"_l$d")): _*))
-            .as("_nb"))
-        .filter(col("_nb").isNotNull && (col("_isnew") || col("_nb.i")))
-        .select(col("_nid").as("node"), col("_nb.n").as("nbr"))
-    }
-    val fwd = windowLinks("_bucket").unionByName(windowLinks("_bucket2"))
-    val seed = dedupByNode(fwd
-      .unionByName(fwd.select(col("nbr").as("node"), col("node").as("nbr"))))
+    // the rebuild's init links, kept only where a new node is touched
+    val seed = nnInitLinks(b, initWindow, newOnly = true)
 
     val gOld = graph.select(col("node_id").as("node"),
       col("neighbor_id").as("nbr"), col("sim"), col("rank"))
@@ -1229,14 +1209,17 @@ object Similarity {
     // existing edges), RESCORED — the stored graph carries round-6 sims,
     // so reusing them beside fresh unrounded scores would leave duplicate
     // (node, nbr) rows in the top-k cut; everyone else keeps their list
-    // AND their rank verbatim
+    // AND their rank verbatim. The rank is assigned here, from unrounded
+    // sims: re-ranking untouched nodes from the stored round-6 sims could
+    // flip near-tie orders a rebuild (which ranks on unrounded sims)
+    // would not, and would make even an empty append not an identity.
     def splice(g: DataFrame, aff: DataFrame, cand: DataFrame): DataFrame = {
       val inBallEdges = g.join(aff, Seq("node"), "left_semi")
         .select(col("node"), col("nbr"))
       val outBall = g.join(aff, Seq("node"), "left_anti")
         .select(col("node"), col("nbr"), col("sim"), col("rank"))
       Frames.truncate(
-        topKRanked(score(dedupByNode(cand.unionByName(inBallEdges))))
+        nnTopK(nnScore(b, nnDedup(cand.unionByName(inBallEdges))), bk, "rank")
           .unionByName(outBall))
     }
     var g = splice(gOld, affected, seed)
@@ -1250,20 +1233,9 @@ object Similarity {
         .unionByName(affected.select(col("node")))
         .distinct()
       val nextAffected = Frames.truncate(touch)
-      // rebuild-identical round, first hop restricted to the ball
-      val rev = g.select(col("nbr").as("node"), col("node").as("nbr"))
-        .withColumn("_r", row_number().over(Window.partitionBy(col("node"))
-          .orderBy(Dedup.Md5Hasher(col("nbr").cast("string")), col("nbr"))))
-        .filter(col("_r") <= bk).drop("_r")
-      val rel = dedupByNode(
-        g.select(col("node"), col("nbr")).unionByName(rev))
-      val non = rel.join(nextAffected, Seq("node"), "left_semi")
-        .select(col("node"), col("nbr").as("_mid"))
-        .join(rel.select(col("node").as("_mid"), col("nbr").as("_cand")),
-          Seq("_mid"))
-        .filter(col("node") =!= col("_cand"))
-        .select(col("node"), col("_cand").as("nbr"))
-      val next = splice(g, nextAffected, non)
+      // the rebuild's round, first hop restricted to the ball
+      val next = splice(g, nextAffected,
+        nnCandidates(g, bk, ball = Some(nextAffected)))
       Frames.release(g) // checkpoint blocks — Dataset.unpersist is a no-op
       Frames.release(affected)
       g = next
@@ -1280,32 +1252,6 @@ object Similarity {
     out
   }
 
-  /** Greedy BEAM SEARCH over a k-NN graph — the SERVING path of graph
-    * ANN (the HNSW/NSG query loop, single-layer): start every query at
-    * a deterministic SET of entry points — the md5-min corpus id per
-    * LSH bucket ([[rhpSignature]], the same `bits`/`dim` family the
-    * graph build's init used) — then `steps` unrollable rounds of
-    * expand-neighbors → score → keep the best `beamWidth` by
-    * (sim DESC, id ASC). Multi-entry is the recall safety net a greedy
-    * graph walk needs: a single global entry point makes any
-    * disconnected (or merely badly-linked) graph region unreachable and
-    * recall cliffs silently; one md5-min per LSH bucket seeds every
-    * coarse direction of the space for at most 2^bits extra beam rows
-    * in round 1, after which the beamWidth cut applies as usual. The
-    * simplification vs the textbook loop is declared: no visited-set
-    * (each round re-ranks beam ∪ neighbors(beam), which is monotone
-    * non-worsening and keeps the computation a pure function SQL can
-    * unroll), fixed rounds instead of convergence.
-    *
-    * Scale shape: the graph is the big artifact; the search is tiny —
-    * per query per round ≤ beamWidth·(k+1) candidates (round 1:
-    * ≤ 2^bits·(k+1)), expanded by one equi-join against the graph and
-    * scored against the broadcast query vectors. The entry set is a
-    * ≤ 2^bits-row aggregate of one corpus scan, computed once and
-    * broadcast. No corpus scan at query time beyond that: that is the
-    * whole point of serving from a graph.
-    *
-    * Output: (query_id, rank, neighbor_id, sim), self-matches excluded. */
   /** DELETE vectors from a persisted kNN graph — [[appendToGraph]]'s
     * inverse, completing the takedown family (groups/datacard/LSH/IVF/
     * Merkle all have deletes; HLL is documented non-deletable). Expressed
@@ -1350,6 +1296,32 @@ object Similarity {
       bits, dim, initWindow, buildK)
   }
 
+  /** Greedy BEAM SEARCH over a k-NN graph — the SERVING path of graph
+    * ANN (the HNSW/NSG query loop, single-layer): start every query at
+    * a deterministic SET of entry points — the md5-min corpus id per
+    * LSH bucket ([[rhpSignature]], the same `bits`/`dim` family the
+    * graph build's init used) — then `steps` unrollable rounds of
+    * expand-neighbors → score → keep the best `beamWidth` by
+    * (sim DESC, id ASC). Multi-entry is the recall safety net a greedy
+    * graph walk needs: a single global entry point makes any
+    * disconnected (or merely badly-linked) graph region unreachable and
+    * recall cliffs silently; one md5-min per LSH bucket seeds every
+    * coarse direction of the space for at most 2^bits extra beam rows
+    * in round 1, after which the beamWidth cut applies as usual. The
+    * simplification vs the textbook loop is declared: no visited-set
+    * (each round re-ranks beam ∪ neighbors(beam), which is monotone
+    * non-worsening and keeps the computation a pure function SQL can
+    * unroll), fixed rounds instead of convergence.
+    *
+    * Scale shape: the graph is the big artifact; the search is tiny —
+    * per query per round ≤ beamWidth·(k+1) candidates (round 1:
+    * ≤ 2^bits·(k+1)), expanded by one equi-join against the graph and
+    * scored against the broadcast query vectors. The entry set is a
+    * ≤ 2^bits-row aggregate of one corpus scan, computed once and
+    * broadcast. No corpus scan at query time beyond that: that is the
+    * whole point of serving from a graph.
+    *
+    * Output: (query_id, rank, neighbor_id, sim), self-matches excluded. */
   def graphBeamSearch(graph: DataFrame, corpus: DataFrame, idCol: String,
                       vecCol: String, queries: DataFrame, queryId: String,
                       queryVec: String, k: Int, beamWidth: Int,

@@ -33,12 +33,52 @@ object Triangles {
     // the edge set feeds THREE consumers (degrees, orientation, the wedge-
     // closing join) — persist it or the upstream candidate pipeline runs
     // three times (the PageRank persist rule)
-    val und = pairs
-      .select(least(col(idA), col(idB)).as("u"),
-        greatest(col(idA), col(idB)).as("v"))
-      .filter(col("u") < col("v"))
-      .distinct()
+    val und = canonical(pairs, idA, idB)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    triangles(und)
+      .select(explode(array(col("apex"), col("x"), col("y"))).as("node"))
+      .groupBy(col("node"))
+      .agg(count(lit(1)).as("n_triangles"))
+  }
+
+  /** Per-EDGE triangle support over the canonical undirected edge set:
+    * (u, v, support) for edges in ≥ 1 triangle. Same wedge enumeration
+    * as [[perNode]], then each triangle credits its THREE edges in
+    * canonical (min, max) form. */
+  def edgeSupport(und: DataFrame): DataFrame = {
+    val e = und.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val out = triangles(e)
+      .select(explode(array(
+        struct(least(col("apex"), col("x")).as("u"),
+          greatest(col("apex"), col("x")).as("v")),
+        struct(least(col("apex"), col("y")).as("u"),
+          greatest(col("apex"), col("y")).as("v")),
+        struct(col("x").as("u"), col("y").as("v")))).as("_t"))
+      .select(col("_t.u").as("u"), col("_t.v").as("v"))
+      .groupBy(col("u"), col("v"))
+      .agg(count(lit(1)).as("support"))
+    // eager checkpoint BEFORE the unpersist: the support frame must
+    // materialize while the edge set is still cached (it feeds three
+    // joins above), and the caller loops on it
+    val sealed_ = out.localCheckpoint(true)
+    e.unpersist(false)
+    sealed_
+  }
+
+  /** The canonical undirected edge set (u, v) of a pair frame: lower id
+    * first, self-loops dropped, each edge once. */
+  private def canonical(pairs: DataFrame, idA: String,
+                        idB: String): DataFrame = pairs
+    .select(least(col(idA), col(idB)).as("u"),
+      greatest(col(idA), col(idB)).as("v"))
+    .filter(col("u") < col("v"))
+    .distinct()
+
+  /** Every triangle of the canonical edge set `und`, once, as its
+    * lowest-(degree, id) vertex `apex` and the other two `x` < `y`:
+    * degree-ordered orientation, wedges at the apex, each wedge closed
+    * against `und`. `und` is read three times; callers cache it. */
+  private def triangles(und: DataFrame): DataFrame = {
     val deg = und.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
     val oriented = und
@@ -58,56 +98,7 @@ object Triangles {
         col("b.dst").as("y"))
     // the closing edge is looked up in CANONICAL orientation: x < y holds
     // by the wedge's own ordering
-    val tris = wedges.join(und,
-      wedges("x") === und("u") && wedges("y") === und("v"))
-    tris
-      .select(explode(array(col("apex"), col("x"), col("y"))).as("node"))
-      .groupBy(col("node"))
-      .agg(count(lit(1)).as("n_triangles"))
-  }
-
-  /** Per-EDGE triangle support over the canonical undirected edge set:
-    * (u, v, support) for edges in ≥ 1 triangle. Same degree-ordered
-    * wedge enumeration as [[perNode]] (each triangle found exactly once
-    * at its lowest-degree apex), then each triangle credits its THREE
-    * edges in canonical (min, max) form. */
-  def edgeSupport(und: DataFrame): DataFrame = {
-    val e = und.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
-    val oriented = e
-      .join(deg.select(col("n").as("u"), col("d").as("_du")), Seq("u"))
-      .join(deg.select(col("n").as("v"), col("d").as("_dv")), Seq("v"))
-      .select(
-        when(col("_du") < col("_dv") ||
-          (col("_du") === col("_dv") && col("u") < col("v")),
-          struct(col("u").as("src"), col("v").as("dst")))
-          .otherwise(struct(col("v").as("src"), col("u").as("dst")))
-          .as("_e"))
-      .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-    val wedges = oriented.as("a")
-      .join(oriented.as("b"),
-        col("a.src") === col("b.src") && col("a.dst") < col("b.dst"))
-      .select(col("a.src").as("apex"), col("a.dst").as("x"),
-        col("b.dst").as("y"))
-    val tris = wedges.join(e,
-      wedges("x") === e("u") && wedges("y") === e("v"))
-    val out = tris
-      .select(explode(array(
-        struct(least(col("apex"), col("x")).as("u"),
-          greatest(col("apex"), col("x")).as("v")),
-        struct(least(col("apex"), col("y")).as("u"),
-          greatest(col("apex"), col("y")).as("v")),
-        struct(col("x").as("u"), col("y").as("v")))).as("_t"))
-      .select(col("_t.u").as("u"), col("_t.v").as("v"))
-      .groupBy(col("u"), col("v"))
-      .agg(count(lit(1)).as("support"))
-    // eager checkpoint BEFORE the unpersist: the support frame must
-    // materialize while the edge set is still cached (it feeds three
-    // joins above), and the caller loops on it
-    val sealed_ = out.localCheckpoint(true)
-    e.unpersist(false)
-    sealed_
+    wedges.join(und, wedges("x") === und("u") && wedges("y") === und("v"))
   }
 
   /** Bounded-round k-TRUSS peel (beyond-parity): `rounds` iterations of
@@ -129,12 +120,7 @@ object Triangles {
   def kTrussPeel(pairs: DataFrame, idA: String, idB: String,
                  k: Int, rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1, s"bad params k=$k rounds=$rounds")
-    var edges = pairs
-      .select(least(col(idA), col(idB)).as("u"),
-        greatest(col(idA), col(idB)).as("v"))
-      .filter(col("u") < col("v"))
-      .distinct()
-      .transform(Frames.truncate)
+    var edges = canonical(pairs, idA, idB).transform(Frames.truncate)
     for (_ <- 1 to rounds) {
       val keep = edgeSupport(edges).filter(col("support") >= k - 2)
         .select(col("u"), col("v"))
@@ -162,12 +148,7 @@ object Triangles {
     def degrees(e: DataFrame): DataFrame =
       e.select(explode(array(col("u"), col("v"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-    var edges = pairs
-      .select(least(col(idA), col(idB)).as("u"),
-        greatest(col(idA), col(idB)).as("v"))
-      .filter(col("u") < col("v"))
-      .distinct()
-      .transform(Frames.truncate)
+    var edges = canonical(pairs, idA, idB).transform(Frames.truncate)
     for (_ <- 1 to rounds) {
       val keep = degrees(edges).filter(col("degree") >= k)
         .select(col("node"))

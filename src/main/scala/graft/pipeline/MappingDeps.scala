@@ -11,36 +11,52 @@ import graft.schema._
   * cost, and table-level change times are exactly what a CDC feed (or dump
   * directory mtimes) provides.
   *
-  * Correctness stance: the analysis must never be stale — when in doubt it
-  * over-approximates (collectors depend on every label; an unmatched table
-  * yields `None`, which the gate treats as "run").
+  * Correctness stance: the analysis must never be stale — every table an
+  * index's translation reads is in its set (MappingDepsSpec records the
+  * Translator's reads to hold this), and an unmatched table yields `None`,
+  * which the gate treats as "run".
   */
 object MappingDeps {
 
   /** Node labels an index reads, post-`resolveMapping` (paths are label
-    * sequences by then). Aggregators are exact: root + every parent-chain /
-    * flatten / aggregation / nested path step + (transitively) everything a
-    * `joining_props` producer index reads. Collectors are conservatively
-    * "every label": the injection walk may traverse any ancestor path from
-    * any node of the collected category. */
+    * sequences by then), plus (transitively) everything its
+    * `joining_props` producer indices read. An aggregator reads its root
+    * and every parent-chain / flatten / aggregation / nested path step.
+    * A collector reads the leaves of its category and every label on
+    * every ancestor path from a leaf to an injected label — the declared
+    * ones and the Gen3 program/project auto-injections — exactly the
+    * walks `Translator.translateCollector` makes. */
   def nodeLabels(schema: GraphSchema, mapping: EtlMapping,
-                 m: IndexMapping, seen: Set[String] = Set.empty): Set[String] =
-    if (m.kind == "collector") schema.nodes.map(_.label).toSet
-    else {
-      def nested(nd: NestedDef): Seq[String] =
-        nd.path ++ nd.children.flatMap(nested)
-      val own = Set(m.root) ++
+                 m: IndexMapping, seen: Set[String] = Set.empty): Set[String] = {
+    def nested(nd: NestedDef): Seq[String] =
+      nd.path ++ nd.children.flatMap(nested)
+    def collected(inj: InjectionDef): Seq[String] = {
+      val leaves = schema.nodes.filter(_.category == inj.category)
+        .map(_.label)
+      val injected = inj.injectingProps.keySet ++
+        Translator.autoInjections(schema).map(_._1)
+      leaves ++ (for {
+        leaf <- leaves
+        anc <- injected
+        path <- schema.ancestorPaths(leaf, anc)
+      } yield path).flatten
+    }
+    // a collector with no injection fails to translate; its empty set
+    // keeps it on the gate's always-run path
+    val own: Set[String] =
+      if (m.kind == "collector") m.injection.toSeq.flatMap(collected).toSet
+      else Set(m.root) ++
         m.parentProps.flatMap(_.steps.map(_.label)) ++
         m.flattenProps.map(_.path) ++
         m.aggregatedProps.flatMap(_.path) ++
         m.nestedProps.flatMap(nested)
-      val joined = m.joiningProps.flatMap { j =>
-        if (seen(j.otherIndex)) Nil
-        else mapping.indices.find(_.name == j.otherIndex).toSeq.flatMap(o =>
-          nodeLabels(schema, mapping, o, seen + m.name + j.otherIndex))
-      }
-      own ++ joined
+    val joined = m.joiningProps.flatMap { j =>
+      if (seen(j.otherIndex)) Nil
+      else mapping.indices.find(_.name == j.otherIndex).toSeq.flatMap(o =>
+        nodeLabels(schema, mapping, o, seen + m.name + j.otherIndex))
     }
+    own ++ joined
+  }
 
   /** Source table names (dump directory names) an index depends on: one
     * node table per dependency label plus every edge table BOTH of whose

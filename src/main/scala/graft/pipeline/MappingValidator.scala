@@ -37,16 +37,6 @@ object MappingValidator {
   private def hasLink(schema: GraphSchema, child: String, parent: String): Boolean =
     schema.links.exists(l => l.child == child && l.parent == parent)
 
-  /** The Gen3 auto-injection pairs a collector gets (mirrors
-    * Translator.translateCollector's autoInj condition exactly). */
-  private def gen3AutoInj(schema: GraphSchema): Seq[(String, String)] =
-    Seq(("program", "program_name", "name"),
-        ("project", "project_code", "code")).collect {
-      case (l, n, src)
-          if schema.nodes.exists(nd => nd.label == l && nd.props.contains(src)) =>
-        (l, n)
-    }
-
   /** A collector's injected output names, auto-injections included. */
   private def injectedNames(schema: GraphSchema, m: IndexMapping): Seq[String] =
     m.injection.toSeq.flatMap { inj =>
@@ -55,9 +45,10 @@ object MappingValidator {
       // ancestor label already declares that name — a same-named prop
       // under a DIFFERENT label still collides at runtime, so it must
       // still count here
-      val auto = gen3AutoInj(schema).collect {
-        case (l, n)
-            if !inj.injectingProps.getOrElse(l, Nil).exists(_.name == n) => n
+      val auto = Translator.autoInjections(schema).collect {
+        case (l, p)
+            if !inj.injectingProps.getOrElse(l, Nil).exists(_.name == p.name) =>
+          p.name
       }
       declared ++ auto
     }
@@ -110,7 +101,8 @@ object MappingValidator {
         // project_id is synthesized only when BOTH Gen3 auto-injections
         // apply (Translator.translateCollector gates on autoInj.length==2)
         Set("source_node") ++
-          (if (gen3AutoInj(schema).length == 2) Set("project_id") else Nil)
+          (if (Translator.autoInjections(schema).length == 2) Set("project_id")
+           else Nil)
       else Set.empty[String]
     declaredOutNames(schema, m).toSet ++ synthetics + id
   }

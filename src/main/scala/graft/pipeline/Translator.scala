@@ -374,15 +374,7 @@ final class Translator private (schema: GraphSchema, source: GraphSource,
     // project.code (auto-added when absent from injecting_props) and
     // synthesize project_id from them — injection/parser.py:136-173,
     // injection/new_translator.py:112-127
-    val autoInj = Seq(
-      "program" -> PropDef("program_name", "name"),
-      "project" -> PropDef("project_code", "code")
-    ).filter { case (l, p) =>
-      // only on Gen3-shaped graphs: the node must exist AND declare the
-      // source prop (a non-Gen3 graph with an unrelated `project` label
-      // must not be forced into the convention)
-      schema.nodes.exists(n => n.label == l && n.props.contains(p.src))
-    }
+    val autoInj = Translator.autoInjections(schema)
     val injProps: Map[String, Seq[PropDef]] =
       autoInj.foldLeft(inj.injectingProps) { case (acc, (label, p)) =>
         val existing = acc.getOrElse(label, Nil)
@@ -419,7 +411,7 @@ final class Translator private (schema: GraphSchema, source: GraphSource,
       // the same way (injection/new_translator.py:72-110 full_outer
       // merges).
       val paths = injProps.toSeq.flatMap { case (anc, props) =>
-        val pls = ancestorPaths(leaf, anc)
+        val pls = schema.ancestorPaths(leaf, anc)
         if (pls.isEmpty) Nil else Seq((anc, props, pls))
       }
       def singleHops(pl: Seq[String]): Boolean = pl.sliding(2).forall {
@@ -522,24 +514,22 @@ final class Translator private (schema: GraphSchema, source: GraphSource,
             element_at(col("project_code"), 1))))
     else unioned
   }
-
-  /** ALL simple child→parent label paths from `from` up to `target` —
-    * every structural route can carry data (schemas are DAG-ish; `maxLen`
-    * caps pathological cases). Each result starts at `from` and ends at
-    * `target`. */
-  private def ancestorPaths(from: String, target: String,
-                            maxLen: Int = 8): Seq[Seq[String]] = {
-    def rec(cur: String, seen: Set[String],
-            acc: List[String]): Seq[Seq[String]] =
-      if (cur == target) Seq(acc.reverse)
-      else if (acc.length > maxLen) Nil
-      else schema.parentsOf(cur).map(_.parent).filterNot(seen)
-        .flatMap(p => rec(p, seen + p, p :: acc))
-    rec(from, Set(from), List(from))
-  }
 }
 
 object Translator {
+
+  /** The (ancestor label, prop) pairs every collector injects besides its
+    * declared ones: program.name as `program_name` and project.code as
+    * `project_code`. Only on Gen3-shaped graphs: the node must exist AND
+    * declare the source prop (a non-Gen3 graph with an unrelated
+    * `project` label must not be forced into the convention). */
+  private[pipeline] def autoInjections(
+      schema: GraphSchema): Seq[(String, PropDef)] = Seq(
+    "program" -> PropDef("program_name", "name"),
+    "project" -> PropDef("project_code", "code")
+  ).filter { case (l, p) =>
+    schema.nodes.exists(n => n.label == l && n.props.contains(p.src))
+  }
 
   /** The frames the last [[runAll]] persisted. They stay cached while
     * that run's documents (lazy, reading them) are published, and are

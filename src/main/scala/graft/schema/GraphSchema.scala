@@ -40,7 +40,20 @@ final case class GraphSchema(nodes: Seq[NodeDef], links: Seq[LinkDef]) {
     links.find(l => l.child == child && l.parent == parent).getOrElse(
       throw new NoSuchElementException(s"edge $child->$parent"))
   def parentsOf(child: String): Seq[LinkDef] = links.filter(_.child == child)
-  def childrenOf(parent: String): Seq[LinkDef] = links.filter(_.parent == parent)
+  /** ALL simple child→parent label paths from `from` up to `target` —
+    * every structural route can carry data (schemas are DAG-ish; `maxLen`
+    * caps pathological cases). Each result starts at `from` and ends at
+    * `target`. */
+  def ancestorPaths(from: String, target: String,
+                    maxLen: Int = 8): Seq[Seq[String]] = {
+    def rec(cur: String, seen: Set[String],
+            acc: List[String]): Seq[Seq[String]] =
+      if (cur == target) Seq(acc.reverse)
+      else if (acc.length > maxLen) Nil
+      else parentsOf(cur).map(_.parent).filterNot(seen)
+        .flatMap(p => rec(p, seen + p, p :: acc))
+    rec(from, Set(from), List(from))
+  }
   /** doc-key column name for a label — reference injects `_{label}_id`
     * (tube/etl/indexers/base/translator.py:160-168). */
   def idCol(label: String): String = s"_${label}_id"

@@ -107,4 +107,14 @@ class PageRankSpec extends SparkSpec {
     val share = 15L * 1000000000000L * 4 / 100 / 2
     assert(got === Map("a" -> share, "b" -> 0L, "c" -> share, "d" -> 0L))
   }
+
+  test("personalized: bit-identical across partitionings") {
+    val e = undirected(("a", "b"), ("b", "c"), ("c", "d"), ("a", "d"),
+      ("a", "c"), ("d", "e"))
+    // five rounds: the every-4th-round truncation runs once mid-loop
+    def ppr(parts: Int) = PageRank.runPersonalized(e.repartition(parts),
+        "src", "dst", iters = 5, seeds = Seq("a", "e"))
+      .as[(String, Long)].collect().toMap
+    assert(ppr(1) === ppr(8))
+  }
 }

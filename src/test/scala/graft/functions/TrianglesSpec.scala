@@ -114,4 +114,25 @@ class TrianglesSpec extends SparkSpec {
     assert(got.keySet === k4.toSet)
     assert(got.values.toSet === Set(2L))
   }
+
+  test("on a random graph, node counts and edge supports both sum to 3 × " +
+      "the triangles found by brute force") {
+    val rnd = new scala.util.Random(17)
+    val und = (for {
+      a <- 0L until 24L; b <- (a + 1) until 24L if rnd.nextDouble() < 0.3
+    } yield (a, b)).toSet
+    val found = for {
+      (a, b) <- und.toSeq; c <- (b + 1) until 24L
+      if und((a, c)) && und((b, c))
+    } yield Seq((a, b), (a, c), (b, c))
+    val triangles = found.size
+    // at this density many edges close several triangles
+    assert(found.flatten.groupBy(identity).count(_._2.size >= 2) > 10)
+    // perNode sees each edge twice, once reversed
+    val pairs = und.toSeq.flatMap(e => Seq(e, e.swap))
+    assert(counts(pairs).values.sum === 3L * triangles)
+    val support = Triangles.edgeSupport(und.toSeq.toDF("u", "v"))
+      .collect().map(_.getLong(2)).sum
+    assert(support === 3L * triangles)
+  }
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.file.Files
 import graft.SparkSpec
 import graft.schema._
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 
 /** Per-index CDC dependency analysis + the table-granular incremental gate
   * end-to-end: change one subgraph's dump → only the dependent index
@@ -61,11 +62,10 @@ class MappingDepsSpec extends SparkSpec {
       Set("node_device"))
   }
 
-  test("collectors conservatively depend on every label") {
+  test("collectors depend only on their leaves and injection paths") {
     val coll = idx("device_index").copy(kind = "collector",
       injection = Some(InjectionDef("data", Map.empty)))
-    assert(MappingDeps.nodeLabels(schema, mapping, coll) ===
-      Set("person", "study", "device"))
+    assert(MappingDeps.nodeLabels(schema, mapping, coll) === Set("device"))
   }
 
   test("joining_props consumers inherit producer deps transitively; " +
@@ -174,5 +174,86 @@ class MappingDepsSpec extends SparkSpec {
     assert(graft.sinks.EsControl.restore(client, "person_index") ===
       Some("person_index_5"))
     assert(client.aliasTargets("person_index") === Seq("person_index_5"))
+  }
+
+  // Gen3-shaped graph: program ← project ← subject ← sample ← aliquot ←
+  // file, plus a second route file → project; center hangs off program
+  // and device (a second data leaf) is unconnected
+  private val gen3 = GraphSchema(
+    nodes = Seq(
+      NodeDef("program", "program", Map("name" -> StringType), "admin"),
+      NodeDef("project", "project",
+        Map("code" -> StringType, "pname" -> StringType), "admin"),
+      NodeDef("center", "center", Map("cname" -> StringType), "admin"),
+      NodeDef("subject", "subject", Map("age" -> LongType), "clinical"),
+      NodeDef("sample", "sample", Map("tissue" -> StringType), "biospec"),
+      NodeDef("aliquot", "aliquot", Map("vol" -> LongType), "biospec"),
+      NodeDef("file", "file", Map("size" -> LongType), "data"),
+      NodeDef("device", "device", Map("model" -> StringType), "data")),
+    links = Seq(
+      LinkDef("project", "program", "e_project_program"),
+      LinkDef("center", "program", "e_center_program"),
+      LinkDef("subject", "project", "e_subject_project"),
+      LinkDef("sample", "subject", "e_sample_subject"),
+      LinkDef("aliquot", "sample", "e_aliquot_sample"),
+      LinkDef("file", "aliquot", "e_file_aliquot"),
+      LinkDef("file", "project", "e_file_project")))
+
+  private val gen3Mapping = EtlMapping(Seq(
+    IndexMapping(name = "subject_docs", docType = "subject", root = "subject",
+      props = Seq(PropDef("age", "age")),
+      parentProps = Seq(ParentChainDef(Seq(
+        PathStep("project", Seq(PropDef("project_name", "pname"))),
+        PathStep("program", Seq(PropDef("program_name", "name")))),
+        relation = "1-1")),
+      aggregatedProps = Seq(
+        AggregatedPropDef("aliquots", Seq("sample", "aliquot"), None, "count")),
+      nestedProps = Seq(NestedDef("samples", Seq("sample"),
+        Seq(PropDef("tissue", "tissue")),
+        children = Seq(NestedDef("aliquots", Seq("aliquot"),
+          Seq(PropDef("vol", "vol"))))))),
+    IndexMapping(name = "project_docs", docType = "project", root = "project",
+      props = Seq(PropDef("project_name", "pname"), PropDef("code", "code")),
+      joiningProps = Seq(JoiningDef("subject_docs", Seq("project_name"),
+        Seq(PropDef("ages", "age", fn = Some("set")))))),
+    IndexMapping(name = "center_docs", docType = "center", root = "center",
+      props = Seq(PropDef("cname", "cname"))),
+    IndexMapping(name = "files", docType = "files", root = "file",
+      kind = "collector", props = Seq(PropDef("size", "size")),
+      injection = Some(InjectionDef("data",
+        Map("subject" -> Seq(PropDef("subject_ages", "age")),
+          "project" -> Seq(PropDef("project_names", "pname"))))))))
+
+  test("every table a translation reads is in its index's MappingDeps.tables") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StructField, StructType}
+    def empty(cols: Seq[(String, DataType)]) = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row],
+      StructType(cols.map { case (n, t) => StructField(n, t) }))
+    val read = scala.collection.mutable.Set[String]()
+    val recording = new GraphSource(
+      l => read.synchronized {
+        read += s"node_${gen3.node(l).tableName}"
+        empty((gen3.idCol(l) -> StringType) +: gen3.node(l).props.toSeq)
+      },
+      (c, p) => read.synchronized {
+        read += gen3.linksOf(c, p).edgeTable
+        empty(Seq(gen3.idCol(c) -> StringType, gen3.idCol(p) -> StringType))
+      })
+    gen3Mapping.indices.foreach { m =>
+      read.clear()
+      // a consumer publishes after joining its producers' fresh documents
+      val translator = new Translator(gen3, recording)
+      MappingDeps.producerClosure(gen3Mapping, Set(m.name)).foreach(n =>
+        translator.translate(gen3Mapping.indices.find(_.name == n).get))
+      val deps = MappingDeps.tables(gen3, gen3Mapping, m)
+      assert(read.nonEmpty, m.name)
+      assert((read.toSet -- deps).isEmpty, s"${m.name} reads outside $deps")
+    }
+    // the collector's set is exact: both routes to project, program
+    // through the auto-injection, and nothing off its walks
+    val files = gen3Mapping.indices.find(_.name == "files").get
+    assert(MappingDeps.nodeLabels(gen3, gen3Mapping, files) === Set("file",
+      "device", "aliquot", "sample", "subject", "project", "program"))
   }
 }
