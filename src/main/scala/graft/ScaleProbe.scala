@@ -203,7 +203,7 @@ object ScaleProbe {
           .select(col("p_partkey"), col("p_brand"))
         def alphaOf(li: org.apache.spark.sql.DataFrame) =
           functions.Preference.krippendorffAlpha(
-            SparkEntry.promptComparisonsFrom(li, pt).select(col("w"),
+            queries.CorpusQueries.promptComparisonsFrom(li, pt).select(col("w"),
               col("l")), "w", "l")
         def exchanges(df: org.apache.spark.sql.DataFrame): Int =
           "Exchange hashpartitioning".r

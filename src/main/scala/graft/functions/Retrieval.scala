@@ -170,7 +170,7 @@ object QueryLikelihood {
   * (term, doc) — bounded by a document's length, never concatenated
   * across docs. The delta encode is `zip_with` against the list's own
   * 1-shifted self — HOF ARGUMENTS, evaluated once per row (the
-  * CollapseProject re-evaluation trap documented in TODO.md). */
+  * CollapseProject re-evaluation trap documented in SCALE.md). */
 object Postings {
 
   /** Build gap-encoded positional postings for terms whose document

@@ -167,14 +167,4 @@ object EsPublisher {
       try reader.getRecordCount finally reader.close()
     }.sum
   }
-
-  /** `publish` preceded by a backup of the outgoing live index into the
-    * `{alias}_backup`-tagged `{v}_{alias}` index — rollback-ready publish.
-    * Returns (backup index if one was taken, new live index). */
-  def publishWithBackup(client: FsEsClient, alias: String, docs: DataFrame,
-                        docType: String, nowMillis: Long,
-                        keep: Int = 1): (Option[String], String) = {
-    val b = EsControl.backup(client, alias)
-    (b, publish(client, alias, docs, docType, nowMillis, keep))
-  }
 }

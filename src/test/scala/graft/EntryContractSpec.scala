@@ -1,13 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.QuerySpec
 
-/** Driver-contract guards for SparkEntry: every oracle points at a real
-  * query, and the SOURCE text declares each query/oracle key exactly once
-  * — a Scala Map literal silently keeps the last duplicate, so a repeated
-  * key would swap in a different query under an existing name with no
-  * compile error (it happened: a second `text_repetition` shadowed the
-  * first until this scan existed). */
+/** Driver-contract guards for the SparkEntry registry: every oracle points
+  * at a real query, and each query name is declared once — the by-name
+  * index rejects a repeated name instead of letting one declaration
+  * silently replace another. */
 class EntryContractSpec extends AnyFunSuite {
 
   test("every oracleSql key has a queries entry and vice versa") {
@@ -18,25 +17,18 @@ class EntryContractSpec extends AnyFunSuite {
       s"oracle or document why): ${(q -- o).toSeq.sorted}")
   }
 
-  test("SparkEntry source declares each query and oracle key exactly once") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")), "UTF-8")
-    val qKeys = """"([a-z0-9_]+)" -> \(\(s, dir\)""".r
-      .findAllMatchIn(src).map(_.group(1)).toSeq
-    val qDups = qKeys.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }
-    assert(qDups.isEmpty, s"duplicate query keys (last silently wins): $qDups")
-    assert(qKeys.size == SparkEntry.queries.size,
-      s"source declares ${qKeys.size} queries, map holds ${SparkEntry.queries.size}")
-    // oracle keys last-win just as silently: every oracle key must be
-    // declared as `"key" ->` exactly TWICE in the source — once in
-    // queries, once in oracleSql. A third arrow declaration means a
-    // duplicate oracle entry is shadowing (or being shadowed by) another.
-    val arrowKeys = """"([a-z0-9_]+)" ->""".r
-      .findAllMatchIn(src).map(_.group(1)).toSeq
-      .groupBy(identity).view.mapValues(_.size).toMap
-    val bad = SparkEntry.oracleSql.keySet.toSeq.sorted
-      .filter(k => arrowKeys.getOrElse(k, 0) != 2)
-    assert(bad.isEmpty, s"oracle keys not declared exactly twice " +
-      s"(query + oracle): ${bad.map(k => s"$k=${arrowKeys(k)}")}")
+  test("registry holds each query name once and rejects a duplicate") {
+    val names = SparkEntry.all.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"repeated names: ${names.diff(names.distinct).distinct.sorted}")
+    assert(SparkEntry.all.size == SparkEntry.queries.size)
+    assert(SparkEntry.queries.size == SparkEntry.oracleSql.size)
+    val blank = SparkEntry.all.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"blank oracles: $blank")
+    def spec(name: String) = QuerySpec(name, (s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.index(Seq(spec("dup_a"), spec("kept_b"), spec("dup_a"))))
+    assert(e.getMessage.contains("dup_a"))
+    assert(!e.getMessage.contains("kept_b"))
   }
 }

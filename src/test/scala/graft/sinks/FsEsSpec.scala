@@ -68,8 +68,10 @@ class FsEsSpec extends SparkSpec {
     val v0 = EsPublisher.publish(es, "subject", docs, "subject", 1000L)
     assert(v0 === "subject_0")
 
-    // v2 with backup: a (bad) publish that drops a document
-    val (bk, v1) = EsPublisher.publishWithBackup(es, "subject",
+    // v2 with backup, as `RunEtl.run --backup` publishes: back up the
+    // outgoing live index, then a (bad) publish that drops a document
+    val bk = EsControl.backup(es, "subject")
+    val (v1, _) = EsPublisher.publishCounted(es, "subject",
       docs.limit(1), "subject", nowMillis = 2000L)
     assert(bk === Some("0_subject"))
     assert(v1 === "subject_1")
