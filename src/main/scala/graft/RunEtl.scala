@@ -110,8 +110,9 @@ object RunEtl {
   /** Argv+env input resolution (reference settings.py:36-39, 96-100 env
     * parity): four positional args are authoritative; with only
     * `<dumpsDir> <outDir>` given, the schema comes from `DICTIONARY_URL`
-    * (plain path or file:// URI) and the mapping from the first
-    * `etlMapping.yaml` on the reference's config search path
+    * (plain path or file:// URI; any other scheme is an error) and the
+    * mapping from the first `etlMapping.yaml` on the reference's config
+    * search path
     * (`$XDG_DATA_HOME/gen3/tube` etc.) — so the reference's deployment
     * scripts drive this entry point without argument changes. `folders`
     * overrides the search path for tests. */
@@ -120,9 +121,8 @@ object RunEtl {
       : (String, String, String, String) = positional match {
     case Seq(s, m, d, o, _*) => (s, m, d, o)
     case Seq(d, o) =>
-      val schema = Settings.dictionaryUrl(env).map(Settings.asLocalPath)
-        .getOrElse(sys.error(
-          "no schema.json: pass it positionally or set DICTIONARY_URL"))
+      val schema = Settings.dictionaryPath(env).getOrElse(sys.error(
+        "no schema.json: pass it positionally or set DICTIONARY_URL"))
       val mapping = Settings.findPath("etlMapping.yaml", "tube", env, folders)
         .getOrElse(sys.error(
           "no etlMapping.yaml: pass it positionally or place it on the " +

@@ -16,14 +16,18 @@ import org.apache.spark.sql.SparkSession
   * round where AQE's post-shuffle coalescing cannot reach them. */
 object Sessions {
 
-  /** `SPARK_GRAFT_CPUS` if set, else `availableProcessors`; a value that
-    * is not a positive integer is an error that names it. */
+  /** `SPARK_GRAFT_CPUS` if set, else `availableProcessors`. */
   def defaultCores(env: Map[String, String] = sys.env): Int =
-    env.get("SPARK_GRAFT_CPUS").filter(_.nonEmpty) match {
-      case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse(
+    positiveIntEnv(env, "SPARK_GRAFT_CPUS")
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The engine's integer env knobs: unset or empty is `None`; a value
+    * that is not a positive integer is an error that names the variable. */
+  def positiveIntEnv(env: Map[String, String], name: String): Option[Int] =
+    env.get(name).filter(_.nonEmpty).map { v =>
+      v.toIntOption.filter(_ >= 1).getOrElse(
         throw new IllegalArgumentException(
-          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
-      case None => Runtime.getRuntime.availableProcessors
+          s"$name must be a positive integer, got '$v'"))
     }
 
   /** The engine's conf on `master` (default `local[cores]`). */

@@ -9,7 +9,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * from, in precedence order, environment variables, a `creds.json` found
   * on the reference's config search path, then the reference's defaults —
   * so the engine drops into a deployment driven by the reference's
-  * env-var conventions (DB_*, ES_*, DICTIONARY_URL, SPARK_*) unchanged.
+  * env-var conventions (DB_*, DICTIONARY_URL, SPARK_*) unchanged.
   *
   * Everything is a pure function over an injected env map, so specs cover
   * every precedence rule without touching the process environment; callers
@@ -79,48 +79,18 @@ object Settings {
         creds.get("db_use_ssl").exists(isTruthy))
   }
 
-  /** Elasticsearch/OpenSearch connection settings (settings.py:40-77):
-    * SSL turns on via the env flag OR port 443; basic auth only when both
-    * user and password are present. `sparkConfig` is the es-hadoop
-    * DataSource option map (`ES_SPARK_CONFIG`) EsSink passes through. */
-  final case class Es(url: String, port: String, useSsl: Boolean,
-                      authUser: Option[String], authPass: Option[String]) {
-    def sparkConfig: Map[String, String] = {
-      val base = Map(
-        "es.nodes" -> url,
-        "es.port" -> port,
-        "es.net.ssl" -> useSsl.toString,
-        "es.nodes.client.only" -> "false",
-        "es.nodes.discovery" -> "false",
-        "es.nodes.data.only" -> "false",
-        "es.nodes.wan.only" -> "true")
-      (authUser, authPass) match {
-        case (Some(u), Some(p)) => base ++ Map(
-          "es.net.http.auth.user" -> u, "es.net.http.auth.pass" -> p)
-        case _ => base
-      }
+  /** DICTIONARY_URL (settings.py:36-39) as a local path: a plain path, or
+    * a `file://` URI stripped to its path. The engine reads the dictionary
+    * from local files only, so any other scheme (HTTP(S) in a reference
+    * deployment) is an error naming the variable and the value. */
+  def dictionaryPath(env: Map[String, String]): Option[String] =
+    env.get("DICTIONARY_URL").filter(_.nonEmpty).map {
+      case u if u.startsWith("file://") => u.stripPrefix("file://")
+      case u if u.contains("://") =>
+        throw new IllegalArgumentException(
+          s"DICTIONARY_URL must be a local path or a file:// URI, got '$u'")
+      case u => u
     }
-  }
-
-  def es(env: Map[String, String]): Es = {
-    val port = env.getOrElse("ES_PORT", "9200")
-    Es(
-      url = env.getOrElse("ES_URL", "esproxy-service"),
-      port = port,
-      useSsl = env.get("ES_USE_SSL").exists(isTruthy) || port == "443",
-      authUser = env.get("ES_AUTH_USERNAME").filter(_.nonEmpty),
-      authPass = env.get("ES_AUTH_PASSWORD").filter(_.nonEmpty))
-  }
-
-  /** DICTIONARY_URL (settings.py:36-39). A deployment points this at the
-    * data-dictionary schema.json; a plain path or `file://` URI loads
-    * locally (the only mode exercisable without egress). */
-  def dictionaryUrl(env: Map[String, String]): Option[String] =
-    env.get("DICTIONARY_URL").filter(_.nonEmpty)
-
-  /** Strip a `file://` scheme down to the filesystem path. */
-  def asLocalPath(url: String): String =
-    if (url.startsWith("file://")) url.stripPrefix("file://") else url
 
   /** Spark tuning (settings.py:103-105): master defaults to the engine's
     * local[N], N from [[Sessions.defaultCores]] (reference default is

@@ -366,7 +366,6 @@ object EventAnalytics {
                eventId: String, typeCol: String, gapUs: Long, maxLen: Int,
                topK: Int): DataFrame = {
     require(gapUs > 0 && maxLen >= 1 && topK >= 1, "bad params")
-    val w = Window.partitionBy(col(userId)).orderBy(tsUs, col(eventId))
     val sess = events
       .select(col(userId).as("_u"), tsUs.as("_ts"), col(eventId).as("_eid"),
         col(typeCol).as("_ty"))

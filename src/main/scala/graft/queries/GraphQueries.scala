@@ -132,8 +132,7 @@ object GraphQueries {
     * integer half-rounds unrolled — raw sums over the directed edges,
     * COALESCE 0 for sink/source-less nodes, rescale by a scalar-subquery
     * max exactly as the engine's broadcast 1-row max. */
-  private def hitsSqlOver(edgeCtes: String,
-                          nodeAlias: String = "node"): String = {
+  private def hitsSqlOver(edgeCtes: String, nodeAlias: String): String = {
     val base = edgeCtes + ", " +
       "hn AS (SELECT src AS node FROM e UNION SELECT dst FROM e), " +
       "h0 AS (SELECT node, CAST(1000000000000 AS HUGEINT) AS h FROM hn), "

@@ -38,20 +38,6 @@ object DictionaryLoader {
     fromDict(mapper.readValue(json, classOf[ju.Map[String, Object]]).asScala.toMap)
   }
 
-  /** Dictionary over HTTP(S)/file URL — the reference deployment's
-    * `DICTIONARY_URL` input (tube/utils/dd.py:4-11). Driver-side, one small
-    * JSON fetch; same parse as `loadFile`. */
-  def loadUrl(url: String, timeoutMs: Int = 30000): GraphSchema = {
-    val conn = java.net.URI.create(url).toURL.openConnection()
-    // default URLConnection timeouts are INFINITE — an unresponsive
-    // dictionary host would hang the driver at startup forever
-    conn.setConnectTimeout(timeoutMs)
-    conn.setReadTimeout(timeoutMs)
-    val in = conn.getInputStream
-    try fromJsonString(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-    finally in.close()
-  }
-
   /** Build a GraphSchema from a parsed dictionary: key = schema file name
     * (`participant.yaml`), value = that node's JSON-Schema object. Files
     * starting with `_` (`_definitions.yaml`, `_terms.yaml`, `_settings.yaml`)

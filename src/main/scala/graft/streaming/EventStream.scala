@@ -14,46 +14,8 @@ import org.apache.spark.sql.types.StructType
   * partitioning on (window, event_type) distributes state across
   * executors.
   */
-/** Where a stream comes from. The transforms below are source-agnostic;
-  * only `load` differs between a file drop-zone, Kafka, or anything else
-  * `readStream` supports. This environment ships no Kafka broker or
-  * connector, so the file source is the tested implementation and
-  * `KafkaStreamSource` documents the exact drop-in. */
-trait StreamSource {
-  /** A streaming DataFrame with the event schema (must include `ts`). */
-  def load(spark: SparkSession): DataFrame
-}
-
-/** File drop-zone source: new parquet files under `dir` matching `glob`
-  * become micro-batches — the standard landing-area pattern. */
-final class FileStreamSource(dir: String, glob: String, schema: StructType)
-    extends StreamSource {
-  def load(spark: SparkSession): DataFrame =
-    EventStream.normalizeTs(EventStream.streamRead(spark, dir, glob, schema))
-}
-
-/** Kafka source: requires the `spark-sql-kafka` connector on the classpath
-  * and a reachable broker (neither exists in this environment — untested
-  * here by necessity, kept minimal). Event payloads are JSON in `value`. */
-final class KafkaStreamSource(bootstrapServers: String, topic: String,
-                              payloadSchema: StructType) extends StreamSource {
-  def load(spark: SparkSession): DataFrame =
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("subscribe", topic)
-      .load()
-      .select(from_json(col("value").cast("string"),
-        payloadSchema).alias("_e"))
-      .select(col("_e.*"))
-}
-
 object EventStream {
 
-  /** Parquet INT64 TIMESTAMP(NANOS) columns aren't a Spark type; with
-    * `spark.sql.legacy.parquet.nanosAsLong=true` they read as long
-    * nanoseconds. This shim restores a proper TimestampType (micros) `ts`
-    * so all window/watermark logic is type-correct. No-op when `ts` is
-    * already a timestamp. */
   /** Streaming read of a drop-zone: `glob` names either loose files in
     * `dir` (the landing-area shape) or a table DIRECTORY (a Spark-written
     * dataset of part files). `pathGlobFilter` matches LEAF file names
@@ -81,6 +43,19 @@ object EventStream {
       .option("pathGlobFilter", glob).parquet(dir)
   }
 
+  /** The drop-zone read the drains below start from: [[streamRead]] with
+    * `ts` made a TIMESTAMP by [[normalizeTs]]. (The ingest screen reads
+    * through [[streamRead]] alone; it synthesizes its own `ts`.) */
+  private[streaming] def readDropZone(spark: SparkSession, dir: String,
+                                      glob: String,
+                                      schema: StructType): DataFrame =
+    normalizeTs(streamRead(spark, dir, glob, schema))
+
+  /** Parquet INT64 TIMESTAMP(NANOS) columns aren't a Spark type; with
+    * `spark.sql.legacy.parquet.nanosAsLong=true` they read as long
+    * nanoseconds. This shim restores a proper TimestampType (micros) `ts`
+    * so all window/watermark logic is type-correct. No-op when `ts` is
+    * already a timestamp. */
   def normalizeTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
     case org.apache.spark.sql.types.LongType =>
       // integer `div`, NOT `/`: epoch-nanos (~1.7e18) exceed double's 53-bit
@@ -120,28 +95,6 @@ object EventStream {
         col("n_events"), col("sum_value"), col("n_users"))
   }
 
-  /** Run the windowed aggregation as a real streaming query over a parquet
-    * directory (file source, one-shot drain) into an in-memory sink, and
-    * return the materialized result (latest emission per window). Used by
-    * tests to prove the streaming path; production would aim `writeStream`
-    * at a real sink.
-    *
-    * Update mode + watermark, NOT complete mode: complete mode retains
-    * every window ever seen in state forever — unbounded on a real stream.
-    * With update, state for windows older than the watermark is evicted;
-    * the memory sink then holds one row per emission, so the caller keeps
-    * the latest per (window, type). */
-  def runStreaming(spark: SparkSession, dir: String, glob: String,
-                   schema: StructType, windowLen: String, watermark: String,
-                   queryName: String): DataFrame =
-    runStreaming(spark, new FileStreamSource(dir, glob, schema), windowLen,
-      watermark, queryName)
-
-  def runStreaming(spark: SparkSession, dir: String, glob: String,
-                   schema: StructType, windowLen: String,
-                   watermark: String): DataFrame =
-    runStreaming(spark, dir, glob, schema, windowLen, watermark, "graft_stream")
-
   /** Stateful streaming creates one state store per shuffle partition per
     * batch; the drain harness carries tiny state, so fewer partitions cut
     * pure fixed overhead (~2× on the bench queries going 32→8, and about
@@ -156,17 +109,29 @@ object EventStream {
     * the driver's sf0.1 drain harness, not production. */
   private def withStreamingPartitions[A](spark: SparkSession, n: Int)
                                         (body: => A): A = {
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(_.toInt.max(1)).getOrElse(n)
+    val parts = graft.Sessions.positiveIntEnv(sys.env,
+      "SPARK_GRAFT_STREAM_PARTS").getOrElse(n)
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, parts.toString)
     try body finally spark.conf.set(key, prev)
   }
 
-  def runStreaming(spark: SparkSession, source: StreamSource, windowLen: String,
-                   watermark: String, queryName: String): DataFrame = {
-    val stream = source.load(spark)
+  /** Run the windowed aggregation as a real streaming query over a parquet
+    * directory (file source, one-shot drain) into an in-memory sink, and
+    * return the materialized result (latest emission per window). Used by
+    * tests to prove the streaming path; production would aim `writeStream`
+    * at a real sink.
+    *
+    * Update mode + watermark, NOT complete mode: complete mode retains
+    * every window ever seen in state forever — unbounded on a real stream.
+    * With update, state for windows older than the watermark is evicted;
+    * the memory sink then holds one row per emission, so the caller keeps
+    * the latest per (window, type). */
+  def runStreaming(spark: SparkSession, dir: String, glob: String,
+                   schema: StructType, windowLen: String, watermark: String,
+                   queryName: String = "graft_stream"): DataFrame = {
+    val stream = readDropZone(spark, dir, glob, schema)
     // decimal sum in the streaming state: exact and accumulation-order-free,
     // so a full drain's final emission is bit-comparable with the batch
     // twin (count_distinct stays approximate — exact distinct is
@@ -207,7 +172,7 @@ object EventStream {
                         schema: StructType, watermark: String,
                         keys: Seq[String],
                         queryName: String = "graft_dedup_stream"): DataFrame = {
-    val stream = new FileStreamSource(dir, glob, schema).load(spark)
+    val stream = readDropZone(spark, dir, glob, schema)
     withStreamingPartitions(spark, 2) {
       val q = dedupStream(stream, watermark, keys).writeStream
         .outputMode("append")
@@ -238,7 +203,7 @@ object EventStream {
   def runStreamingEnrich(spark: SparkSession, dir: String, glob: String,
                          schema: StructType, dim: DataFrame, keys: Seq[String],
                          queryName: String = "graft_enrich_stream"): DataFrame = {
-    val stream = new FileStreamSource(dir, glob, schema).load(spark)
+    val stream = readDropZone(spark, dir, glob, schema)
     withStreamingPartitions(spark, 2) {
       val q = enrichStream(stream, dim, keys).writeStream
         .outputMode("append")
@@ -288,7 +253,7 @@ object EventStream {
                                watermark: String,
                                queryName: String = "graft_attrib_stream")
       : DataFrame = {
-    val stream = new FileStreamSource(dir, glob, schema).load(spark)
+    val stream = readDropZone(spark, dir, glob, schema)
     withStreamingPartitions(spark, 2) {
       val q = intervalJoinStream(stream, fromType, toType, withinMinutes,
           watermark).writeStream
@@ -348,13 +313,8 @@ object EventStream {
     * (Update mode) and return the final per-user counts. */
   def runStatefulSessions(spark: SparkSession, dir: String, glob: String,
                           schema: StructType, gapMinutes: Int,
-                          queryName: String = "graft_sessions"): DataFrame =
-    runStatefulSessions(spark, new FileStreamSource(dir, glob, schema),
-      gapMinutes, queryName)
-
-  def runStatefulSessions(spark: SparkSession, source: StreamSource,
-                          gapMinutes: Int, queryName: String): DataFrame = {
-    val stream = source.load(spark)
+                          queryName: String = "graft_sessions"): DataFrame = {
+    val stream = readDropZone(spark, dir, glob, schema)
     withStreamingPartitions(spark, 2) {
       val q = sessionizeStateful(stream, gapMinutes).toDF().writeStream
         .outputMode("update")
@@ -393,8 +353,8 @@ object EventStream {
     * (running counts, Update mode) and batch `sessionize` remain the
     * other two points on the latency/semantics triangle.
     *
-    * Input must carry a watermark on `ts` (EventTimeTimeout requires it) —
-    * `runClosedSessions` wires it. */
+    * Input must carry a watermark on `ts` (EventTimeTimeout requires it);
+    * the caller applies `withWatermark`. */
   def closedSessions(events: DataFrame, gapMinutes: Int)
       : org.apache.spark.sql.Dataset[ClosedSession] = {
     val spark = events.sparkSession
@@ -448,42 +408,6 @@ object EventStream {
       }
   }
 
-  /** Drain `closedSessions` over a file drop-zone (Append-mode memory
-    * sink); each returned row is one finished session. */
-  def runClosedSessions(spark: SparkSession, dir: String, glob: String,
-                        schema: StructType, gapMinutes: Int,
-                        watermark: String,
-                        queryName: String = "graft_closed_sessions")
-      : DataFrame = {
-    val stream = new FileStreamSource(dir, glob, schema).load(spark)
-    withStreamingPartitions(spark, 2) {
-      val q = closedSessions(stream.withWatermark("ts", watermark), gapMinutes)
-        .toDF().writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(queryName)
-  }
-
-  /** Streaming ingest dedup SCREEN — the arrival-time twin of
-    * [[graft.functions.Dedup.ingestDedupReport]]: each new document is
-    * probed on arrival against a PERSISTED static corpus index — the
-    * exact content-fingerprint set (left join ⇒ `exact_dup`) and the
-    * MinHash LSH band-key set (per-row signature + banding, explode,
-    * left join ⇒ any collision = `near_cand`). Both probes are
-    * stream-static equi-joins: stateless, planned per micro-batch
-    * against the cached static side (the [[enrichStream]] pattern). The
-    * per-row signature kernel ([[graft.functions.Dedup.rowMinhashSignature]])
-    * keeps the stream side shuffle-free up to the single stateful op —
-    * the flag-collapse aggregation, a watermarked tumbling window keyed
-    * by doc id, so state is bounded by docs-per-horizon and evicted as
-    * the watermark passes. Flags are monotone (max of booleans), which
-    * makes the screen REDELIVERY-IDEMPOTENT: an at-least-once source
-    * re-dropping a document re-aggregates to the same decision.
-    * Emits (idCol, exact_dup, near_cand) in update mode. */
   /** Build the persisted static corpus index the ingest screen probes:
     * (exact content-fingerprint set, LSH band-key set). Both frames are
     * PERSISTED — micro-batches re-read the static side, so the caller
@@ -508,6 +432,22 @@ object EventStream {
     (oldFp, oldBands)
   }
 
+  /** Streaming ingest dedup SCREEN — the arrival-time twin of
+    * [[graft.functions.Dedup.ingestDedupReport]]: each new document is
+    * probed on arrival against a PERSISTED static corpus index — the
+    * exact content-fingerprint set (left join ⇒ `exact_dup`) and the
+    * MinHash LSH band-key set (per-row signature + banding, explode,
+    * left join ⇒ any collision = `near_cand`). Both probes are
+    * stream-static equi-joins: stateless, planned per micro-batch
+    * against the cached static side (the [[enrichStream]] pattern). The
+    * per-row signature kernel ([[graft.functions.Dedup.rowMinhashSignature]])
+    * keeps the stream side shuffle-free up to the single stateful op —
+    * the flag-collapse aggregation, a watermarked tumbling window keyed
+    * by doc id, so state is bounded by docs-per-horizon and evicted as
+    * the watermark passes. Flags are monotone (max of booleans), which
+    * makes the screen REDELIVERY-IDEMPOTENT: an at-least-once source
+    * re-dropping a document re-aggregates to the same decision.
+    * Emits (idCol, exact_dup, near_cand) in update mode. */
   def ingestScreenStream(newDocs: DataFrame, oldFp: DataFrame,
                          oldBands: DataFrame,
                          idCol: String, textCol: String,

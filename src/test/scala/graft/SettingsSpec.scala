@@ -49,21 +49,6 @@ class SettingsSpec extends AnyFunSuite {
       Map.empty)
   }
 
-  test("es: ssl via flag or port 443; auth only when both halves present") {
-    val e0 = Settings.es(Map.empty)
-    assert(e0.url === "esproxy-service" && e0.port === "9200" && !e0.useSsl)
-    assert(Settings.es(Map("ES_PORT" -> "443")).useSsl)
-    assert(Settings.es(Map("ES_USE_SSL" -> "t")).useSsl)
-    val cfg = Settings.es(Map("ES_URL" -> "es1", "ES_AUTH_USERNAME" -> "u",
-      "ES_AUTH_PASSWORD" -> "p")).sparkConfig
-    assert(cfg("es.nodes") === "es1")
-    assert(cfg("es.net.http.auth.user") === "u")
-    assert(cfg("es.nodes.wan.only") === "true")
-    // user without password ⇒ no auth keys at all
-    assert(!Settings.es(Map("ES_AUTH_USERNAME" -> "u")).sparkConfig
-      .contains("es.net.http.auth.user"))
-  }
-
   test("sparkTuning: SPARK_MASTER/memory env-driven, memory absent by default") {
     val t0 = Settings.sparkTuning(Map("SPARK_GRAFT_CPUS" -> "4"))
     assert(t0.master === "local[4]")
@@ -88,6 +73,15 @@ class SettingsSpec extends AnyFunSuite {
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS") &&
         e.getMessage.contains(s"'$v'"))
     }
+    // the streaming drains' partition override follows the same rule
+    val parts = "SPARK_GRAFT_STREAM_PARTS"
+    assert(Sessions.positiveIntEnv(Map(parts -> "16"), parts) === Some(16))
+    assert(Sessions.positiveIntEnv(Map.empty, parts) === None)
+    Seq("abc", "0", "-2").foreach { v =>
+      val e = intercept[IllegalArgumentException](
+        Sessions.positiveIntEnv(Map(parts -> v), parts))
+      assert(e.getMessage.contains(parts) && e.getMessage.contains(s"'$v'"))
+    }
   }
 
   test("RunEtl.resolveInputs: positional wins; 2-arg form pulls schema from DICTIONARY_URL and mapping from the search path") {
@@ -105,5 +99,11 @@ class SettingsSpec extends AnyFunSuite {
       RunEtl.resolveInputs(Seq("dumps", "out"), Map.empty,
         folders = Some(Seq("/nonexistent-xyz"))))
     assertThrows[RuntimeException](RunEtl.resolveInputs(Seq("x"), Map.empty))
+    // a remote dictionary is refused up front, naming the variable
+    val url = "https://dd.example.org/schema.json"
+    val e = intercept[IllegalArgumentException](
+      RunEtl.resolveInputs(Seq("dumps", "out"), Map("DICTIONARY_URL" -> url),
+        folders = Some(Seq(dir.toString))))
+    assert(e.getMessage.contains("DICTIONARY_URL") && e.getMessage.contains(url))
   }
 }

@@ -84,27 +84,4 @@ class AggExprSpec extends SparkSpec {
     assert(r.getString(2) === "")
     assert(r.getSeq[String](3) === Seq("/custom/x", ""))
   }
-
-  test("UserYaml.resourcePaths: users' projects plus authz overrides") {
-    val yaml =
-      """users:
-        |  alice:
-        |    projects:
-        |      - auth_id: projA
-        |        resource: /progs/x/projA
-        |      - auth_id: projB
-        |      - resource: /orphan/no-auth-id
-        |  bob:
-        |    projects:
-        |      auth_id: projC
-        |      resource: /progs/y/projC
-        |authz:
-        |  user_project_to_resource:
-        |    projA: /override/projA
-        |""".stripMargin
-    val m = graft.schema.UserYaml.resourcePaths(yaml)
-    assert(m === Map(
-      "projA" -> "/override/projA", // authz wins over the user entry
-      "projC" -> "/progs/y/projC")) // single-map projects form
-  }
 }

@@ -130,12 +130,6 @@ class JdbcSpec extends SparkSpec {
           r.getSeq[String](r.fieldIndex("study_name")))).toMap
     assert(docs("p0") === ((30L, Seq("Alpha")))) // p0 -> st1 -> 'Alpha'
     assert(docs.size === 6)
-
-    // dictionary-from-URL adapter reads the same schema over file://
-    val viaUrl = graft.schema.DictionaryLoader.loadUrl(
-      schemaPath.toUri.toString)
-    assert(viaUrl.nodes.map(_.label).toSet === Set("study", "person"))
-    assert(viaUrl.links.head.edgeTable === "edge_personmemberofstudy")
   }
 
   test("latestSucceededTxMillis is None when nothing succeeded") {

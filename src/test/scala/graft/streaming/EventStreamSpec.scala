@@ -222,8 +222,8 @@ class EventStreamSpec extends SparkSpec {
     // a DURABLE sink: the memory sink refuses checkpoint recovery, and
     // the parquet sink's file log is what gives end-to-end exactly-once
     def run(): Unit = {
-      val stream = new FileStreamSource(dir.toString + "/drop", "*.parquet",
-        schema).load(spark)
+      val stream = EventStream.readDropZone(spark, dir.toString + "/drop",
+        "*.parquet", schema)
       val q = EventStream.dedupStream(stream, "1 hour", Seq("event_id"))
         .writeStream.option("checkpointLocation", cp)
         .outputMode("append").format("parquet").option("path", out).start()
