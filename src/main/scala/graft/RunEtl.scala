@@ -24,16 +24,14 @@ import graft.sources.TubeGraphSource
 object RunEtl {
 
   def main(args: Array[String]): Unit = {
+    val flags = parseArgs(args.toSeq)
     // rollback mode: re-publish the {alias}_backup index as the new live
     // version and exit — no translation, no Spark session needed
-    args.collectFirst {
-      case a if a.startsWith("--restore=") => a.stripPrefix("--restore=")
-    }.foreach { alias =>
-      val positional0 = args.filterNot(_.startsWith("--"))
-      require(positional0.nonEmpty,
+    flags.restore.foreach { alias =>
+      require(flags.positional.nonEmpty,
         "usage: RunEtl <outDir> --restore=<alias>")
       val client = new FsEsClient(
-        java.nio.file.Paths.get(positional0.last))
+        java.nio.file.Paths.get(flags.positional.last))
       EsControl.restore(client, alias) match {
         case Some(idx) =>
           // rewind the S11 stamp: it was written by the publish being
@@ -46,28 +44,8 @@ object RunEtl {
         case None => sys.error(s"no ${alias}_backup index to restore")
       }
     }
-    val force = args.contains("--force")
-    // take a rollback backup of each outgoing live index before publishing
-    val backup = args.contains("--backup")
-    // per-index CDC gate from dump-directory mtimes: only indices whose
-    // dependency tables changed since their last publish re-run
-    val cdc = args.contains("--cdc")
-    // optional: the latest committed source transaction time feeding the
-    // incremental gate (a JDBC-fed deployment passes
-    // Jdbc.latestSucceededTxMillis here)
-    val sourceTx = args.collectFirst {
-      case a if a.startsWith("--source-tx-millis=") =>
-        a.stripPrefix("--source-tx-millis=").toLong
-    }
-    // opt-in walk pruning for selective root filters (Translator doc):
-    // N = the operator's estimate of roots surviving a filtered index
-    val bloomRoots = args.collectFirst {
-      case a if a.startsWith("--bloom-prune-roots=") =>
-        a.stripPrefix("--bloom-prune-roots=").toLong
-    }
-    val positional = args.filterNot(_.startsWith("--"))
     val (schemaPath, mappingPath, dumpsDir, outDir) =
-      resolveInputs(positional.toSeq, sys.env)
+      resolveInputs(flags.positional, sys.env)
     val tuning = Settings.sparkTuning(sys.env)
     val builder = Sessions.builder(master = Some(tuning.master))
       .appName("graft-etl")
@@ -90,21 +68,67 @@ object RunEtl {
       // dir is scheme-aware (Spark reads it), so its listing goes
       // through the Hadoop FileSystem inside dumpTableTimes
       val cdcSignal =
-        if (!cdc) None
+        if (!flags.cdc) None
         else Some(MappingDeps.dumpTableTimes(dumpsDir,
             spark.sparkContext.hadoopConfiguration) +
           (MappingDeps.ConfigKey -> Seq(schemaPath, mappingPath)
             .map(p => new java.io.File(p).lastModified()).max))
       val published = run(spark, schemaPath, mappingPath, dumpsDir, outDir,
-        latestSourceTxMillis = sourceTx, force = force,
-        perTableTxMillis = cdcSignal, rootBloomPrune = bloomRoots,
-        backup = backup)
+        latestSourceTxMillis = flags.sourceTxMillis, force = flags.force,
+        perTableTxMillis = cdcSignal, rootBloomPrune = flags.bloomPruneRoots,
+        backup = flags.backup)
       if (published.isEmpty)
         println("up to date — nothing published (use --force to override)")
       published.foreach { case (alias, (index, rows)) =>
         println(s"published $alias -> $index ($rows docs)")
       }
     } finally spark.stop()
+  }
+
+  /** [[main]]'s command line.
+    *
+    * @param force          publish every index, past the incremental gate
+    * @param backup         take a rollback backup of each outgoing live
+    *                       index before publishing
+    * @param cdc            per-index CDC gate from dump-directory mtimes:
+    *                       only indices whose dependency tables changed
+    *                       since their last publish re-run
+    * @param sourceTxMillis the latest committed source transaction time
+    *                       feeding the incremental gate (a JDBC-fed
+    *                       deployment passes `Jdbc.latestSucceededTxMillis`)
+    * @param bloomPruneRoots opt-in walk pruning for selective root filters
+    *                       (Translator doc): the operator's estimate of
+    *                       roots surviving a filtered index
+    * @param restore        rollback mode: the alias to restore
+    * @param positional     everything that is not a flag */
+  final case class Args(force: Boolean, backup: Boolean, cdc: Boolean,
+                        sourceTxMillis: Option[Long],
+                        bloomPruneRoots: Option[Long],
+                        restore: Option[String], positional: Seq[String])
+
+  /** Split argv into [[Args]]. Any `--` argument that is not one of the
+    * flags above fails with an error naming it, so a misspelt flag never
+    * runs as if it were absent; `--source-tx-millis` takes a non-negative
+    * long and `--bloom-prune-roots` a positive one, else the error names
+    * the flag and the value. Pure: no Spark, no filesystem. */
+  def parseArgs(args: Seq[String]): Args = {
+    val (flags, positional) = args.partition(_.startsWith("--"))
+    def valued(name: String): Option[String] =
+      flags.collectFirst { case a if a.startsWith(s"$name=") =>
+        a.stripPrefix(s"$name=") }
+    def long(name: String, min: Long, what: String): Option[Long] =
+      valued(name).map(v => v.toLongOption.filter(_ >= min).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be a $what long, got '$v'")))
+    val switches = Set("--force", "--backup", "--cdc")
+    val named = Seq("--source-tx-millis", "--bloom-prune-roots", "--restore")
+    flags.find(a => !switches(a) && !named.exists(n => a.startsWith(s"$n=")))
+      .foreach(a => throw new IllegalArgumentException(s"unknown flag $a"))
+    Args(force = flags.contains("--force"), backup = flags.contains("--backup"),
+      cdc = flags.contains("--cdc"),
+      sourceTxMillis = long("--source-tx-millis", 0L, "non-negative"),
+      bloomPruneRoots = long("--bloom-prune-roots", 1L, "positive"),
+      restore = valued("--restore"), positional = positional)
   }
 
   /** Argv+env input resolution (reference settings.py:36-39, 96-100 env

@@ -15,7 +15,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * optimizer's runtime row-level filtering) as a callable function, so
   * operators can bloom-prune joins the `InjectRuntimeFilter` rule cannot
   * see across (multi-step graph walks, iterative algorithms) — see
-  * `GraphOps.bloomPrune`. */
+  * `GraphOps.buildBloom`/`pruneWithBloom`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((

@@ -410,11 +410,11 @@ object Bpe {
   }
 
   /** Persist a trained merge table as a (rank, a, b) parquet artifact —
-    * the train-once / serve-everywhere split ([[Hll.writeSketch]]'s
-    * artifact pattern): training pays the corpus aggregates once,
-    * serving jobs `readMerges` the table (vocabulary-sized, driver-safe
-    * by construction) and run pure [[encodeWords]]/[[encodeCorpus]]
-    * passes with no training dependency. */
+    * the train-once / serve-everywhere split: training pays the corpus
+    * aggregates once, serving jobs `readMerges` the table
+    * (vocabulary-sized, driver-safe by construction) and run pure
+    * [[encodeWords]]/[[encodeCorpus]] passes with no training
+    * dependency. */
   def writeMerges(spark: org.apache.spark.sql.SparkSession,
                   merges: Seq[(String, String)], path: String): Unit = {
     import spark.implicits._

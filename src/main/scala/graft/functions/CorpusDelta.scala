@@ -41,7 +41,7 @@ object CorpusDelta {
   /** MERGEABLE data-card state — the persistable projection behind the
     * release artifact (`corpus_datacard`), the capstone of the
     * incremental family ([[graft.functions.Dedup.exactGroupsState]] for
-    * groups, [[graft.functions.Hll.writeSketch]] for vocab): three count
+    * groups, [[graft.functions.Hll.mergeRegs]] for vocab): three count
     * frames whose every column is a SUM of per-document functions, so
     * the merge is unionByName + re-sum — associative and commutative,
     * state(A) ⊎ state(B) ≡ state(A ∪ B) EXACTLY for any split of the

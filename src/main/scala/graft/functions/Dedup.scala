@@ -161,8 +161,7 @@ object Dedup {
     * arrays (an array-free state row per group is what survives 100 TB;
     * membership stays derivable by re-fingerprinting any doc against
     * the state). This is the artifact the incremental path stores
-    * between runs ([[mergeGroupsState]]; parquet via plain write/read —
-    * the [[graft.functions.Hll.writeSketch]] snapshot pattern). */
+    * between runs ([[mergeGroupsState]]; parquet via plain write/read). */
   def exactGroupsState(docs: DataFrame, idCol: String,
                        textCol: String): DataFrame =
     docs
@@ -563,14 +562,6 @@ object Dedup {
       .select(col("_a").as("id_a"), col("_b").as("id_b"))
       .distinct()
   }
-
-  /** The SURVIVING LSH state after a delete — the frame the next
-    * [[lshAppendCandidates]] run consumes. Split from
-    * [[lshDeleteCandidates]] so callers persist the state without
-    * recomputing the resurfaced-pair emission. */
-  def lshDeleteState(stateOld: DataFrame, deletedIds: DataFrame,
-                     idCol: String): DataFrame =
-    stateOld.join(deletedIds, Seq(idCol), "left_anti")
 
   /** Exact Jaccard over shingle sets via inverted index (NO cross join):
     * explode distinct shingles, emit in-bucket pairs per shingle, count

@@ -34,7 +34,7 @@ import org.apache.spark.sql.types.DecimalType
   * Scale: one narrow shuffle to (group, register) — at most m rows per
   * group survive the map-side partial max — then an m-row-per-group
   * final fold. Merging sketches across sources/partitions/days is
-  * `groupBy(register).max` (demonstrated by [[merged]]). */
+  * a register-wise max ([[mergeRegs]]). */
 object Hll {
 
   /** Clamp on rho: keeps Σ 2^(RhoCap−rho) within exact-integer range. */
@@ -80,14 +80,6 @@ object Hll {
       .groupBy((groupCols.map(col) :+ col("reg")): _*)
       .agg(max(col("rho")).as("max_rho"))
   }
-
-  /** Register-wise merge of per-group sketches into one global sketch —
-    * the HLL mergeability property (max per register), tagged with
-    * `tag` in a column named like groupCol. */
-  def merged(regs: DataFrame, groupCol: String, tag: String): DataFrame =
-    regs.groupBy(col("reg"))
-      .agg(max(col("max_rho")).as("max_rho"))
-      .select(lit(tag).as(groupCol), col("reg"), col("max_rho"))
 
   /** Estimates from a register frame (groupCols…, reg, max_rho): fills the
     * missing registers of the 0..m−1 domain with rho 0 via a generated
@@ -139,21 +131,7 @@ object Hll {
     * incremental artifact: growing corpora update distinct counts by
     * merging the new snapshot's sketch into the stored one, never
     * rescanning history. Null-safe on either side (a group absent from
-    * one snapshot contributes an all-zero sketch). */
-  def mergeRegs(a: org.apache.spark.sql.Column,
-                b: org.apache.spark.sql.Column,
-                m: Int = 64): org.apache.spark.sql.Column = {
-    requireM(m)
-    val zero = array_repeat(lit(0), m)
-    zip_with(coalesce(a, zero), coalesce(b, zero), (x, y) => greatest(x, y))
-  }
-
-  /** Persist a per-group sketch frame — (groupCols…, `regsCol`
-    * array<int> length m) as produced by [[sketchAgg]] — as a parquet
-    * artifact (the [[CorpusDelta]] snapshot pattern applied to sketch
-    * state). Overwrites: the artifact is a register state, not a log —
-    * merge BEFORE writing ([[mergeRegs]] with the previous
-    * [[readSketch]]) to accumulate across runs.
+    * one snapshot contributes an all-zero sketch).
     *
     * NO DELETE exists for sketch state — registers are MAXes, and a max
     * cannot be subtracted (the one incremental family without a takedown
@@ -162,13 +140,13 @@ object Hll {
     * snapshot states that ARE retained: keep one sketch per retention
     * unit (source/day) and re-merge the survivors — O(units) register
     * merges, never a corpus rescan. */
-  def writeSketch(regs: DataFrame, path: String): Unit =
-    regs.write.mode("overwrite").parquet(path)
-
-  /** Read a sketch artifact back ([[writeSketch]]'s inverse). */
-  def readSketch(spark: org.apache.spark.sql.SparkSession,
-                 path: String): DataFrame =
-    spark.read.parquet(path)
+  def mergeRegs(a: org.apache.spark.sql.Column,
+                b: org.apache.spark.sql.Column,
+                m: Int = 64): org.apache.spark.sql.Column = {
+    requireM(m)
+    val zero = array_repeat(lit(0), m)
+    zip_with(coalesce(a, zero), coalesce(b, zero), (x, y) => greatest(x, y))
+  }
 
   /** Estimates from a per-group register ARRAY column (what [[sketchAgg]]
     * evals to): the same integer estimator as [[estimate]], computed as a

@@ -60,12 +60,6 @@ object Html {
     trim(regexp_replace(decodeEntities(regexp_replace(c, TagRe, " ")),
       "\\s+", " "))
 
-  /** Full-page text strip (no block filtering): cleanse containers and
-    * comments, then [[visibleText]]. */
-  def stripHtml(c: Column): Column =
-    visibleText(regexp_replace(regexp_replace(c, DropContentRe, " "),
-      CommentRe, " "))
-
   /** The page's `<title>` text. */
   def title(c: Column): Column = visibleText(regexp_extract(c, TitleRe, 1))
 

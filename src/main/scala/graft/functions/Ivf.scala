@@ -143,18 +143,16 @@ object Ivf {
       .join(cvecs, Seq(corpusId))
   }
 
-  /** The `nprobe` nearest cells per query: (queryId, queryVec, _qn, cell).
-    * Centroids are broadcast; the window is per-query over ≤ numCells rows,
-    * so it never sees corpus-scale data. Shared with the IVF-PQ serving
-    * path ([[Pq.topKIndexedPq]]). */
-  private[functions] def probeCells(queries: DataFrame, queryId: String,
-                                    queryVec: String, centroids: DataFrame,
-                                    nprobe: Int,
-                                    metric: String = "cosine"): DataFrame = {
+  /** The `nprobe` cosine-nearest cells per query: (queryId, queryVec, _qn,
+    * cell). Centroids are broadcast; the window is per-query over
+    * ≤ numCells rows, so it never sees corpus-scale data. */
+  private def probeCells(queries: DataFrame, queryId: String,
+                         queryVec: String, centroids: DataFrame,
+                         nprobe: Int): DataFrame = {
     val qvecs = withNorm(queries.select(col(queryId), col(queryVec)),
       queryVec, "_qn")
     qvecs.join(broadcast(centroids))
-      .withColumn("_sim", centroidScore(queryVec, "_qn", metric))
+      .withColumn("_sim", centroidScore(queryVec, "_qn", "cosine"))
       .withColumn("_pr", row_number().over(
         Window.partitionBy(col(queryId))
           .orderBy(col("_sim").desc, col("cid").asc)))
@@ -218,52 +216,9 @@ object Ivf {
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
   }
 
-  /** Incrementally APPEND new vectors to a persisted index: assign them
-    * to the EXISTING centroids (no retraining — the contract every
-    * serving-side index maintenance job wants: cheap, deterministic, and
-    * the existing cells never rewrite) and append cell-partitioned files
-    * into the same layout. Reading the index afterwards is identical to
-    * having built it from the union corpus under the same centroids —
-    * `IvfSpec` pins that equivalence.
-    *
-    * Cost: one broadcast-assign scan of the NEW batch only. Centroid
-    * drift from accumulated appends degrades recall gradually, not
-    * correctness (probing still visits true nearest CELLS); rebuild
-    * cadence is an ops decision the meta row makes cheap to script.
-    * Honors the index's stored vector form (int8 or full precision). */
-  def appendToIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                    newVectors: DataFrame, corpusId: String,
-                    corpusVec: String): Unit = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-    // sniff the stored vector form from the existing cells; a fresh index
-    // (centroids only, no cells yet) defaults to full precision. The
-    // existence probe resolves through the Hadoop FileSystem so indexes
-    // addressed by hdfs://, s3a://, etc. URIs sniff correctly — a
-    // java.io.File probe would silently report "absent" for any
-    // non-local scheme and mis-append full-precision rows into an
-    // int8-quantized index.
-    val cellsPath = new org.apache.hadoop.fs.Path(s"$path/cells")
-    val cellsExist = cellsPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(cellsPath)
-    val quantized =
-      if (!cellsExist) false
-      else spark.read.parquet(s"$path/cells").schema(corpusVec).dataType match {
-        case s: org.apache.spark.sql.types.StructType =>
-          s.fieldNames.contains("q")
-        case _ => false
-      }
-    val cells = index(newVectors, corpusId, corpusVec, centroids)
-    (if (quantized)
-       cells.withColumn(corpusVec, Similarity.quantizeInt8(col(corpusVec)))
-         .drop("_cn")
-     else cells)
-      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
-  }
-
-  /** DELETE vectors from a persisted index — [[appendToIndex]]'s inverse
-    * (the takedown path): locate the cells holding deleted ids, and
-    * REWRITE ONLY THOSE cell directories with their survivors —
+  /** DELETE vectors from a persisted index (the takedown path): locate
+    * the cells holding deleted ids, and REWRITE ONLY THOSE cell
+    * directories with their survivors —
     * centroids and every untouched cell stay byte-identical on disk, so
     * the delete costs |affected cells|, not |index|. Reading the index
     * afterwards is identical to having built it from the remaining

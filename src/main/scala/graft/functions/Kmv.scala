@@ -70,30 +70,11 @@ object Kmv {
       .otherwise(floor((k.cast("double") - lit(1.0d)) * lit(Range60) /
         element_at(kmv, -1).cast("double")).cast("long"))
 
-  /** Per-group distinct estimates off a [[sketch]] frame. */
-  def estimate(sketches: DataFrame, groupCols: Seq[String]): DataFrame =
-    sketches.select(groupCols.map(col) :+
-      estimateCol(col("kmv"), col("k")).as("est_distinct"): _*)
-
   /** Merge two sketch arrays of the same k: bottom-k of the distinct
     * union — the lossless roll-up ([[KmvSpec]] pins merge ≡ rebuild). */
   def mergeCol(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
                k: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     slice(array_sort(array_distinct(concat(a, b))), lit(1), k)
-
-  /** Persist a [[sketch]] frame as a parquet artifact — the
-    * train-once / serve-everywhere split ([[Hll.writeSketch]]'s
-    * pattern): sketch the corpus once, downstream overlap/estimate jobs
-    * read the k-sized artifact with no corpus dependency, and a grown
-    * corpus folds in via [[mergeCol]] on per-shard artifacts (lossless —
-    * the KmvSpec merge law) instead of a rescan. */
-  def writeSketches(sketches: DataFrame, path: String): Unit =
-    sketches.write.mode("overwrite").parquet(path)
-
-  /** Read a sketch artifact back ([[writeSketches]]' inverse). */
-  def readSketches(spark: org.apache.spark.sql.SparkSession,
-                   path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Pairwise source-overlap estimates from one [[sketch]] frame keyed
     * by a single `groupCol`: for every unordered group pair (a < b),

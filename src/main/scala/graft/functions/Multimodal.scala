@@ -487,13 +487,4 @@ object Multimodal {
         }
       }.toDF("media_id", "frame_idx", "diff_milli", "is_cut")
   }
-
-  /** Frame-sampling plan for video rows: rows explode into (media_id,
-    * frame_idx) tasks WITHOUT duplicating payload bytes across frames —
-    * the decode stage re-reads the payload once per row, not per frame. */
-  def sampleFrames(media: DataFrame, everyMs: Long): DataFrame =
-    media.filter(col("modality") === "video")
-      .select(col("media_id"), col("duration_ms"),
-        explode(sequence(lit(0L), greatest(col("duration_ms") - 1, lit(0L)),
-          lit(everyMs))).alias("frame_ts_ms"))
 }

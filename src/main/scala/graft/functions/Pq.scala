@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Product quantization (PQ) — the compression side of IVF-PQ ANN serving
@@ -58,23 +58,15 @@ object Pq {
   def trainCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
                      m: Int, k: Int, iters: Int = 5,
                      samplePct: Int = 100, sampleCap: Int = 100000): Codebooks = {
-    val rows = sampleRows(corpus, idCol, vecCol, samplePct, sampleCap)
+    val base = corpus.select(col(idCol).cast("long").as("id"),
+      col(vecCol).cast("array<double>").as("v"))
+    val rows = Sampling.stableCappedSample(base, col("id"), samplePct, sampleCap)
+      .collect().map(_.getSeq[Double](1).toArray)
     kmeansSubspaces(rows, m, k, iters)
   }
 
-  /** The shared driver-local sample: (stable-hash, id)-ordered rows as
-    * double arrays — one collect, reused by PQ and OPQ training. */
-  private def sampleRows(corpus: DataFrame, idCol: String, vecCol: String,
-                         samplePct: Int, sampleCap: Int): Array[Array[Double]] = {
-    val base = corpus.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-    Sampling.stableCappedSample(base, col("id"), samplePct, sampleCap)
-      .collect().map(_.getSeq[Double](1).toArray)
-  }
-
   /** Per-subspace Lloyd k-means kernel over in-memory sample rows (the
-    * driver-side half of [[trainCodebooks]]; OPQ re-runs it per rotation
-    * update without re-collecting the sample). */
+    * driver-side half of [[trainCodebooks]]). */
   private def kmeansSubspaces(rows: Array[Array[Double]], m: Int, k: Int,
                               iters: Int): Codebooks = {
     require(rows.length >= k,
@@ -126,250 +118,6 @@ object Pq {
   private def cbLit(cb: Codebooks, s: Int): Column =
     typedLit(cb(s).map(_.toSeq).toSeq)
 
-  /** Deterministic pseudo-random orthogonal matrix (composed Givens
-    * rotations, angles/planes from a counter hash — no RNG state). The
-    * RR-PQ preprocessing step (cf. OPQ, Ge et al. CVPR'13: PQ error
-    * concentrates when variance is unevenly spread across subspaces; a
-    * rotation balances it; the random rotation is the train-free variant).
-    * Rotation preserves L2 exactly, so ADC distances computed in the
-    * rotated space ARE distances in the original space — rotate corpus
-    * and queries, change nothing else. */
-  def rotationMatrix(dim: Int, seed: Long = 0L): Array[Array[Double]] = {
-    require(dim >= 2, s"rotationMatrix needs dim >= 2, got $dim")
-    val m = Array.tabulate(dim, dim)((i, j) => if (i == j) 1.0 else 0.0)
-    var h = seed * 0x9E3779B97F4A7C15L + 0xBF58476D1CE4E5B9L
-    def next(): Long = { // splitmix64-style counter hash
-      h += 0x9E3779B97F4A7C15L
-      var z = h
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
-    for (_ <- 0 until dim * 4) {
-      val a = ((next() >>> 1) % dim).toInt
-      val bRaw = ((next() >>> 1) % (dim - 1)).toInt
-      val b = if (bRaw >= a) bRaw + 1 else bRaw
-      val theta = ((next() >>> 11).toDouble / (1L << 53).toDouble) * 2 * math.Pi
-      val (c, s) = (math.cos(theta), math.sin(theta))
-      var k = 0
-      while (k < dim) { // left-multiply by G(a, b, theta): mixes rows a, b
-        val ra = m(a)(k); val rb = m(b)(k)
-        m(a)(k) = c * ra - s * rb
-        m(b)(k) = s * ra + c * rb
-        k += 1
-      }
-    }
-    m
-  }
-
-  /** Apply a rotation to an embedding column: one native codegen'd
-    * `graft_dot` per output dimension against the matrix rows as literals
-    * (the `rhpSignature` planes-as-literals pattern; requires the
-    * GraftExtensions session extension). */
-  def rotate(vec: Column, matrix: Array[Array[Double]]): Column = {
-    val v = vec.cast("array<double>")
-    array(matrix.toSeq.map(row =>
-      call_function("graft_dot", v, typedLit(row.toSeq))): _*)
-  }
-
-  /** Trained OPQ (Ge et al., "Optimized Product Quantization", CVPR'13,
-    * non-parametric solution): jointly learn an orthogonal rotation R and
-    * per-subspace codebooks minimizing Σ‖Rx − c(Rx)‖² — the data-adaptive
-    * upgrade of [[rotationMatrix]]'s train-free random rotation. Because R
-    * is orthogonal the quantization error in rotated space IS the error in
-    * original space, so serving just rotates corpus and queries
-    * ([[rotate]]) and runs the ordinary PQ/ADC pipeline.
-    *
-    * Alternation, all driver-local on the ONE stable sample collect:
-    *   1. fix R: per-subspace Lloyd k-means on the rotated sample rows
-    *      (the [[trainCodebooks]] kernel);
-    *   2. fix codes: y_n = decode(encode(R x_n)); the orthogonal R
-    *      maximizing Σ y_nᵀ R x_n is the Procrustes solution R = V Uᵀ from
-    *      the SVD of A = Σ x_n y_nᵀ (one-sided Jacobi — deterministic, no
-    *      RNG, no external linear-algebra dependency).
-    *
-    * Not SQL-expressible (iterative SVD), so like trained-PQ codebooks it
-    * is spec-pinned, not oracle-checked: orthogonality, monotone MSE vs
-    * plain PQ on variance-skewed data, and L2 preservation are asserted in
-    * PqSpec. Returns (R, codebooks-in-rotated-space). */
-  def trainOpq(corpus: DataFrame, idCol: String, vecCol: String,
-               m: Int, k: Int, opqIters: Int = 5, kmeansIters: Int = 3,
-               samplePct: Int = 100, sampleCap: Int = 100000)
-      : (Array[Array[Double]], Codebooks) = {
-    val rows = sampleRows(corpus, idCol, vecCol, samplePct, sampleCap)
-    // same informative preconditions as trainCodebooks — without these an
-    // empty sample (tiny corpus + low samplePct) dies on rows.head below
-    require(rows.nonEmpty, "Pq.trainOpq: empty corpus sample")
-    val dim = rows.head.length
-    require(dim % m == 0, s"Pq.trainOpq: dim $dim not divisible by m=$m")
-    var r = Array.tabulate(dim, dim)((i, j) => if (i == j) 1.0 else 0.0)
-    var cb: Codebooks = null
-    def applyR(x: Array[Double]): Array[Double] = {
-      val out = new Array[Double](dim)
-      var i = 0
-      while (i < dim) {
-        var s = 0.0; var j = 0
-        while (j < dim) { s += r(i)(j) * x(j); j += 1 }
-        out(i) = s; i += 1
-      }
-      out
-    }
-    for (_ <- 0 until math.max(1, opqIters)) {
-      val rotated = rows.map(applyR)
-      cb = kmeansSubspaces(rotated, m, k, kmeansIters)
-      // reconstructions in rotated space: nearest codeword per subspace
-      val dsub = dim / m
-      val recon = rotated.map { v =>
-        val y = new Array[Double](dim)
-        var s = 0; var off = 0
-        while (s < m) {
-          var bestJ = 0; var bestD = Double.PositiveInfinity
-          var j = 0
-          while (j < k) {
-            var d = 0.0; var i = 0
-            while (i < dsub) {
-              val t = v(off + i) - cb(s)(j)(i); d += t * t; i += 1
-            }
-            if (d < bestD) { bestD = d; bestJ = j }
-            j += 1
-          }
-          System.arraycopy(cb(s)(bestJ), 0, y, off, dsub)
-          s += 1; off += dsub
-        }
-        y
-      }
-      // A = Σ x yᵀ (original-space x against rotated-space reconstruction)
-      val a = Array.ofDim[Double](dim, dim)
-      var n = 0
-      while (n < rows.length) {
-        val x = rows(n); val y = recon(n)
-        var i = 0
-        while (i < dim) {
-          val xi = x(i); var j = 0
-          while (j < dim) { a(i)(j) += xi * y(j); j += 1 }
-          i += 1
-        }
-        n += 1
-      }
-      val (u, v) = svdJacobi(a)
-      // R = V Uᵀ maximizes tr(R A) over orthogonal R (Procrustes)
-      r = Array.tabulate(dim, dim) { (i, j) =>
-        var s = 0.0; var t = 0
-        while (t < dim) { s += v(i)(t) * u(j)(t); t += 1 }
-        s
-      }
-    }
-    // final codebooks must match the FINAL rotation
-    (r, kmeansSubspaces(rows.map(applyR), m, k, kmeansIters))
-  }
-
-  /** One-sided Jacobi SVD of a square matrix: A = U Σ Vᵀ, returning
-    * (U, V) (singular values are not needed by the Procrustes caller).
-    * Deterministic sweep order; near-zero singular directions fall back to
-    * unit columns (a degenerate axis contributes no Procrustes constraint
-    * anyway). O(dim³) per sweep — dim is the embedding width (≤ a few
-    * hundred), driver-side only. */
-  private def svdJacobi(a0: Array[Array[Double]],
-                        sweeps: Int = 30): (Array[Array[Double]], Array[Array[Double]]) = {
-    val dim = a0.length
-    val b = a0.map(_.clone()) // working copy, columns become U·Σ
-    val v = Array.tabulate(dim, dim)((i, j) => if (i == j) 1.0 else 0.0)
-    def colDot(p: Int, q: Int): Double = {
-      var s = 0.0; var i = 0
-      while (i < dim) { s += b(i)(p) * b(i)(q); i += 1 }
-      s
-    }
-    var sweep = 0
-    var converged = false
-    while (sweep < sweeps && !converged) {
-      converged = true
-      var p = 0
-      while (p < dim - 1) {
-        var q = p + 1
-        while (q < dim) {
-          val app = colDot(p, p); val aqq = colDot(q, q)
-          val apq = colDot(p, q)
-          if (math.abs(apq) > 1e-12 * math.sqrt(app * aqq) + 1e-300) {
-            converged = false
-            val tau = (aqq - app) / (2.0 * apq)
-            // stable tangent; the tau = 0 limit is t = 1 (a 45° rotation),
-            // NOT 0 — sign(0)/... would silently skip the rotation and the
-            // pair would never orthogonalize
-            val t =
-              if (tau >= 0) 1.0 / (tau + math.sqrt(1.0 + tau * tau))
-              else -1.0 / (-tau + math.sqrt(1.0 + tau * tau))
-            val c = 1.0 / math.sqrt(1.0 + t * t)
-            val s = c * t
-            var i = 0
-            while (i < dim) { // rotate columns p, q of B and V
-              val bp = b(i)(p); val bq = b(i)(q)
-              b(i)(p) = c * bp - s * bq
-              b(i)(q) = s * bp + c * bq
-              val vp = v(i)(p); val vq = v(i)(q)
-              v(i)(p) = c * vp - s * vq
-              v(i)(q) = s * vp + c * vq
-              i += 1
-            }
-          }
-          q += 1
-        }
-        p += 1
-      }
-      sweep += 1
-    }
-    val u = Array.ofDim[Double](dim, dim)
-    val degenerate = scala.collection.mutable.ArrayBuffer[Int]()
-    var j = 0
-    while (j < dim) {
-      var s = 0.0; var i = 0
-      while (i < dim) { s += b(i)(j) * b(i)(j); i += 1 }
-      val norm = math.sqrt(s)
-      if (norm > 1e-12) {
-        i = 0
-        while (i < dim) { u(i)(j) = b(i)(j) / norm; i += 1 }
-      } else degenerate += j
-      j += 1
-    }
-    // rank-deficient A (small samples, collinear reconstructions): complete
-    // the zero-singular columns to an orthonormal basis by Gram-Schmidt
-    // over the unit vectors, so U — and hence the Procrustes R = V Uᵀ —
-    // stays exactly orthogonal instead of silently skewed
-    if (degenerate.nonEmpty) {
-      // `degenerate` ascends, so a degenerate column c has been completed
-      // already iff c < dj; non-degenerate columns are always filled
-      def filled(c: Int, dj: Int): Boolean =
-        c != dj && (!degenerate.contains(c) || c < dj)
-      var cand = 0
-      degenerate.foreach { dj =>
-        var placed = false
-        while (!placed && cand < dim) {
-          val w = new Array[Double](dim)
-          w(cand) = 1.0
-          var c = 0
-          while (c < dim) { // project out every filled column of U
-            if (filled(c, dj)) {
-              var d = 0.0; var i2 = 0
-              while (i2 < dim) { d += u(i2)(c) * w(i2); i2 += 1 }
-              i2 = 0
-              while (i2 < dim) { w(i2) -= d * u(i2)(c); i2 += 1 }
-            }
-            c += 1
-          }
-          var n2 = 0.0; var i2 = 0
-          while (i2 < dim) { n2 += w(i2) * w(i2); i2 += 1 }
-          if (n2 > 1e-12) {
-            val inv = 1.0 / math.sqrt(n2)
-            i2 = 0
-            while (i2 < dim) { u(i2)(dj) = w(i2) * inv; i2 += 1 }
-            placed = true
-          }
-          cand += 1
-        }
-      }
-    }
-    (u, v)
-  }
-
   /** Squared-L2 fold between a subvector column and one codeword column —
     * shared by encode and the ADC LUT so the arithmetic (sequential
     * left-fold in element order) is identical everywhere, including the
@@ -397,22 +145,6 @@ object Pq {
     df.select(df.columns.toSeq.map(col) ++ subs: _*)
       .withColumn(as, array(codes: _*))
       .drop((0 until m).map(s => s"__sub$s"): _*)
-  }
-
-  /** Reconstruct the quantized approximation of a coded vector (codeword
-    * concatenation) — the decode side, used for reconstruction-error
-    * bounds and re-ranking. */
-  def decode(codes: Column, cb: Codebooks): Column =
-    concat(cb.indices.map(s =>
-      element_at(cbLit(cb, s), element_at(codes, s + 1) + 1)): _*)
-
-  /** Mean squared reconstruction error over a coded frame — the quality
-    * number that compares codebook variants (trained < anchor on real
-    * data). One aggregation, no collect. */
-  def reconstructionMse(df: DataFrame, vecCol: String, codeCol: String,
-                        cb: Codebooks): Double = {
-    val diff = dist2(col(vecCol).cast("array<double>"), decode(col(codeCol), cb))
-    df.agg(avg(diff)).head().getDouble(0)
   }
 
   /** (queryId, __lut) — each query row's m×k LUT of squared subvector↔
@@ -461,46 +193,6 @@ object Pq {
     Similarity.topKPerQuery(scored, queryId, corpusId, k, salts)
   }
 
-  /** Fast-scan-style ADC with a uint8-QUANTIZED LUT (the FAISS
-    * `IndexPQFastScan` trick, Andre et al. "Cache locality is not enough",
-    * VLDB'15): each query's m×k LUT of squared distances quantizes to
-    * 0..255 on a per-query (min, max/255) affine scale, candidate scoring
-    * folds INTEGER table lookups, and the affine map is undone once per
-    * candidate. Approximate BY DESIGN: per-entry error ≤ scale/2, so the
-    * recovered distance is within m·scale/2 of the exact ADC distance —
-    * the bound `PqSpec` pins. On SIMD hardware the narrow LUT is the
-    * whole point; here it documents the capability and keeps the fold in
-    * integer arithmetic.
-    *
-    * Same contract as [[adcTopK]]: (query_id, rank, neighbor_id, sim),
-    * sim = -(recovered dist²). */
-  def adcTopKQuantized(corpusCodes: DataFrame, corpusId: String,
-                       codeCol: String, queries: DataFrame, queryId: String,
-                       queryVec: String, cb: Codebooks, k: Int,
-                       salts: Int = 64): DataFrame = {
-    val m = cb.length
-    val quant = lutFrame(queries, queryId, queryVec, cb)
-      .withColumn("__qmin", array_min(flatten(col("__lut"))))
-      .withColumn("__qmax", array_max(flatten(col("__lut"))))
-      .withColumn("__scale",
-        when(col("__qmax") > col("__qmin"),
-          (col("__qmax") - col("__qmin")) / lit(255.0)).otherwise(lit(1.0)))
-      .withColumn("__lut8", transform(col("__lut"), row =>
-        transform(row, l =>
-          round((l - col("__qmin")) / col("__scale"), 0).cast("int"))))
-      .select(col(queryId), col("__lut8"), col("__qmin"), col("__scale"))
-    val intSum = aggregate(
-      zip_with(col("__lut8"), col(codeCol), (l, c) => element_at(l, c + 1)),
-      lit(0), (a, d) => a + d)
-    val scored = corpusCodes
-      .join(broadcast(quant))
-      .filter(col(corpusId) =!= col(queryId))
-      .withColumn("sim",
-        -(lit(m.toDouble) * col("__qmin") +
-          col("__scale") * intSum.cast("double")))
-    Similarity.topKPerQuery(scored, queryId, corpusId, k, salts)
-  }
-
   /** Two-stage retrieval: ADC shortlist → exact re-rank — the standard
     * serving recipe for compressed indexes (quantization error decides the
     * shortlist, never the final order). Stage 1 scans only codes; stage 2
@@ -526,83 +218,5 @@ object Pq {
         col(queryVec), col("_cn"), col("_qn")))
     // ≤ shortlist candidates per query by construction — stage 1 skipped
     Similarity.topKPerQuery(scored, queryId, corpusId, k, salts = 1)
-  }
-
-  /** IVF-PQ persisted index: [[Ivf.buildIndex]]'s cell layout with the
-    * vector column replaced by PQ codes — the FAISS `IVFx,PQy` shape. At
-    * 100 TB the cells directory is ~m bytes/vector instead of 4·d, and a
-    * query batch reads only its probed cells (partition pruning), scoring
-    * them by ADC. Codebooks and coarse centroids persist beside the cells
-    * so serving never re-trains.
-    *
-    * Both stages optimize L2 — the coarse quantizer trains, assigns, and
-    * is probed under `metric = "l2"` because ADC ranks by squared L2
-    * (FAISS does the same); a cosine coarse stage over an L2-scored
-    * candidate set would probe the wrong cells on non-normalized corpora.
-    * `coarseIters` controls the coarse Lloyd rounds; `iters` the
-    * per-subspace codebook rounds. */
-  def buildIndexPq(corpus: DataFrame, corpusId: String, corpusVec: String,
-                   path: String, numCells: Int, m: Int, k: Int,
-                   iters: Int = 5, samplePct: Int = 100,
-                   sampleCap: Int = 100000, coarseIters: Int = 2): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val centroids = Ivf.train(corpus, corpusId, corpusVec, numCells,
-      iters = coarseIters, samplePct = samplePct, sampleCap = sampleCap,
-      metric = "l2")
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    // the layout is self-describing: serving reads the metric back rather
-    // than assuming it, so an index built under one metric can never be
-    // silently probed under another (the cross-metric recall bug)
-    Seq(("metric", "l2"), ("m", m.toString), ("k", k.toString),
-        ("numCells", numCells.toString))
-      .toDF("key", "value").write.mode("overwrite").parquet(s"$path/meta")
-    val cb = trainCodebooks(corpus, corpusId, corpusVec, m, k, iters,
-      samplePct, sampleCap)
-    cb.zipWithIndex.flatMap { case (cws, s) =>
-      cws.zipWithIndex.map { case (cw, j) => (s, j, cw.toSeq) }
-    }.toSeq.toDF("m", "j", "cw")
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    withCodes(Ivf.index(corpus, corpusId, corpusVec, centroids, metric = "l2"),
-        corpusVec, cb)
-      .select(col(corpusId), col("cell"), col("codes"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-  }
-
-  /** Read persisted codebooks back into driver form. */
-  def loadCodebooks(spark: SparkSession, path: String): Codebooks =
-    spark.read.parquet(s"$path/codebooks")
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .groupBy(_._1).toArray.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3))
-
-  /** Top-k against a persisted IVF-PQ index: probe `nprobe` cells per
-    * query, read ONLY the probed cell partitions (the (cell, queryId) probe
-    * frame is broadcast, so the cells join prunes partitions dynamically),
-    * then ADC over the surviving codes. */
-  def topKIndexedPq(spark: SparkSession, path: String, corpusId: String,
-                    queries: DataFrame, queryId: String, queryVec: String,
-                    k: Int, nprobe: Int, salts: Int = 64): DataFrame = {
-    val cb = loadCodebooks(spark, path)
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val cells = spark.read.parquet(s"$path/cells")
-    // probe under the metric the index was BUILT with (persisted marker);
-    // an index without a readable marker is treated as l2 — the only
-    // metric buildIndexPq has ever written — instead of failing to serve
-    val metric = scala.util.Try(
-      spark.read.parquet(s"$path/meta")
-        .filter(col("key") === "metric").select("value")
-        .as[String](org.apache.spark.sql.Encoders.STRING).head()
-    ).getOrElse("l2")
-    val probes = Ivf.probeCells(queries, queryId, queryVec, centroids, nprobe,
-        metric)
-      .select(col(queryId), col("cell"))
-    val scored = cells
-      .join(broadcast(probes), Seq("cell"))
-      .join(broadcast(lutFrame(queries, queryId, queryVec, cb)), Seq(queryId))
-      .filter(col(corpusId) =!= col(queryId))
-      .withColumn("sim", adcSim("codes"))
-    Similarity.topKPerQuery(scored, queryId, corpusId, k, salts)
   }
 }

@@ -1144,10 +1144,9 @@ object Similarity {
 
   /** INCREMENTAL maintenance for the NN-descent graph — the append path
     * that lets a growing corpus update its k-NN graph without a full
-    * rebuild (the [[Ivf.appendToIndex]] operational precedent, applied
-    * to the graph-ANN family). Semantics: new vectors are linked in by
-    * exactly the rebuild's init rule (md5-window links inside both LSH
-    * tables' buckets, restricted to pairs that TOUCH a new node), then
+    * rebuild. Semantics: new vectors are linked in by exactly the
+    * rebuild's init rule (md5-window links inside both LSH tables'
+    * buckets, restricted to pairs that TOUCH a new node), then
     * `rounds` NN-descent refinement rounds run restricted to the
     * AFFECTED BALL — the new nodes plus everything graph-adjacent to a
     * previously-affected node, which grows by one hop per round. Nodes

@@ -447,7 +447,7 @@ object TextFunctions {
     * recomputability claim (DuckDB `list_reduce(list_transform(...))`, a
     * left fold from the first element equals this fold from 0) is therefore
     * scoped to BMP-only text; the fingerprint itself is deterministic for
-    * any input. Same caveat applies to `charShingles`. */
+    * any input. */
   def rollingHash(text: Column): Column = {
     val B = 1000003L
     val P = 1000000000000L // 1e12: P*B + maxCodePoint < 2^63
@@ -524,10 +524,6 @@ object TextFunctions {
       .otherwise(transform(sequence(lit(0), chunks - 1),
         i => array_join(slice(toks, i * stride + 1, lit(size)), " ")))
   }
-
-  /** Character n-gram shingles (distinct) — robust to tokenization noise. */
-  def charShingles(text: Column, n: Int): Column =
-    shinglesOf(split(lower(trim(text)), ""), n, "")
 
   // ---- public crawl-quality rule pack -----------------------------------
   // Gopher (Rae et al. 2021, Table A1) + C4 (Raffel et al. 2020, §2.2) +

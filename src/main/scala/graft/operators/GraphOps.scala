@@ -122,12 +122,13 @@ object GraphOps {
   def unionLeaves(leaves: Seq[DataFrame]): DataFrame =
     leaves.reduce(_.unionByName(_, allowMissingColumns = true)).distinct()
 
-  /** Bloom-filter join pruning: drop `df` rows whose `key` cannot match any
-    * `buildKey` BEFORE the exact join, so non-matching rows never enter the
-    * join's shuffle. The 100 TB shape this serves: a selective root set
-    * walking a petabyte edge table — a semi join would shuffle the edge
-    * table first; the bloom probe is a per-row scan-stage predicate that
-    * costs no shuffle and no broadcast-hash-map memory (bits, not rows).
+  /** Bloom-filter join pruning, build half: with [[pruneWithBloom]], drop
+    * `df` rows whose `key` cannot match any `buildKey` BEFORE the exact
+    * join, so non-matching rows never enter the join's shuffle. The
+    * 100 TB shape this serves: a selective root set walking a petabyte
+    * edge table — a semi join would shuffle the edge table first; the
+    * bloom probe is a per-row scan-stage predicate that costs no shuffle
+    * and no broadcast-hash-map memory (bits, not rows).
     *
     * The filter is built with one `stat.bloomFilter` pass over the build
     * side (a driver-side sketch of `~1.2 bytes × expectedItems` at 1% fpp —
@@ -140,15 +141,11 @@ object GraphOps {
     * `xxhash64` so any key type works.
     *
     * False positives pass (the downstream exact join removes them); false
-    * negatives cannot happen — pruned output ⊇ true matches, always. */
-  def bloomPrune(df: DataFrame, key: Column,
-                 build: DataFrame, buildKey: Column,
-                 expectedItems: Long, fpp: Double = 0.01): DataFrame =
-    pruneWithBloom(df, key, buildBloom(build, buildKey, expectedItems, fpp))
-
-  /** Build the serialized key sketch once (ONE pass over `build`) — reuse
-    * the bytes across several `pruneWithBloom` call sites so a key set
-    * probed by N frames is not sketched N times. */
+    * negatives cannot happen — pruned output ⊇ true matches, always.
+    *
+    * This builds the serialized key sketch once (ONE pass over `build`);
+    * reuse the bytes across several [[pruneWithBloom]] call sites so a key
+    * set probed by N frames is not sketched N times. */
   def buildBloom(build: DataFrame, buildKey: Column,
                  expectedItems: Long, fpp: Double = 0.01): Array[Byte] = {
     val bf = build.select(xxhash64(buildKey).as("__bk"))
@@ -158,7 +155,7 @@ object GraphOps {
     bos.toByteArray
   }
 
-  /** Probe half of [[bloomPrune]]: a scan-stage predicate, no shuffle. */
+  /** Probe half of [[buildBloom]]: a scan-stage predicate, no shuffle. */
   def pruneWithBloom(df: DataFrame, key: Column,
                      bloom: Array[Byte]): DataFrame =
     df.filter(call_function("graft_might_contain", lit(bloom), xxhash64(key)))

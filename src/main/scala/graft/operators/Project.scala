@@ -52,26 +52,17 @@ object Project {
     * '' (the reference returns empty for unsplittable ids). Map literal +
     * `element_at`, so the lookup constant-folds and stays in codegen. */
   def authResourcePath(projectId: Column,
-                       overrides: Map[String, String] = Map.empty): Column =
-    when(projectId.contains("-"), authPathExpr(projectId, overrides))
-      .otherwise(lit(""))
-
-  /** P7 array branch: list-valued project_id → list of paths
-    * (reference post_process.py handles both shapes). */
-  def authResourcePathArray(projectIds: Column,
-                            overrides: Map[String, String] = Map.empty): Column =
-    transform(projectIds, pid =>
-      when(pid.contains("-"), authPathExpr(pid, overrides)).otherwise(lit("")))
-
-  private def authPathExpr(pid: Column, overrides: Map[String, String]): Column = {
-    val code = regexp_replace(pid, "^[^-]*-", "")
+                       overrides: Map[String, String] = Map.empty): Column = {
+    val code = regexp_replace(projectId, "^[^-]*-", "")
     val dflt = format_string("/programs/%s/projects/%s",
-      substring_index(pid, "-", 1), code)
-    if (overrides.isEmpty) dflt
-    else {
-      val entries = overrides.toSeq.sortBy(_._1)
-        .flatMap { case (k, v) => Seq(lit(k), lit(v)) }
-      coalesce(element_at(map(entries: _*), code), dflt)
-    }
+      substring_index(projectId, "-", 1), code)
+    val path =
+      if (overrides.isEmpty) dflt
+      else {
+        val entries = overrides.toSeq.sortBy(_._1)
+          .flatMap { case (k, v) => Seq(lit(k), lit(v)) }
+        coalesce(element_at(map(entries: _*), code), dflt)
+      }
+    when(projectId.contains("-"), path).otherwise(lit(""))
   }
 }

@@ -458,8 +458,9 @@ final class Translator private (schema: GraphSchema, source: GraphSource,
           df = df.join(broadcast(anc), Seq(ancId), "left_outer")
           props.foreach { p =>
             // set-injection of an ARRAY prop flattens to its distinct
-            // elements (Types.aggResultType contract; matches the
-            // reference goldens) — scalars wrap into a 0/1-element array
+            // elements (the reference parser's set-over-array result type;
+            // matches the reference goldens) — scalars wrap into a
+            // 0/1-element array
             df = df.withColumn(p.name, anc.schema(p.name).dataType match {
               case at: org.apache.spark.sql.types.ArrayType =>
                 coalesce(array_sort(array_distinct(col(p.name))),

@@ -787,7 +787,7 @@ object TextQueries {
     // INDEPENDENTLY computed whole-corpus sketch; merge_exact pins
     // sketch(A) ⊔ sketch(B) ≡ sketch(A ∪ B) per source — the property
     // that lets a persisted sketch artifact absorb corpus growth without
-    // rescanning history (Hll.writeSketch/readSketch, spec-verified)
+    // rescanning history
     QuerySpec("vocab_hll_delta", (s, dir) => {
       val docs = t(s, dir, "documents")
       val bucket = Sampling.stableBucket(col("doc_id"))

@@ -74,18 +74,4 @@ object Types {
     }
     if (candidates.isEmpty) StringType else candidates.maxBy(rank)
   }
-
-  /** Aggregation result types (reference: tube/etl/indexers/base/
-    * parser.py:216-240): count|sum|min|max → float, set|list → array<item>.
-    * We keep Spark-natural numeric types in DataFrames and use this only
-    * when emitting output mappings for reference parity. */
-  def aggResultType(fn: String, itemType: DataType): DataType = fn match {
-    case "count" | "sum" | "min" | "max" => FloatType
-    case "set" | "list" =>
-      itemType match {
-        case ArrayType(et, _) => ArrayType(et)   // set over array flattens
-        case other            => ArrayType(other)
-      }
-    case _ => itemType
-  }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed tables for co-located joins (SCALE.md: "reuse a partitioning
   * across stages").
@@ -35,8 +35,6 @@ object Bucketing {
       .format("parquet")
       .saveAsTable(table)
   }
-
-  def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
 
   /** True when the physical plan contains no shuffle exchange — the
     * co-location check used by the spec and by `Explain` reviews.

@@ -333,81 +333,6 @@ object EventStream {
       .filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** One closed (finished) session. Timestamps in epoch micros. */
-  final case class ClosedSession(user_id: Long, session_start_us: Long,
-                                 session_end_us: Long, n_events: Long)
-  /** Per-user open-session state. */
-  final case class OpenSession(startUs: Long, lastUs: Long, nEvents: Long)
-
-  /** CLOSED-session emission via `flatMapGroupsWithState` + event-time
-    * timeout — the canonical streaming sessionizer: a session is emitted
-    * EXACTLY ONCE, when it closes. Two close paths: (a) a same-user event
-    * arrives after more than `gapMinutes` (the old session closes in-line);
-    * (b) no event arrives and the WATERMARK passes last-event + gap (the
-    * timeout branch fires on a later batch and flushes the open session).
-    * Append mode, so any downstream sink sees each session once.
-    *
-    * Scale: state is one small case class per OPEN session per user,
-    * hash-partitioned by user across executors; timeouts evict state, so
-    * idle users cost nothing after one gap horizon. `sessionizeStateful`
-    * (running counts, Update mode) and batch `sessionize` remain the
-    * other two points on the latency/semantics triangle.
-    *
-    * Input must carry a watermark on `ts` (EventTimeTimeout requires it);
-    * the caller applies `withWatermark`. */
-  def closedSessions(events: DataFrame, gapMinutes: Int)
-      : org.apache.spark.sql.Dataset[ClosedSession] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val gapUs = gapMinutes * 60L * 1000000L
-    events
-      // the watermarked `ts` column must survive the projection — the
-      // analyzer requires it upstream of an EventTimeTimeout operator
-      .select(col("user_id").cast("long").as("user_id"), col("ts"),
-        unix_micros(col("ts")).as("ts_us"))
-      .as[(Long, java.sql.Timestamp, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[OpenSession, ClosedSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, batch: Iterator[(Long, java.sql.Timestamp, Long)],
-         state: GroupState[OpenSession]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(ClosedSession(user, s.startUs, s.lastUs, s.nEvents))
-          } else {
-            val sorted = batch.map(_._3).toArray.sorted
-            val closed = scala.collection.mutable.ArrayBuffer[ClosedSession]()
-            var open = state.getOption
-            sorted.foreach { us =>
-              open match {
-                case Some(o) if us - o.lastUs <= gapUs =>
-                  open = Some(o.copy(lastUs = us, nEvents = o.nEvents + 1))
-                case Some(o) =>
-                  closed += ClosedSession(user, o.startUs, o.lastUs, o.nEvents)
-                  open = Some(OpenSession(us, us, 1L))
-                case None =>
-                  open = Some(OpenSession(us, us, 1L))
-              }
-            }
-            open.foreach { o =>
-              state.update(o)
-              // close when the watermark passes last event + gap (millis
-              // API). A straggler batch can carry events OLDER than the
-              // current watermark (flatMapGroupsWithState does not filter
-              // late rows); setTimeoutTimestamp throws below the watermark,
-              // which would kill the whole query — clamp just past it, so
-              // the stale session closes on the next watermark move instead
-              val due = o.lastUs / 1000L + gapMinutes * 60L * 1000L
-              state.setTimeoutTimestamp(
-                math.max(due, state.getCurrentWatermarkMs() + 1L))
-            }
-            closed.iterator
-          }
-      }
-  }
-
   /** Build the persisted static corpus index the ingest screen probes:
     * (exact content-fingerprint set, LSH band-key set). Both frames are
     * PERSISTED — micro-batches re-read the static side, so the caller

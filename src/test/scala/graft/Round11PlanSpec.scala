@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Round-11 pins: plan shapes for the preference / posting-cost queries
   * and the tamper-evidence property of the Merkle release artifact. */
 class Round11PlanSpec extends SparkSpec {

@@ -27,7 +27,6 @@ class Round12PlanSpec extends SparkSpec {
 
   test("lshAppendCandidates hot-key guard: with a genuinely hot bucket " +
       "the over-cap keys arrive by BROADCAST anti-join, never a window") {
-    import spark.implicits._
     // one hot bucket (key 7: 8 members > cap 2) AND one cold bucket
     // (key 9) — the survivor keeps the anti-join in the executed plan
     val old = spark.range(5).select(col("id").as("doc_id"),

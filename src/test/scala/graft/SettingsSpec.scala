@@ -105,5 +105,24 @@ class SettingsSpec extends AnyFunSuite {
       RunEtl.resolveInputs(Seq("dumps", "out"), Map("DICTIONARY_URL" -> url),
         folders = Some(Seq(dir.toString))))
     assert(e.getMessage.contains("DICTIONARY_URL") && e.getMessage.contains(url))
+    // flags: parsed apart from the positional inputs, misspellings refused
+    val a = RunEtl.parseArgs(Seq("--force", "s", "m", "--cdc", "d", "o",
+      "--source-tx-millis=0", "--bloom-prune-roots=50"))
+    assert(a.positional === Seq("s", "m", "d", "o"))
+    assert(a.force && a.cdc && !a.backup && a.restore.isEmpty)
+    assert(a.sourceTxMillis === Some(0L) && a.bloomPruneRoots === Some(50L))
+    assert(RunEtl.parseArgs(Seq("out", "--restore=idx", "--backup")) ===
+      RunEtl.Args(force = false, backup = true, cdc = false, None, None,
+        Some("idx"), Seq("out")))
+    def refused(args: String*): String =
+      intercept[IllegalArgumentException](RunEtl.parseArgs(args)).getMessage
+    for (bad <- Seq("--forse", "--bakcup", "--force=yes", "--source-tx=1"))
+      assert(refused("d", "o", bad).contains(bad))
+    for (bad <- Seq("abc", "-1", ""))
+      assert(refused("d", "o", s"--source-tx-millis=$bad")
+        .contains("--source-tx-millis"))
+    for (bad <- Seq("abc", "0", "-3"))
+      assert(refused("d", "o", s"--bloom-prune-roots=$bad")
+        .contains("--bloom-prune-roots"))
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Plan audits for the classic TPC-H join shapes: at warehouse scale the
   * difference between a broadcast dim join and a shuffled one is the whole
   * query, so the snowflake probes pin the physical strategy, not just the

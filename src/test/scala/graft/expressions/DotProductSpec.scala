@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.functions.Similarity
 

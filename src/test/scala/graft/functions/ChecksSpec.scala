@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 
 class ChecksSpec extends SparkSpec {
   import spark.implicits._

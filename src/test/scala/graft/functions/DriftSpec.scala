@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Profile.psiTerms — the PSI drift metric's defining properties. */
 class DriftSpec extends SparkSpec {

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class EmbeddingsSpec extends SparkSpec {
   import spark.implicits._

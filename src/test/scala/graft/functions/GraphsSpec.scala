@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class GraphsSpec extends SparkSpec {
   import spark.implicits._

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Max-normalized integer HITS: hand-checked fixed points, agreement with

@@ -59,14 +59,12 @@ class HtmlSpec extends SparkSpec {
       === "")
   }
 
-  test("title and stripHtml pull visible text through tag soup") {
+  test("title pulls visible text through tag soup") {
     val df = Seq("<html><head><title> My  <b>Page</b> </title></head>" +
       "<body><p>Hello&nbsp;world</p><script>nope()</script></body></html>")
       .toDF("h")
-    val r = df.select(Html.title(col("h")).as("t"),
-      Html.stripHtml(col("h")).as("s")).collect()(0)
+    val r = df.select(Html.title(col("h")).as("t")).collect()(0)
     assert(r.getString(0) === "My Page")
-    assert(r.getString(1) === "My Page Hello world")
   }
 
   test("mainContent plan is pure expressions — no UDF, no shuffle") {

@@ -47,39 +47,6 @@ class IvfSpec extends SparkSpec {
     assert(fromIndex === inline)
   }
 
-  test("appendToIndex: build-half-then-append equals build-whole under " +
-      "the same centroids; existing cell files never rewrite") {
-    val half1 = corpus.filter($"nid" < 20)
-    val half2 = corpus.filter($"nid" >= 20)
-    val path = java.nio.file.Files.createTempDirectory("ivf-app").toString
-    Ivf.buildIndex(half1, "nid", "nv", path, numCells = 2, iters = 2)
-    val before = new java.io.File(s"$path/cells").listFiles()
-      .filter(_.getName.startsWith("cell=")).flatMap(_.listFiles())
-      .map(f => f.getName -> f.lastModified()).toMap
-    Ivf.appendToIndex(spark, path, half2, "nid", "nv")
-    // append-only: every pre-existing part file untouched
-    val after = new java.io.File(s"$path/cells").listFiles()
-      .filter(_.getName.startsWith("cell=")).flatMap(_.listFiles())
-      .map(f => f.getName -> f.lastModified()).toMap
-    before.foreach { case (n, ts) => assert(after(n) === ts, n) }
-    assert(after.size > before.size)
-    // equivalence: the merged index answers exactly like an index of the
-    // UNION corpus under the same (half1-trained) centroids
-    val queries = Seq((100L, Array(1.0f, 0.0f)), (101L, Array(0.0f, 1.0f)))
-      .toDF("qid", "qv")
-    val merged = Ivf.topKIndexed(spark, path, "nid", "nv",
-        queries, "qid", "qv", k = 8, nprobe = 2).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val path2 = java.nio.file.Files.createTempDirectory("ivf-whole").toString
-    val centroids = spark.read.parquet(s"$path/centroids")
-    centroids.write.parquet(s"$path2/centroids")
-    Ivf.appendToIndex(spark, path2, corpus, "nid", "nv") // whole corpus in one go
-    val whole = Ivf.topKIndexed(spark, path2, "nid", "nv",
-        queries, "qid", "qv", k = 8, nprobe = 2).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(merged === whole)
-  }
-
   test("deleteFromIndex: affected-cells-only rewrite equals a rebuild " +
       "from the remaining corpus; untouched cells keep their files") {
     val path = java.nio.file.Files.createTempDirectory("ivf-del").toString
@@ -125,41 +92,6 @@ class IvfSpec extends SparkSpec {
     val got = spark.read.parquet(s"$path/cells").select("nid")
       .as[Long].collect().toSet
     assert(got === cells.filter(_._2 != evenCell).map(_._1).toSet)
-  }
-
-  test("appendToIndex honors int8-quantized storage") {
-    val path = java.nio.file.Files.createTempDirectory("ivf-q").toString
-    Ivf.buildIndex(corpus.filter($"nid" < 20), "nid", "nv", path,
-      numCells = 2, iters = 2, quantize = true)
-    Ivf.appendToIndex(spark, path, corpus.filter($"nid" >= 20), "nid", "nv")
-    val stored = spark.read.parquet(s"$path/cells")
-    assert(stored.schema("nv").dataType
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-      .fieldNames.contains("q"))
-    assert(stored.count() === 40)
-    val queries = Seq((100L, Array(1.0f, 0.0f))).toDF("qid", "qv")
-    val r = Ivf.topKIndexed(spark, path, "nid", "nv", queries, "qid", "qv",
-      k = 5, nprobe = 1).collect()
-    assert(r.length === 5 && r.forall(_.getAs[Long]("neighbor_id") % 2 === 0))
-  }
-
-  test("appendToIndex sniffs the stored form through an explicit URI " +
-      "scheme (Hadoop FileSystem, not java.io.File)") {
-    // address the index by a file: URI — a java.io.File existence probe
-    // sees no such path (it treats "file:" as a name component), reports
-    // "no cells yet", and would mis-append FULL-PRECISION rows into this
-    // int8 index; the Hadoop-FS probe resolves the scheme correctly
-    val dir = java.nio.file.Files.createTempDirectory("ivf-uri")
-    val path = dir.toUri.toString.stripSuffix("/") // file:///tmp/ivf-uri...
-    assert(path.startsWith("file:"))
-    Ivf.buildIndex(corpus.filter($"nid" < 20), "nid", "nv", path,
-      numCells = 2, iters = 2, quantize = true)
-    Ivf.appendToIndex(spark, path, corpus.filter($"nid" >= 20), "nid", "nv")
-    val stored = spark.read.parquet(s"$path/cells")
-    assert(stored.schema("nv").dataType
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-      .fieldNames.contains("q"), "appended rows must keep the int8 form")
-    assert(stored.count() === 40)
   }
 
   test("train on a stable sample yields the same cell partition as " +

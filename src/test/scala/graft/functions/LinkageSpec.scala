@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Blocked fuzzy matching: recall within the block structure, the

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class MultimodalSpec extends SparkSpec {
@@ -110,16 +109,6 @@ class MultimodalSpec extends SparkSpec {
       Multimodal.extractFeatures(bad).collect()
     }
     assert(ex.getMessage != null)
-  }
-
-  test("frame sampling explodes only video rows, one row per sample tick") {
-    val frames = Multimodal.sampleFrames(
-      Multimodal.syntheticMedia(docs), everyMs = 50)
-    val byMedia = frames.groupBy("media_id").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(byMedia.keySet === Set(2L))        // only the video row
-    // id=2: frames = 2+2%5 = 4 at 10fps -> 400ms; ticks 0,50,...,350
-    assert(byMedia(2L) === 8L)
   }
 
   test("imageBlockhash: decoded-byte hash equals the generator-formula " +

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Integer fixed-point PageRank: hand-checked small graphs, agreement with

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Paragraph-level near-dup: planted shared paragraphs must surface in the
   * per-doc share report and the provenance twin, and the fixed-block

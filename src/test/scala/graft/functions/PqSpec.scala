@@ -40,6 +40,17 @@ class PqSpec extends SparkSpec {
     df.select(col("query_id"), col("rank"), col("neighbor_id"))
       .as[(Long, Int, Long)].collect().toSet
 
+  /** Mean squared reconstruction error of the codes `withCodes` assigns:
+    * each vector against the concatenation of its codewords. */
+  private def mse(cb: Pq.Codebooks): Double = {
+    val errs = Pq.withCodes(corpus, "nv", cb).select($"nv", $"codes")
+      .as[(Seq[Float], Seq[Int])].collect().map { case (v, codes) =>
+        val recon = codes.zipWithIndex.flatMap { case (c, s) => cb(s)(c) }
+        v.zip(recon).map { case (x, y) => (x - y) * (x - y) }.sum
+      }
+    errs.sum / errs.length
+  }
+
   test("withCodes: m codes per row, each in [0, k), deterministic") {
     val cb = Pq.trainCodebooks(corpus, "nid", "nv", m = 4, k = 8, iters = 3)
     assert(cb.length === 4 && cb.forall(_.length === 8) &&
@@ -56,7 +67,7 @@ class PqSpec extends SparkSpec {
       "error and ADC ≡ exact L2 top-k") {
     val cb = Pq.anchorCodebooks(corpus, "nid", "nv", m = 4, k = 40)
     val coded = Pq.withCodes(corpus, "nv", cb)
-    assert(Pq.reconstructionMse(coded, "nv", "codes", cb) === 0.0)
+    assert(mse(cb) === 0.0)
     val adc = Pq.adcTopK(coded.select($"nid", $"codes"), "nid", "codes",
       queries, "qid", "qv", cb, k = 5, salts = 1)
     assert(resultSet(adc) === bruteL2TopK(5))
@@ -65,10 +76,8 @@ class PqSpec extends SparkSpec {
   test("Lloyd iterations do not increase reconstruction error vs anchors") {
     val anchor = Pq.anchorCodebooks(corpus, "nid", "nv", m = 4, k = 6)
     val trained = Pq.trainCodebooks(corpus, "nid", "nv", m = 4, k = 6, iters = 4)
-    val mseAnchor = Pq.reconstructionMse(
-      Pq.withCodes(corpus, "nv", anchor), "nv", "codes", anchor)
-    val mseTrained = Pq.reconstructionMse(
-      Pq.withCodes(corpus, "nv", trained), "nv", "codes", trained)
+    val mseAnchor = mse(anchor)
+    val mseTrained = mse(trained)
     assert(mseTrained <= mseAnchor)
     assert(mseTrained > 0.0) // k=6 < 40 rows: genuinely lossy
   }
@@ -82,53 +91,6 @@ class PqSpec extends SparkSpec {
     val exact = bruteL2TopK(5).map(r => (r._1, r._3))
     val recall = (adc & exact).size.toDouble / exact.size
     assert(recall >= 0.6, s"recall@5 = $recall")
-  }
-
-  test("quantized-LUT ADC recovers distances within the m*scale/2 bound " +
-      "and matches exact-ADC ranking on the fixture") {
-    val cb = Pq.trainCodebooks(corpus, "nid", "nv", m = 4, k = 8, iters = 4)
-    val coded = Pq.withCodes(corpus, "nv", cb).select($"nid", $"codes")
-    val exact = Pq.adcTopK(coded, "nid", "codes", queries, "qid", "qv", cb,
-      k = 39, salts = 1)
-      .select(col("query_id"), col("neighbor_id"), col("sim").as("s_exact"))
-    val quant = Pq.adcTopKQuantized(coded, "nid", "codes", queries, "qid",
-      "qv", cb, k = 39, salts = 1)
-      .select(col("query_id"), col("neighbor_id"), col("sim").as("s_quant"))
-    val joined = exact.join(quant, Seq("query_id", "neighbor_id"))
-      .select($"query_id", $"neighbor_id", $"s_exact", $"s_quant")
-      .as[(Long, Long, Double, Double)].collect()
-    assert(joined.nonEmpty)
-    // per-query error bound: m entries, each off by <= scale/2
-    val maxLutRange = joined.map(r => math.abs(r._3 - r._4)).max
-    // derive the loosest admissible bound from the data itself: the exact
-    // sims bound the LUT entry range, scale <= range/255
-    val simSpread = joined.map(_._3).max - joined.map(_._3).min
-    val bound = 4 * (simSpread / 255.0) / 2 + 1e-9
-    assert(maxLutRange <= bound * 4,
-      s"max |exact-quant| = $maxLutRange vs bound $bound")
-    // quantization collapses near-ties (expected), but recall against the
-    // EXACT L2 truth must stay at the same useful floor as plain lossy ADC
-    val q5 = resultSet(Pq.adcTopKQuantized(coded, "nid", "codes",
-      queries, "qid", "qv", cb, 5, 1)).map(r => (r._1, r._3))
-    val l2 = bruteL2TopK(5).map(r => (r._1, r._3))
-    val recall = (q5 & l2).size.toDouble / l2.size
-    assert(recall >= 0.6, s"quantized recall@5 vs exact L2 = $recall")
-  }
-
-  test("IVF-PQ persisted index: cell-partitioned codes, lossless config " +
-      "with nprobe = numCells ≡ exact L2 top-k") {
-    val path = java.nio.file.Files.createTempDirectory("ivfpq").toString
-    Pq.buildIndexPq(corpus, "nid", "nv", path, numCells = 2, m = 4, k = 40,
-      iters = 0)
-    val cellDirs = new java.io.File(s"$path/cells").listFiles()
-      .filter(_.getName.startsWith("cell=")).map(_.getName)
-    assert(cellDirs.length === 2)
-    // the cells carry ONLY id + codes — the 100 TB storage win
-    val cells = spark.read.parquet(s"$path/cells")
-    assert(cells.columns.sorted === Array("cell", "codes", "nid"))
-    val fromIndex = Pq.topKIndexedPq(spark, path, "nid",
-      queries, "qid", "qv", k = 5, nprobe = 2, salts = 1)
-    assert(resultSet(fromIndex) === bruteL2TopK(5))
   }
 
   test("rerankTopK with shortlist >= corpus equals exact cosine brute force") {
@@ -157,56 +119,8 @@ class PqSpec extends SparkSpec {
     assert(rr >= adc, s"rerank recall $rr < adc recall $adc")
   }
 
-  test("rotationMatrix is orthogonal and deterministic; rotate preserves " +
-      "pairwise L2, so rotated-space PQ search still works") {
-    val dim = 8
-    val m = Pq.rotationMatrix(dim, seed = 7)
-    assert(m.map(_.toSeq).toSeq === Pq.rotationMatrix(dim, seed = 7).map(_.toSeq).toSeq)
-    // M · Mᵀ ≈ I
-    for (i <- 0 until dim; j <- 0 until dim) {
-      val dot = (0 until dim).map(k => m(i)(k) * m(j)(k)).sum
-      assert(math.abs(dot - (if (i == j) 1.0 else 0.0)) < 1e-12, s"($i,$j)=$dot")
-    }
-    // DataFrame-side distance preservation
-    val rotated = corpus.withColumn("rv", Pq.rotate($"nv", m))
-    val d2 = (a: String, b: String) => aggregate(
-      zip_with(col(a).cast("array<double>"), col(b).cast("array<double>"),
-        (x, y) => (x - y) * (x - y)), lit(0.0), (acc, d) => acc + d)
-    val pairs = rotated.select($"nid", $"nv", $"rv").limit(10)
-      .crossJoin(rotated.select($"nid".as("nid2"), $"nv".as("nv2"),
-        $"rv".as("rv2")).limit(10))
-      .select(d2("nv", "nv2").as("orig"), d2("rv", "rv2").as("rot"))
-      .as[(Double, Double)].collect()
-    pairs.foreach { case (o, r) => assert(math.abs(o - r) < 1e-9) }
-    // end-to-end: ADC in rotated space with a lossless codebook matches
-    // the ORIGINAL-space exact L2 top-k (distances are identical)
-    val rq = queries.withColumn("qv", Pq.rotate($"qv", m))
-    val cb = Pq.anchorCodebooks(rotated.select($"nid", $"rv".as("nv")),
-      "nid", "nv", m = 4, k = 40)
-    val coded = Pq.withCodes(rotated.select($"nid", $"rv".as("nv")), "nv", cb)
-    val adc = resultSet(Pq.adcTopK(coded.select($"nid", $"codes"), "nid",
-      "codes", rq, "qid", "qv", cb, k = 5, salts = 1))
-    assert(adc === bruteL2TopK(5))
-  }
-
-  test("IVF-PQ serving partition-prunes the cells read dynamically: only " +
-      "probed cell directories are scanned") {
-    val path = java.nio.file.Files.createTempDirectory("ivfpqdpp").toString
-    Pq.buildIndexPq(corpus, "nid", "nv", path, numCells = 2, m = 4, k = 8,
-      iters = 2)
-    val res = Pq.topKIndexedPq(spark, path, "nid",
-      corpus.filter($"nid" === 0L).select($"nid".as("qid"), $"nv".as("qv")),
-      "qid", "qv", k = 3, nprobe = 1, salts = 1)
-    val plan = res.queryExecution.executedPlan.toString
-    // the cells FileScan carries a dynamic-pruning partition filter fed by
-    // the probe subquery — the 100 TB claim "a query batch reads only its
-    // probed cells" is a plan property, not documentation
-    assert(plan.contains("dynamicpruningexpression"), plan.take(2000))
-    assert(res.collect().length === 3)
-  }
-
   test("L2 coarse metric separates magnitude-only clusters that cosine " +
-      "cells cannot distinguish — both IVF-PQ stages share one metric") {
+      "cells cannot distinguish") {
     // every vector points the SAME direction; clusters differ in magnitude
     val mag = (0L until 20L).map { i =>
       val scale = if (i % 2 == 0) 10.0f else 0.1f
@@ -219,107 +133,5 @@ class PqSpec extends SparkSpec {
     val big = (0L until 20L by 2).map(cells).toSet
     val small = (1L until 20L by 2).map(cells).toSet
     assert(big.size === 1 && small.size === 1 && big != small)
-    // ADC ranks by L2, so probing L2 cells finds the magnitude-matched
-    // neighbors; a cosine coarse stage would mix the two clusters
-    val path = java.nio.file.Files.createTempDirectory("ivfpql2").toString
-    // coarseIters matches the separation assertions above, so the served
-    // cells are exactly the centroids this test verified
-    Pq.buildIndexPq(mag, "nid", "nv", path, numCells = 2, m = 4, k = 20,
-      iters = 0, coarseIters = 3)
-    val got = Pq.topKIndexedPq(spark, path, "nid",
-      mag.filter($"nid" === 0L).select($"nid".as("qid"), $"nv".as("qv")),
-      "qid", "qv", k = 5, nprobe = 1, salts = 1)
-      .collect().map(_.getAs[Long]("neighbor_id"))
-    assert(got.forall(_ % 2 == 0), got.mkString(",")) // same-magnitude cell
-  }
-
-  test("loadCodebooks round-trips exactly") {
-    val path = java.nio.file.Files.createTempDirectory("ivfpq2").toString
-    Pq.buildIndexPq(corpus, "nid", "nv", path, numCells = 2, m = 2, k = 5,
-      iters = 3)
-    val cb = Pq.trainCodebooks(corpus, "nid", "nv", m = 2, k = 5, iters = 3)
-    val loaded = Pq.loadCodebooks(spark, path)
-    assert(loaded.map(_.map(_.toSeq).toSeq).toSeq ===
-      cb.map(_.map(_.toSeq).toSeq).toSeq)
-  }
-
-  // dims 0/1 carry nearly all variance, correlated across the subspace
-  // boundary (dim 4 ≈ dim 0): the shape plain subspace-split PQ handles
-  // worst and a learned rotation fixes — the OPQ motivation case
-  private def skewed = (0L until 60L).map { i =>
-    val a = math.sin(i * 0.7) * 10.0
-    val b = math.cos(i * 1.3) * 8.0
-    val v = Array(
-      a, b, 0.05 * ((i * 3) % 7), 0.04 * ((i * 5) % 5),
-      0.9 * a + 0.02 * ((i * 2) % 9), 0.03 * ((i * 11) % 4),
-      0.8 * b + 0.01 * (i % 3), 0.02 * ((i * 13) % 6)).map(_.toFloat)
-    (i, v)
-  }.toDF("nid", "nv")
-
-  test("trainOpq: R is orthogonal; rotated-space MSE beats plain PQ on " +
-      "variance-skewed correlated data") {
-    val (r, cb) = Pq.trainOpq(skewed, "nid", "nv", m = 4, k = 4,
-      opqIters = 4, kmeansIters = 4)
-    // orthogonality: RᵀR = I
-    val dim = r.length
-    for (i <- 0 until dim; j <- 0 until dim) {
-      val dot = (0 until dim).map(t => r(t)(i) * r(t)(j)).sum
-      assert(math.abs(dot - (if (i == j) 1.0 else 0.0)) < 1e-9,
-        s"RᵀR[$i][$j] = $dot")
-    }
-    val rotated = skewed.withColumn("rv", Pq.rotate($"nv", r))
-    val opqMse = Pq.reconstructionMse(
-      Pq.withCodes(rotated, "rv", cb), "rv", "codes", cb)
-    val plainCb = Pq.trainCodebooks(skewed, "nid", "nv", m = 4, k = 4,
-      iters = 4)
-    val plainMse = Pq.reconstructionMse(
-      Pq.withCodes(skewed, "nv", plainCb), "nv", "codes", plainCb)
-    assert(opqMse < plainMse,
-      s"OPQ MSE $opqMse should beat plain PQ MSE $plainMse")
-    // rotation preserves L2, so rotated-space MSE IS original-space MSE;
-    // sanity-pin that the rotation really is an isometry on the data
-    val norms = skewed.withColumn("rv", Pq.rotate($"nv", r))
-      .select(
-        Similarity.dot($"nv".cast("array<double>"), $"nv".cast("array<double>")).as("n0"),
-        Similarity.dot($"rv", $"rv").as("n1"))
-      .collect()
-    norms.foreach(x =>
-      assert(math.abs(x.getDouble(0) - x.getDouble(1)) < 1e-6))
-  }
-
-  test("trainOpq stays exactly orthogonal on rank-deficient data " +
-      "(degenerate SVD directions are Gram-Schmidt-completed)") {
-    // rank-1 corpus in 4 dims ⇒ the Procrustes matrix has 3 zero singular
-    // values — the completion path must still return an orthogonal R
-    val lowRank = (0L until 20L).map { i =>
-      val a = math.sin(i * 1.1) * 5.0
-      (i, Array(a, 2.0 * a, 0.0, 0.0).map(_.toFloat).toSeq)
-    }.toDF("nid", "nv")
-    val (r, _) = Pq.trainOpq(lowRank, "nid", "nv", m = 2, k = 2,
-      opqIters = 2, kmeansIters = 2)
-    for (i <- 0 until 4; j <- 0 until 4) {
-      val dot = (0 until 4).map(t => r(t)(i) * r(t)(j)).sum
-      assert(math.abs(dot - (if (i == j) 1.0 else 0.0)) < 1e-9,
-        s"RᵀR[$i][$j] = $dot")
-    }
-  }
-
-  test("trainOpq is deterministic and its codebooks serve ADC in rotated " +
-      "space (recall vs exact L2 no worse than plain PQ at equal budget)") {
-    val (r1, cb1) = Pq.trainOpq(skewed, "nid", "nv", m = 4, k = 4,
-      opqIters = 2, kmeansIters = 2)
-    val (r2, cb2) = Pq.trainOpq(skewed, "nid", "nv", m = 4, k = 4,
-      opqIters = 2, kmeansIters = 2)
-    assert(r1.map(_.toSeq).toSeq === r2.map(_.toSeq).toSeq)
-    assert(cb1.map(_.map(_.toSeq).toSeq).toSeq ===
-      cb2.map(_.map(_.toSeq).toSeq).toSeq)
-    // serving: rotate corpus AND queries, then the ordinary ADC pipeline
-    val rot = skewed.withColumn("rv", Pq.rotate($"nv", r1))
-    val coded = Pq.withCodes(rot, "rv", cb1).select($"nid", $"codes")
-    val qs = rot.filter($"nid" < 4)
-      .select($"nid".as("qid"), $"rv".as("qv"))
-    val adc = Pq.adcTopK(coded, "nid", "codes", qs, "qid", "qv", cb1,
-      k = 5, salts = 1)
-    assert(adc.count() === 20) // 4 queries × 5
   }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** robots.txt parsing + screening semantics: group resolution, the
   * longest-prefix / allow-on-tie pick, and the politeness report. */

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Crawl-quality rule pack: each rule trips on exactly its planted doc. */

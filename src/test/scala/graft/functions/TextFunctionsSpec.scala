@@ -59,13 +59,6 @@ class TextFunctionsSpec extends SparkSpec {
     assert(math.abs(r.getDouble(6) - 2.0) < 1e-9)    // avg_word_len
   }
 
-  test("charShingles: sliding character n-grams, lowercased, distinct") {
-    val r = Seq("AbAb", "x").toDF("text")
-      .select(TextFunctions.charShingles($"text", 2).as("s")).collect()
-    assert(r(0).getSeq[String](0).sorted === Seq("ab", "ba"))
-    assert(r(1).getSeq[String](0) === Seq.empty)
-  }
-
   test("tokens drop empties for leading tabs/newlines (PropertySpec regression)") {
     val r = Seq("\tword\nmore ").toDF("text")
       .select(TextFunctions.tokens($"text")).collect()(0).getSeq[String](0)

@@ -56,32 +56,24 @@ class AggExprSpec extends SparkSpec {
     assert(r.isNullAt(3))
   }
 
-  test("authResourcePath: scalar and array forms; project codes keep dashes") {
-    val r = Seq(("prog-proj-x", Seq("p1-a", "p2-b-c")))
-      .toDF("pid", "pids")
-      .select(Project.authResourcePath($"pid").as("a"),
-        Project.authResourcePathArray($"pids").as("arr")).collect()(0)
+  test("authResourcePath: project codes keep dashes") {
+    val r = Seq("prog-proj-x").toDF("pid")
+      .select(Project.authResourcePath($"pid").as("a")).collect()(0)
     assert(r.getString(0) === "/programs/prog/projects/proj-x")
-    assert(r.getSeq[String](1) === Seq(
-      "/programs/p1/projects/a", "/programs/p2/projects/b-c"))
   }
 
   test("authResourcePath: override map hits by project code; unsplittable " +
       "ids yield empty (reference post_process semantics)") {
     val overrides = Map("proj-x" -> "/custom/x")
-    val r = Seq(("prog-proj-x", "prog-other", "nodash",
-        Seq("p1-proj-x", "plain")))
-      .toDF("hit", "miss", "bad", "pids")
+    val r = Seq(("prog-proj-x", "prog-other", "nodash"))
+      .toDF("hit", "miss", "bad")
       .select(
         Project.authResourcePath($"hit", overrides).as("hit"),
         Project.authResourcePath($"miss", overrides).as("miss"),
-        Project.authResourcePath($"bad", overrides).as("bad"),
-        Project.authResourcePathArray($"pids", Map("proj-x" -> "/custom/x"))
-          .as("arr"))
+        Project.authResourcePath($"bad", overrides).as("bad"))
       .collect()(0)
     assert(r.getString(0) === "/custom/x")
     assert(r.getString(1) === "/programs/prog/projects/other")
     assert(r.getString(2) === "")
-    assert(r.getSeq[String](3) === Seq("/custom/x", ""))
   }
 }

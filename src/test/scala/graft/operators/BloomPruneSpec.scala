@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** GraphOps.bloomPrune — runtime-filter-style row pruning exposed as an
-  * operator, for the join shapes Catalyst's InjectRuntimeFilter cannot
-  * see across. */
+/** GraphOps.buildBloom + pruneWithBloom — runtime-filter-style row
+  * pruning exposed as an operator, for the join shapes Catalyst's
+  * InjectRuntimeFilter cannot see across. */
 class BloomPruneSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,8 +14,8 @@ class BloomPruneSpec extends SparkSpec {
   private def roots = (0L until 50L).toDF("root_id")
 
   test("no false negatives: pruned output contains every true match") {
-    val pruned = GraphOps.bloomPrune(edges, $"root_id", roots, $"root_id",
-      expectedItems = 50)
+    val pruned = GraphOps.pruneWithBloom(edges, $"root_id",
+      GraphOps.buildBloom(roots, $"root_id", expectedItems = 50))
     val expected = edges.join(roots, Seq("root_id"), "left_semi")
       .select($"child_id", $"root_id").as[(Long, Long)].collect().toSet
     val got = pruned.select($"child_id", $"root_id")
@@ -30,7 +29,8 @@ class BloomPruneSpec extends SparkSpec {
   test("string keys work (both sides go through xxhash64)") {
     val e = Seq(("a", 1), ("b", 2), ("c", 3), ("d", 4)).toDF("k", "v")
     val b = Seq("b", "d").toDF("k")
-    val kept = GraphOps.bloomPrune(e, $"k", b, $"k", expectedItems = 2)
+    val kept = GraphOps.pruneWithBloom(e, $"k",
+        GraphOps.buildBloom(b, $"k", expectedItems = 2))
       .select("k").as[String].collect().toSet
     assert(Set("b", "d").subsetOf(kept))
   }
@@ -40,8 +40,8 @@ class BloomPruneSpec extends SparkSpec {
     // through parquet so ConvertToLocalRelation can't fold the filter away
     val dir = java.nio.file.Files.createTempDirectory("bloom").toString
     edges.write.mode("overwrite").parquet(dir)
-    val pruned = GraphOps.bloomPrune(spark.read.parquet(dir), $"root_id",
-      roots, $"root_id", expectedItems = 50)
+    val pruned = GraphOps.pruneWithBloom(spark.read.parquet(dir), $"root_id",
+      GraphOps.buildBloom(roots, $"root_id", expectedItems = 50))
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("might_contain"))
     assert(!plan.contains("Join"))
@@ -51,8 +51,8 @@ class BloomPruneSpec extends SparkSpec {
   test("pruning before an exact join leaves the join result unchanged") {
     val direct = edges.join(roots, Seq("root_id")).as[(Long, Long)]
       .collect().toSet
-    val viaBloom = GraphOps.bloomPrune(edges, $"root_id", roots, $"root_id",
-        expectedItems = 50)
+    val viaBloom = GraphOps.pruneWithBloom(edges, $"root_id",
+        GraphOps.buildBloom(roots, $"root_id", expectedItems = 50))
       .join(roots, Seq("root_id")).as[(Long, Long)].collect().toSet
     assert(viaBloom === direct)
   }

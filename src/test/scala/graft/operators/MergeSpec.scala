@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** MERGE/upsert snapshot-rewrite semantics. */
 class MergeSpec extends SparkSpec {

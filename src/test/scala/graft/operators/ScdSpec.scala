@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** SCD2 history: change collapse, validity chaining, null-state safety. */

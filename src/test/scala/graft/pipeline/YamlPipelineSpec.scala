@@ -7,7 +7,6 @@ import graft.schema._
   * MappingYaml → Translator over the TPC-H graph — proving a reference
   * user's mapping file drives this engine end-to-end. */
 class YamlPipelineSpec extends SparkSpec {
-  import spark.implicits._
 
   private val yaml =
     """mappings:

@@ -35,8 +35,8 @@ class BucketingSpec extends SparkSpec {
     Bucketing.writeBucketed(orders, "b_orders", "o_orderkey", buckets = 8)
     Bucketing.writeBucketed(items, "b_items", "l_orderkey", buckets = 8)
 
-    val joined = Bucketing.read(spark, "b_orders")
-      .join(Bucketing.read(spark, "b_items"),
+    val joined = spark.table("b_orders")
+      .join(spark.table("b_items"),
         col("o_orderkey") === col("l_orderkey"))
 
     assert(joined.count() === 5000)

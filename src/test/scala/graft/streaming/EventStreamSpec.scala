@@ -39,51 +39,6 @@ class EventStreamSpec extends SparkSpec {
     assert(s(2L) === 2L) // 30min + 1us → split
   }
 
-  test("closedSessions emits each finished session exactly once — both " +
-      "the in-line gap split and the watermark timeout path") {
-    val dir = java.nio.file.Files.createTempDirectory("evclosed")
-    val stage = java.nio.file.Files.createTempDirectory("evclosed_stage")
-    // the file stream source does NOT recurse into subdirectories: each
-    // drop must be a FILE in the watched dir (the real drop-zone shape),
-    // so stage the parquet write and move its part file in
-    def write(name: String, rows: Seq[(Long, Timestamp)]): Unit = {
-      val tmp = s"$stage/$name"
-      rows.toDF("user_id", "ts").coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get()
-      java.nio.file.Files.move(part,
-        java.nio.file.Paths.get(s"$dir/$name"))
-    }
-    val schema = Seq((1L, ts(0))).toDF("user_id", "ts").schema
-    // batch 1: user 1 has an open session; user 2 has one too
-    write("a.parquet", Seq((1L, ts(0)), (1L, ts(10)), (2L, ts(5))))
-    val t2h = Timestamp.valueOf("2024-01-01 02:00:00")
-    val q = EventStream.closedSessions(
-      EventStream.normalizeTs(spark.readStream.schema(schema)
-          .option("pathGlobFilter", "*.parquet").parquet(dir.toString))
-        .withWatermark("ts", "0 seconds"), gapMinutes = 30)
-      .toDF().writeStream.outputMode("append").format("memory")
-      .queryName("closed_spec").start()
-    try {
-      q.processAllAvailable()
-      // nothing closed yet — both sessions still open
-      assert(spark.table("closed_spec").count() === 0)
-      // batch 2: user 1 returns after 2h (in-line close of session 1);
-      // the watermark advance also times out user 2's idle session
-      write("b.parquet", Seq((1L, t2h)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val closed = spark.table("closed_spec").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    def us(t: Timestamp) = t.getTime * 1000L
-    assert(closed === Set(
-      (1L, us(ts(0)), us(ts(10)), 2L),  // in-line gap split
-      (2L, us(ts(5)), us(ts(5)), 1L)))  // event-time timeout flush
-  }
-
   test("windowed agg buckets to tumbling windows (batch) with exact distinct") {
     val events = Seq(
       (1L, ts(5), 1.0), (2L, ts(25), 2.0),          // hour 0 window? min 5/25 → same hour
