@@ -80,9 +80,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("graft_minhash"),
       new ExpressionInfo(classOf[MinhashAgg].getName, "graft_minhash"),
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 3,
-          "graft_minhash takes exactly 3 arguments (hash64, k, md5lcg)")
-        MinhashAgg(children.head, children(1), children(2))
+        require(children.length == 2,
+          "graft_minhash takes exactly 2 arguments (hash64, k)")
+        MinhashAgg(children.head, children(1))
           .toAggregateExpression()
       }))
     ext.injectFunction((

@@ -4,9 +4,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
-/** `graft_minhash(hash64, k, md5lcg)` — the k-function MinHash signature
+/** `graft_minhash(hash64, k)` — the k-function MinHash signature
   * as ONE imperative partial aggregate. The frame formulation
   * (`groupBy(id).agg(min(f_0(h)), …, min(f_63(h)))`) plans 64 separate
   * aggregate functions whose 64-buffer update runs OUTSIDE whole-stage
@@ -16,22 +16,17 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType
   * one long[k] and update is a tight compiled loop; the shuffle carries
   * one 8k-byte blob per group.
   *
-  * BIT-IDENTICAL to the frame form by construction, family selected by
-  * the boolean literal `md5lcg`:
-  *   - true  — [[graft.functions.Dedup.Md5Hasher]]'s LCG family:
-  *     f_i(h) = (a_i·(h & 0xFFFFFFFF) + b_i) mod (2³¹−1), constants from
-  *     `Md5Hasher.saltConsts(i)` (shared, never duplicated);
-  *   - false — [[graft.functions.Dedup.XxHasher]]'s
-  *     `xxhash64(h, i)` = XXH64.hashInt(i, XXH64.hashLong(h, 42)) — the
-  *     exact per-type chain of Spark's XxHash64 over a (LONG, INT) row.
-  * `MinhashAggSpec` pins both families against the composed form.
+  * BIT-IDENTICAL to the frame form by construction: the family is
+  * [[graft.functions.Dedup.Md5Hasher]]'s LCG,
+  * f_i(h) = (a_i·(h & 0xFFFFFFFF) + b_i) mod (2³¹−1), constants from
+  * `Md5Hasher.saltConsts(i)` (shared, never duplicated).
+  * `MinhashAggSpec` pins it against the composed form.
   * Null hashes are skipped (SQL aggregate semantics); groups are
   * non-empty by construction (explode output), so the MaxValue-seeded
   * buffer never surfaces. */
 case class MinhashAgg(
     child: Expression,
     kExpr: Expression,
-    famExpr: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Long]] {
@@ -43,10 +38,6 @@ case class MinhashAgg(
   }
   private lazy val k: Int =
     kOpt.getOrElse(sys.error("graft_minhash: k rejected by analysis"))
-  private lazy val md5lcg: Boolean = famExpr.eval() match {
-    case b: Boolean => b
-    case _ => sys.error("graft_minhash: family rejected by analysis")
-  }
   // LCG constants resolved once per operator, not per row
   private lazy val consts: Array[(Long, Long)] =
     (0 until k).map(graft.functions.Dedup.Md5Hasher.saltConsts).toArray
@@ -62,9 +53,6 @@ case class MinhashAgg(
     else if (!kOpt.exists(v => v >= 1 && v <= 4096))
       TypeCheckResult.TypeCheckFailure(
         s"graft_minhash k must be in [1, 4096]")
-    else if (!famExpr.foldable || famExpr.dataType != BooleanType)
-      TypeCheckResult.TypeCheckFailure(
-        "graft_minhash md5lcg must be a boolean literal")
     else TypeCheckResult.TypeCheckSuccess
 
   override def createAggregationBuffer(): Array[Long] =
@@ -73,26 +61,13 @@ case class MinhashAgg(
   override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val h = v.asInstanceOf[Long]
-      if (md5lcg) {
-        val low = h & 0xFFFFFFFFL
-        var i = 0
-        while (i < k) {
-          val c = consts(i)
-          val s = (c._1 * low + c._2) % 2147483647L
-          if (s < buffer(i)) buffer(i) = s
-          i += 1
-        }
-      } else {
-        val base = org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashLong(h, 42L)
-        var i = 0
-        while (i < k) {
-          val s = org.apache.spark.sql.catalyst.expressions.XXH64
-            .hashInt(i, base)
-          if (s < buffer(i)) buffer(i) = s
-          i += 1
-        }
+      val low = v.asInstanceOf[Long] & 0xFFFFFFFFL
+      var i = 0
+      while (i < k) {
+        val c = consts(i)
+        val s = (c._1 * low + c._2) % 2147483647L
+        if (s < buffer(i)) buffer(i) = s
+        i += 1
       }
     }
     buffer
@@ -124,7 +99,7 @@ case class MinhashAgg(
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child, kExpr, famExpr)
+  override def children: Seq[Expression] = Seq(child, kExpr)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): MinhashAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -132,8 +107,7 @@ case class MinhashAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): MinhashAgg =
-    copy(child = newChildren(0), kExpr = newChildren(1),
-      famExpr = newChildren(2))
+    copy(child = newChildren(0), kExpr = newChildren(1))
 
   override def prettyName: String = "graft_minhash"
 }

@@ -19,10 +19,8 @@ import org.apache.spark.sql.functions._
   *   - all ratios are integer floor-ppm (`1000000·ok div total`), so the
   *     report is engine-exact and order-independent;
   *   - [[Uniqueness]] is the one check that genuinely needs a distinct —
-  *     count_distinct here (exact, two-phase partial agg). At extreme
-  *     cardinality swap `exactDistinct = false` to run it as
-  *     approx_count_distinct (HLL, mergeable sketch, no expand) and treat
-  *     the ppm as an estimate.
+  *     count_distinct here (exact, two-phase partial agg), so the oracle
+  *     recomputes its ppm.
   *
   * An empty input passes every ratio check vacuously (observed pinned to
   * 1e6, never NULL): there are no offending rows.
@@ -92,14 +90,12 @@ object Checks {
     * (check, col) for a deterministic report. The fan-out to one row per
     * check is an explode over the single summary row — NOT a union of
     * selects, which would re-run the aggregate once per check. */
-  def run(df: DataFrame, checks: Seq[Check],
-          exactDistinct: Boolean = true): DataFrame = {
+  def run(df: DataFrame, checks: Seq[Check]): DataFrame = {
     require(checks.nonEmpty, "no checks declared")
     val aggs: Seq[Column] = count(lit(1)).as("_total") +: checks.zipWithIndex
       .flatMap {
         case (Uniqueness(c, _), i) =>
-          Seq(if (exactDistinct) count_distinct(col(c)).as(s"_ok$i")
-              else approx_count_distinct(col(c)).as(s"_ok$i"))
+          Seq(count_distinct(col(c)).as(s"_ok$i"))
         case (chk, i) =>
           Seq(count(when(chk.base && chk.ok, 1)).as(s"_ok$i"),
               count(when(chk.base, 1)).as(s"_base$i"))

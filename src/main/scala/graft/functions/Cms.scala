@@ -16,21 +16,20 @@ import org.apache.spark.sql.functions._
   * sketch size times the partition count, independent of item count.
   * Estimation broadcasts the (tiny) sketch onto the queried items.
   *
-  * Hashing is pluggable exactly like [[Dedup.Hasher]]: `XxHasher` is the
-  * production default; `Md5Hasher` makes every cell recomputable in plain
-  * SQL for the differential oracle. Same plans either way. */
+  * Cells hash with [[Dedup.Md5Hasher]], so every cell is recomputable in
+  * plain SQL for the differential oracle. */
 object Cms {
 
   /** Build the sketch: one row per non-empty (r, b) cell, r < depth,
     * b < width, cnt = how many items hashed there. */
-  def sketch(items: DataFrame, itemCol: String, depth: Int, width: Int,
-             hasher: Dedup.Hasher = Dedup.XxHasher): DataFrame = {
+  def sketch(items: DataFrame, itemCol: String, depth: Int,
+             width: Int): DataFrame = {
     require(depth >= 1 && width >= 2, s"bad sketch dims $depth x $width")
     items
       .select(col(itemCol).as("_i"),
         explode(sequence(lit(0), lit(depth - 1))).as("r"))
       .select(col("r"),
-        pmod(hasher(col("r"), col("_i")), lit(width.toLong)).as("b"))
+        pmod(Dedup.Md5Hasher(col("r"), col("_i")), lit(width.toLong)).as("b"))
       .groupBy("r", "b").agg(count(lit(1)).as("cnt"))
   }
 
@@ -38,12 +37,12 @@ object Cms {
     * min-over-rows upper bound (never underestimates; overestimates only
     * on collisions). `sk` broadcasts — it is at most depth·width rows. */
   def estimate(sk: DataFrame, items: DataFrame, itemCol: String,
-               depth: Int, width: Int,
-               hasher: Dedup.Hasher = Dedup.XxHasher): DataFrame = {
+               depth: Int, width: Int): DataFrame = {
     require(depth >= 1 && width >= 2, s"bad sketch dims $depth x $width")
     items
       .withColumn("r", explode(sequence(lit(0), lit(depth - 1))))
-      .withColumn("b", pmod(hasher(col("r"), col(itemCol)), lit(width.toLong)))
+      .withColumn("b",
+        pmod(Dedup.Md5Hasher(col("r"), col(itemCol)), lit(width.toLong)))
       .join(broadcast(sk), Seq("r", "b"), "left")
       .groupBy(col(itemCol))
       .agg(min(coalesce(col("cnt"), lit(0L))).as("est"))

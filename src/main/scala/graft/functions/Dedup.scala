@@ -22,26 +22,11 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Dedup {
 
-  /** Pluggable 64-bit hash family behind the signature/fingerprint kernels.
-    * Production default is `XxHasher` (codegen'd xxhash64 — fastest).
-    * `Md5Hasher` computes the same kernels from md5-prefix longs — the
-    * cross-engine trick `Sampling.stableBucket` already uses — so a
-    * differential oracle in another SQL engine (DuckDB has no xxhash64)
-    * can recompute bit-identical signatures. Same plans, same caps; only
-    * the leaf hash expression changes. */
-  sealed trait Hasher {
-    def apply(cols: Column*): Column
-    /** Hash an `array<long>` column with an integer salt. */
-    def hashArray(arr: Column, salt: Column): Column
-    /** The k-function family over an already-hashed long `h` — called k
-      * times per element, so it must be CHEAP. */
-    def salted(h: Column, i: Int): Column = apply(h, lit(i))
-  }
-  object XxHasher extends Hasher {
-    def apply(cols: Column*): Column = xxhash64(cols: _*)
-    def hashArray(arr: Column, salt: Column): Column = xxhash64(arr, salt)
-  }
-  object Md5Hasher extends Hasher {
+  /** The hash family behind every signature/fingerprint kernel: 60-bit
+    * md5-prefix longs — the cross-engine trick `Sampling.stableBucket`
+    * already uses — so a differential oracle in another SQL engine
+    * (DuckDB has no xxhash64) recomputes bit-identical signatures. */
+  object Md5Hasher {
     /** 60-bit long from the md5 hex prefix: (hex[0,7) << 32) | hex[8,16).
       * The 7-hex-char high half keeps every intermediate under 2^60, so
       * neither ANSI Spark nor BIGINT engines can overflow. SQL twin:
@@ -72,7 +57,7 @@ object Dedup {
       * mod p, p = 2^31−1. a_i < 2^28 keeps a_i·h32 < 2^60 — no overflow
       * under ANSI or BIGINT. Pure integer arithmetic, so any SQL engine
       * recomputes it exactly; constants derive from i alone. */
-    override def salted(h: Column, i: Int): Column = {
+    def salted(h: Column, i: Int): Column = {
       val (a, b) = saltConsts(i)
       (lit(a) * h.bitwiseAND(lit(0xFFFFFFFFL)) + lit(b)) % lit(2147483647L)
     }
@@ -369,41 +354,39 @@ object Dedup {
     * salt functions to that long into a single `long[k]` buffer — partial
     * (map-side) aggregation collapses to one 8 KB blob per doc per
     * partition before the shuffle, the shape that survives a 100 TB
-    * corpus. The salt families are XxHasher's `xxhash64(h, i)` and
-    * Md5Hasher's LCG `(a_i·h32 + b_i) mod (2³¹−1)` — both reproduced
-    * bit-identically inside the aggregate (shared `saltConsts`, Spark's
-    * own XXH64 statics) and pinned by `MinhashAggSpec` against
-    * [[minhashSignaturesComposed]], the k-min-columns frame form kept
-    * below as the executable spec.
+    * corpus. The salt family is Md5Hasher's LCG
+    * `(a_i·h32 + b_i) mod (2³¹−1)`, reproduced bit-identically inside the
+    * aggregate (shared `saltConsts`) and pinned by `MinhashAggSpec`
+    * against [[minhashSignaturesComposed]], the k-min-columns frame form
+    * kept below as the executable spec.
     *
     * Docs with empty shingle sets produce no row (explode drops them). */
   def minhashSignatures(docs: DataFrame, idCol: String, shingleCol: String,
-                        k: Int, hasher: Hasher = XxHasher): DataFrame = {
+                        k: Int): DataFrame = {
     val hashed = docs
       .select(col(idCol), explode(col(shingleCol)).as("_sh"))
-      .select(col(idCol), hasher(col("_sh")).as("_h"))
+      .select(col(idCol), Md5Hasher(col("_sh")).as("_h"))
     // ONE imperative aggregate (native graft_minhash), not k min()
     // columns: the 64-function frame plan runs its update outside
     // whole-stage codegen (method-size fallback → 64 interpreted evals
     // per row, profiled ~20 s task CPU at sf0.1) and ships a 64-column
     // buffer; the imperative buffer is one long[k] with a compiled
-    // loop. Families bit-pinned against the frame form in
+    // loop. Family bit-pinned against the frame form in
     // MinhashAggSpec; [[minhashSignaturesComposed]] stays as the
     // executable spec.
     hashed.groupBy(col(idCol))
-      .agg(call_function("graft_minhash", col("_h"), lit(k),
-        lit(hasher eq Md5Hasher)).as("sig"))
+      .agg(call_function("graft_minhash", col("_h"), lit(k)).as("sig"))
   }
 
   /** The k-min-columns frame formulation — the executable spec
     * [[minhashSignatures]]' native aggregate is pinned against. */
   private[graft] def minhashSignaturesComposed(
       docs: DataFrame, idCol: String, shingleCol: String,
-      k: Int, hasher: Hasher = XxHasher): DataFrame = {
+      k: Int): DataFrame = {
     val hashed = docs
       .select(col(idCol), explode(col(shingleCol)).as("_sh"))
-      .select(col(idCol), hasher(col("_sh")).as("_h"))
-    val aggs = (0 until k).map(i => min(hasher.salted(col("_h"), i)).as(s"_m$i"))
+      .select(col(idCol), Md5Hasher(col("_sh")).as("_h"))
+    val aggs = (0 until k).map(i => min(Md5Hasher.salted(col("_h"), i)).as(s"_m$i"))
     hashed.groupBy(col(idCol))
       .agg(aggs.head, aggs.tail: _*)
       .select(col(idCol), array((0 until k).map(i => col(s"_m$i")): _*).as("sig"))
@@ -414,13 +397,12 @@ object Dedup {
     * Returns (id, band, band_key) — one exploded row per band, so candidate
     * generation is a plain equi-join on (band, band_key). */
   def lshBands(df: DataFrame, idCol: String, sigCol: String,
-               bands: Int, rowsPerBand: Int,
-               hasher: Hasher = XxHasher): DataFrame =
+               bands: Int, rowsPerBand: Int): DataFrame =
     df.select(
         col(idCol),
         posexplode(
           transform(sequence(lit(0), lit(bands - 1)),
-            b => hasher.hashArray(
+            b => Md5Hasher.hashArray(
               slice(col(sigCol), b * rowsPerBand + 1, lit(rowsPerBand)), b)))
           .as(Seq("band", "band_key")))
 
@@ -429,26 +411,24 @@ object Dedup {
     * computed as array HOFs over the doc's own pre-hashed shingle array
     * instead of an explode + groupBy (which would be a stateful streaming
     * aggregation). `hashedShingles` must be a MATERIALIZED column of
-    * `hasher(shingle)` longs (the HOF re-eval trap — passing the raw
+    * `Md5Hasher(shingle)` longs (the HOF re-eval trap — passing the raw
     * hash expression would recompute it k times). Callers filter empty
     * shingle sets first (`array_min([])` is null), mirroring the batch
     * path where explode drops them. Interpreted HOF per row — acceptable
     * on an ingest stream's arrival rate; the batch kernel remains the
     * corpus-scale default. */
-  def rowMinhashSignature(hashedShingles: Column, k: Int,
-                          hasher: Hasher = XxHasher): Column =
+  def rowMinhashSignature(hashedShingles: Column, k: Int): Column =
     array((0 until k).map(i =>
-      array_min(transform(hashedShingles, h => hasher.salted(h, i)))): _*)
+      array_min(transform(hashedShingles, h => Md5Hasher.salted(h, i)))): _*)
 
   /** Per-row LSH band keys of a row signature — [[lshBands]] semantics
     * packaged as an array of (band, band_key) structs so a stream can
     * explode and equi-join them against a static band index. Bit-equal
     * to the batch keys: same slices, same `hashArray(slice, band)`. */
-  def rowBandKeys(sig: Column, bands: Int, rowsPerBand: Int,
-                  hasher: Hasher = XxHasher): Column =
+  def rowBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
     transform(sequence(lit(0), lit(bands - 1)),
       b => struct(b.as("band"),
-        hasher.hashArray(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), b)
+        Md5Hasher.hashArray(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), b)
           .as("band_key")))
 
   /** In-bucket pair emission: group the (already capped) inverted index
@@ -995,11 +975,11 @@ object Dedup {
     * partition enters the shuffle). Prefer this over the per-row `simhash`
     * Column for corpus-wide fingerprinting: the array-HOF form evaluates
     * interpreted and allocates a 64-slot array per token. */
-  def simhashFingerprints(docs: DataFrame, idCol: String, tokCol: String,
-                          hasher: Hasher = XxHasher): DataFrame = {
+  def simhashFingerprints(docs: DataFrame, idCol: String,
+                          tokCol: String): DataFrame = {
     val hashed = docs
       .select(col(idCol), explode(col(tokCol)).as("_t"))
-      .select(col(idCol), hasher(col("_t")).as("_h"))
+      .select(col(idCol), Md5Hasher(col("_t")).as("_h"))
     val votes = (0 until 64).map { i =>
       sum(when(col("_h").bitwiseAND(lit(1L << i)) =!= 0, 1L).otherwise(-1L))
         .as(s"_v$i")
@@ -1012,7 +992,7 @@ object Dedup {
           .reduce((a, b) => a.bitwiseOR(b)).as("sh64"))
   }
 
-  /** SimHash (64-bit): each token's xxhash64 votes ±1 on every bit;
+  /** SimHash (64-bit): each token's `Md5Hasher` long votes ±1 on every bit;
     * fingerprint bit i is 1 iff the vote sum is positive. Near-dups =
     * fingerprints within small Hamming distance. Per-row Column form —
     * use `simhashFingerprints` for whole-corpus runs. */
@@ -1022,7 +1002,7 @@ object Dedup {
       array_repeat(lit(0L), 64),
       (acc, t) =>
         zip_with(acc, bitMasks,
-          (a, m) => a + when(xxhash64(t).bitwiseAND(m) =!= 0, 1L).otherwise(-1L)))
+          (a, m) => a + when(Md5Hasher(t).bitwiseAND(m) =!= 0, 1L).otherwise(-1L)))
     aggregate(
       zip_with(votes, bitMasks, (v, m) => when(v > 0, m).otherwise(lit(0L))),
       lit(0L), (acc, x) => acc.bitwiseOR(x))
@@ -1171,8 +1151,8 @@ object Dedup {
     * functions of content. */
   def ingestDedupReport(oldDocs: DataFrame, newDocs: DataFrame,
                         idCol: String, textCol: String, shingleN: Int = 3,
-                        k: Int = 64, bands: Int = 16, rowsPerBand: Int = 4,
-                        hasher: Hasher = XxHasher): DataFrame = {
+                        k: Int = 64, bands: Int = 16,
+                        rowsPerBand: Int = 4): DataFrame = {
     require(k == bands * rowsPerBand,
       s"signature length $k must equal bands*rowsPerBand=${bands * rowsPerBand}")
     def fps(df: DataFrame) = df.select(col(idCol),
@@ -1181,8 +1161,8 @@ object Dedup {
       minhashSignatures(
         df.select(col(idCol),
           TextFunctions.wordShingles(col(textCol), shingleN).as("_sh")),
-        idCol, "_sh", k, hasher),
-      idCol, "sig", bands, rowsPerBand, hasher)
+        idCol, "_sh", k),
+      idCol, "sig", bands, rowsPerBand)
     val newFps = fps(newDocs)
     val exactHits = newFps
       .join(fps(oldDocs).select(col("_fp")), Seq("_fp"), "left_semi")
@@ -1217,16 +1197,15 @@ object Dedup {
     * aggregation counts windows and hits from the same rows. Hot
     * boilerplate windows are join-key skew — AQE's skew split handles the
     * join; nothing is quadratic. O(tokens · n) window build, two shuffles.
-    *
-    * `hasher`: `XxHasher` prod default; `Md5Hasher` makes the whole report
-    * recomputable in any SQL engine (the differential-oracle mode). */
+    * Windows hash with `Md5Hasher`, so the whole report is recomputable in
+    * any SQL engine. */
   def substringDupReport(docs: DataFrame, idCol: String, textCol: String,
-                         n: Int, hasher: Hasher = XxHasher): DataFrame = {
+                         n: Int): DataFrame = {
     val ex = docs.select(col(idCol), explode_outer(
         array_distinct(TextFunctions.wordNgrams(col(textCol), n))).as("_w"))
       // preserve NULL for window-less docs: a bare hash of null would
       // collapse to the seed constant and count as a real window
-      .withColumn("_h", when(col("_w").isNotNull, hasher(col("_w"))))
+      .withColumn("_h", when(col("_w").isNotNull, Md5Hasher(col("_w"))))
       .drop("_w")
     val shared = ex.filter(col("_h").isNotNull)
       .groupBy(col("_h")).agg(count(lit(1)).as("_df"))
@@ -1256,14 +1235,13 @@ object Dedup {
     *
     * Output: (idCol, clean_text, n_tokens, n_removed). */
   def stripSharedSpans(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int, hasher: Hasher = XxHasher,
-                       minDf: Int = 2): DataFrame = {
+                       n: Int, minDf: Int = 2): DataFrame = {
     val toks = docs.select(col(idCol),
       TextFunctions.tokens(col(textCol)).as("_toks"))
     val wins = toks.select(col(idCol),
         posexplode(TextFunctions.tokenNgrams(col("_toks"), n))
           .as(Seq("_p", "_w")))
-      .withColumn("_h", hasher(col("_w"))).drop("_w")
+      .withColumn("_h", Md5Hasher(col("_w"))).drop("_w")
     // doc frequency over per-doc-DISTINCT windows, as in the report
     val shared = wins.select(col(idCol), col("_h")).distinct()
       .groupBy(col("_h")).agg(count(lit(1)).as("_df"))
@@ -1367,14 +1345,13 @@ object Dedup {
     * with < window n-grams yield the single min of what exists.
     * Output: (idCol, fps array<long> sorted distinct). */
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
-                         n: Int = 3, window: Int = 4,
-                         hasher: Hasher = XxHasher): DataFrame = {
+                         n: Int = 3, window: Int = 4): DataFrame = {
     require(n >= 1 && window >= 1, s"bad winnow params n=$n window=$window")
     val hashed = docs
       .select(col(idCol), TextFunctions.tokens(col(textCol)).as("_toks"))
       .select(col(idCol),
         transform(TextFunctions.tokenNgrams(col("_toks"), n),
-          g => hasher(g)).as("_h"))
+          g => Md5Hasher(g)).as("_h"))
     val wmins = transform(
       sequence(lit(1), greatest(size(col("_h")) - (window - 1), lit(1))),
       i => array_min(slice(col("_h"), i, lit(window))))
@@ -1483,8 +1460,7 @@ object Dedup {
     * Output: (idCol, chunk_idx, chunk, fp) — fp = md5(chunk), the
     * engine-free chunk identity. */
   def cdcChunks(docs: DataFrame, idCol: String, textCol: String,
-                window: Int = 3, divisor: Int = 16,
-                hasher: Hasher = XxHasher): DataFrame = {
+                window: Int = 3, divisor: Int = 16): DataFrame = {
     require(window >= 1 && divisor >= 2,
       s"bad cdc params window=$window divisor=$divisor")
     val toks = docs
@@ -1502,7 +1478,7 @@ object Dedup {
     val bpos = when(size(col("_toks")) < window, array().cast("array<int>"))
       .otherwise(filter(zip_with(
         transform(TextFunctions.tokenNgrams(col("_toks"), window),
-          g => hasher(g)),
+          g => Md5Hasher(g)),
         sequence(lit(window), size(col("_toks"))),
         (h, p) => when(pmod(h, lit(divisor.toLong)) === 0, p)),
         x => x.isNotNull))
@@ -1541,8 +1517,8 @@ object Dedup {
     * Output: (idCol, n_chunks, n_shared, shared_ratio). */
   def cdcDupReport(docs: DataFrame, idCol: String, textCol: String,
                    window: Int = 3, divisor: Int = 16,
-                   hasher: Hasher = XxHasher, minDf: Int = 2): DataFrame = {
-    val ch = cdcChunks(docs, idCol, textCol, window, divisor, hasher)
+                   minDf: Int = 2): DataFrame = {
+    val ch = cdcChunks(docs, idCol, textCol, window, divisor)
     val dfreq = ch.select(col(idCol), col("fp")).distinct()
       .groupBy(col("fp")).agg(count(lit(1)).as("_df"))
       .filter(col("_df") >= minDf).select(col("fp"), lit(1).as("_shared"))

@@ -193,26 +193,17 @@ object Ivf {
   }
 
   /** Build the IVF index ONCE and persist it: centroids (tiny parquet) plus
-    * the corpus quantized and laid out BY CELL via hive partitioning. A
+    * the corpus vectors laid out BY CELL via hive partitioning. A
     * 100 TB corpus indexed this way serves each query batch by reading only
     * the probed cell directories (partition pruning / dynamic partition
     * pruning through the cell join) — no re-training, no full rescan. */
   def buildIndex(corpus: DataFrame, corpusId: String, corpusVec: String,
                  path: String, numCells: Int, iters: Int = 2,
-                 samplePct: Int = 100, quantize: Boolean = false,
-                 sampleCap: Int = 100000): Unit = {
+                 samplePct: Int = 100, sampleCap: Int = 100000): Unit = {
     val centroids = train(corpus, corpusId, corpusVec, numCells, iters,
       samplePct, sampleCap)
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    val cells = index(corpus, corpusId, corpusVec, centroids)
-    // int8 storage: 4× smaller cells (the usual serving trade) — the
-    // vector column is replaced by struct(scale, q); norms recomputed from
-    // the DEQUANTIZED values at read so scoring is exact w.r.t. what is
-    // stored, and recall loss comes only from quantization error
-    (if (quantize)
-       cells.withColumn(corpusVec, Similarity.quantizeInt8(col(corpusVec)))
-         .drop("_cn")
-     else cells)
+    index(corpus, corpusId, corpusVec, centroids)
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
   }
 
@@ -279,21 +270,12 @@ object Ivf {
         .parquet(s"$path/cells")
   }
 
-  /** Top-k against a persisted index (see `buildIndex`); transparently
-    * dequantizes int8-stored cells. */
+  /** Top-k against a persisted index (see `buildIndex`). */
   def topKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                   corpusId: String, corpusVec: String,
                   queries: DataFrame, queryId: String, queryVec: String,
                   k: Int, nprobe: Int, salts: Int = 64): DataFrame = {
-    val raw = spark.read.parquet(s"$path/cells")
-    val cells = raw.schema(corpusVec).dataType match {
-      case s: org.apache.spark.sql.types.StructType if s.fieldNames.contains("q") =>
-        raw.withColumn(corpusVec, Similarity.dequantize(
-            col(s"$corpusVec.q"), col(s"$corpusVec.scale")))
-          .withColumn("_cn", sqrt(Similarity.dot(col(corpusVec), col(corpusVec))))
-      case _ => raw
-    }
-    search(cells, corpusId, corpusVec,
+    search(spark.read.parquet(s"$path/cells"), corpusId, corpusVec,
       spark.read.parquet(s"$path/centroids"),
       queries, queryId, queryVec, k, nprobe, salts)
   }

@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   *     subvectors of the first k sample rows in stable-hash order. Fully
   *     SQL-recomputable (the md5-bucket order and the L2 argmin are both
   *     plain SQL), so the differential oracle can re-derive the SAME
-  *     codebooks and codes in DuckDB — the hash-injection pattern
-  *     `Dedup.Hasher` established. Also the standard k-means init, so the
+  *     codebooks and codes in DuckDB, as `Dedup.Md5Hasher` does for
+  *     the dedup kernels. Also the standard k-means init, so the
   *     two modes share all code paths.
   *
   * PQ quantizes L2 (Euclidean) structure, so ADC ranks by squared L2

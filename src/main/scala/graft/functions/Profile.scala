@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Generic one-scan column profiler (beyond-parity) — the "what is in this
@@ -13,20 +13,16 @@ import org.apache.spark.sql.functions._
   *
   * min/max aggregate on the column's NATIVE type (lexicographic-on-string
   * would mis-order numerics) and cast to string only for the report.
-  * `approx = true` swaps the exact distincts for HLL sketches — the
-  * 100 TB default, same policy as `Sampling.corpusStats`: the exact mode
-  * multiplies the scan through Catalyst's Expand (one stream per distinct
-  * column), which is the oracle-checkable small-SF mode only. */
+  * Distinct counts are exact (the oracle-checkable form): Catalyst plans
+  * them through an Expand, one stream per distinct column, still over
+  * the one scan. */
 object Profile {
 
-  def columnProfile(df: DataFrame, cols: Seq[String],
-                    approx: Boolean = false): DataFrame = {
-    def distinctOf(c: Column) =
-      if (approx) approx_count_distinct(c) else count_distinct(c)
+  def columnProfile(df: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap { c =>
       Seq(
         count(col(c)).as(s"_n_$c"),
-        distinctOf(col(c)).as(s"_d_$c"),
+        count_distinct(col(c)).as(s"_d_$c"),
         min(col(c)).cast("string").as(s"_min_$c"),
         max(col(c)).cast("string").as(s"_max_$c"))
     }

@@ -222,23 +222,22 @@ object Sampling {
 
   /** Corpus-level summary in ONE pass — the numbers a pipeline reports
     * after every cleaning stage: doc count, token totals, vocabulary size,
-    * exact-duplicate count. `approx` swaps the two exact distincts for HLL
-    * sketches (the 100 TB default; exact needs a full shuffle of the token
-    * set). Output is a single row. */
-  def corpusStats(docs: DataFrame, idCol: String, textCol: String,
-                  approx: Boolean = false): DataFrame = {
+    * exact-duplicate count. Distincts are exact (a full shuffle of the
+    * token set), so an oracle recomputes every count. Output is a single
+    * row. */
+  def corpusStats(docs: DataFrame, idCol: String,
+                  textCol: String): DataFrame = {
     val toks = docs.select(col(idCol),
       TextFunctions.tokens(col(textCol)).as("_t"),
       TextFunctions.contentFingerprint(col(textCol)).as("_fp"))
     val perDoc = toks.select(col(idCol), size(col("_t")).as("_n"), col("_fp"),
       explode_outer(col("_t")).as("_tok"))
-    def distinctOf(c: Column) =
-      if (approx) approx_count_distinct(c) else count_distinct(c)
     perDoc.agg(
       count_distinct(col(idCol)).as("n_docs"),
       sum(when(col("_tok").isNotNull, 1L).otherwise(0L)).as("n_tokens"),
-      distinctOf(col("_tok")).as("vocab_size"),
-      (count_distinct(col(idCol)) - distinctOf(col("_fp"))).as("n_exact_dups"))
+      count_distinct(col("_tok")).as("vocab_size"),
+      (count_distinct(col(idCol)) - count_distinct(col("_fp")))
+        .as("n_exact_dups"))
   }
 
   /** Per-stratum SOURCE-DIVERSITY report — the concentration check a
@@ -304,21 +303,17 @@ object Sampling {
     * derive from the data instead of being hardcoded — the number a
     * pipeline re-reads after every corpus refresh. One aggregation row.
     *
-    * `approx = false` uses exact `percentile` (sorts each feature's
-    * values IN MEMORY per aggregation — the oracle-checkable small-SF
-    * mode); the 100 TB default is `approx = true` → `approx_percentile`
-    * (t-digest-style sketch, bounded memory, mergeable map-side), same
-    * shape as [[corpusStats]]'s HLL swap. */
-  def qualityCalibration(docs: DataFrame, idCol: String, textCol: String,
-                         approx: Boolean = false): DataFrame = {
+    * Percentiles are exact `percentile` (it sorts each feature's values
+    * IN MEMORY per aggregation), which the oracle recomputes as
+    * `quantile_cont`. */
+  def qualityCalibration(docs: DataFrame, idCol: String,
+                         textCol: String): DataFrame = {
     val feats = TextFunctions.qualityFeatures(col(textCol)).toMap
     val perDoc = docs.select(col(idCol),
       feats("alpha_ratio").as("ar"),
       feats("n_tokens").as("nt"),
       feats("stopword_ratio_en").as("sr"))
-    def pct(c: Column, p: Double) =
-      if (approx) percentile_approx(c, lit(p), lit(10000))
-      else percentile(c, lit(p))
+    def pct(c: Column, p: Double) = percentile(c, lit(p))
     perDoc.agg(
       count(lit(1)).as("n_docs"),
       round(pct(col("ar"), 0.1), 6).as("alpha_ratio_p10"),
@@ -709,14 +704,21 @@ object Sampling {
       }
       step += 1
     }
+    picksFrame(spark, picks, idCol,
+      posting.select(lit(0).cast("int").as("step"), col("_id").as(idCol),
+        lit(0L).as("gain")).limit(0))
+  }
+
+  /** A greedy selector's picks as (step, idCol, gain) rows in pick order.
+    * `empty` is the type-faithful frame for no picks, so the id column
+    * keeps the caller's type. */
+  private def picksFrame(spark: org.apache.spark.sql.SparkSession,
+                         picks: Iterable[(Int, Any, Long)], idCol: String,
+                         empty: => DataFrame): DataFrame =
     picks.map { case (st, id, g) =>
       spark.range(1).select(lit(st).cast("int").as("step"),
         lit(id).as(idCol), lit(g).as("gain"))
-    }.reduceOption(_ unionByName _)
-      // type-faithful empty frame — the id column keeps the caller's type
-      .getOrElse(posting.select(lit(0).cast("int").as("step"),
-        col("_id").as(idCol), lit(0L).as("gain")).limit(0))
-  }
+    }.reduceOption(_ unionByName _).getOrElse(empty)
 
   /** GreeDi two-phase DISTRIBUTED greedy max-coverage (Mirzasoleiman,
     * Karbasi, Sarkar & Krause, NeurIPS'13): partition the corpus into
@@ -989,12 +991,9 @@ object Sampling {
     }
     lastCelfStats.set(CelfStats(picks.size, nRefills, nProbeCalls,
       nProbedIds))
-    picks.map { case (st, id, g) =>
-      spark.range(1).select(lit(st).cast("int").as("step"),
-        lit(id).as(idCol), lit(g).as("gain"))
-    }.reduceOption(_ unionByName _)
-      .getOrElse(posting.select(lit(0).cast("int").as("step"),
-        col("_id").as(idCol), lit(0L).as("gain")).limit(0))
+    picksFrame(spark, picks, idCol,
+      posting.select(lit(0).cast("int").as("step"), col("_id").as(idCol),
+        lit(0L).as("gain")).limit(0))
   }
 
   /** Diagnostics from the most recent CELF run on this JVM: how many
@@ -1070,11 +1069,8 @@ object Sampling {
       }
     }
     posting.unpersist(false)
-    picks.map { case (st, id, g) =>
-      spark.range(1).select(lit(st).cast("int").as("step"),
-        lit(id).as(idCol), lit(g).as("gain"))
-    }.reduceOption(_ unionByName _)
-      .getOrElse(docs.select(lit(0).cast("int").as("step"),
-        col(idCol), lit(0L).as("gain")).limit(0))
+    picksFrame(spark, picks, idCol,
+      docs.select(lit(0).cast("int").as("step"), col(idCol),
+        lit(0L).as("gain")).limit(0))
   }
 }

@@ -188,31 +188,27 @@ object Similarity {
     planes.reduce((a, b) => a.bitwiseOR(b))
   }
 
-  /** LSH-bucketed ANN: score only same-signature pairs. `multiProbe` also
-    * searches every bucket at Hamming distance 1 from the query's signature
-    * (bits+1 probes per query) — the standard recall lever that costs query
-    * fan-out, not corpus reshuffling. Recall < 1 by design — verify against
+  /** LSH-bucketed ANN, multi-probe: each query searches its own signature's
+    * bucket and every bucket at Hamming distance 1 from it (bits+1 probes
+    * per query) — the standard recall lever that costs query fan-out, not
+    * corpus reshuffling. Recall < 1 by design — verify against
     * bruteForceTopK on samples. */
   def lshTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
               queries: DataFrame, queryId: String, queryVec: String,
-              k: Int, bits: Int, dim: Int,
-              multiProbe: Boolean = false): DataFrame = {
+              k: Int, bits: Int, dim: Int): DataFrame = {
     val c = corpus.withColumn("bucket", rhpSignature(col(corpusVec), bits, dim))
       .withColumn("_cn", norm(col(corpusVec)))
     val qSig = queries.withColumn("_sig", rhpSignature(col(queryVec), bits, dim))
       .withColumn("_qn", norm(col(queryVec)))
-    val probes =
-      if (multiProbe)
-        array((col("_sig") +: (0 until bits).map(b =>
-          col("_sig").bitwiseXOR(lit(1L << b)))): _*)
-      else array(col("_sig"))
+    val probes = array((col("_sig") +: (0 until bits).map(b =>
+      col("_sig").bitwiseXOR(lit(1L << b)))): _*)
     val q = qSig.withColumn("bucket", explode(probes)).drop("_sig")
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col(corpusId) =!= col(queryId))
       .withColumn("sim", cosinePrenormed(col(corpusVec), col(queryVec),
         col("_cn"), col("_qn")))
     // no per-pair dedup needed: a candidate lives in exactly one bucket, so
-    // even multi-probe queries meet it at most once
+    // each query meets it at most once across its probes
     topKPerQuery(scored, queryId, corpusId, k)
   }
 
@@ -472,18 +468,11 @@ object Similarity {
     * matryoshka-style embeddings (MRL, Kusupati et al. NeurIPS'22) are
     * trained for: the first `dims` components carry a usable coarse
     * representation, so a scan can score at dims/d of the compute and IO.
-    * `renorm` rescales to unit length (needed for dot/L2 serving; cosine
-    * is scale-invariant so ranking-only callers can skip it — note the
-    * per-element HOF re-eval makes renorm O(dims²) per row, fine for the
-    * small dims it exists for). */
-  def truncate(vec: Column, dims: Int, renorm: Boolean = false): Column = {
+    * The slice keeps its scale: its one caller ranks by cosine, which is
+    * scale-invariant. */
+  def truncate(vec: Column, dims: Int): Column = {
     require(dims >= 1, s"truncate needs dims >= 1, got $dims")
-    val s = slice(vec.cast("array<double>"), 1, dims)
-    if (!renorm) s
-    // zero slices stay zero instead of dividing into all-NaN vectors
-    // (same guard shape as quantizeInt8's zero-vector case)
-    else when(dot(s, s) === 0.0, s)
-      .otherwise(transform(s, x => x / sqrt(dot(s, s))))
+    slice(vec.cast("array<double>"), 1, dims)
   }
 
   /** Two-stage coarse-then-exact retrieval shared by the truncated-dims

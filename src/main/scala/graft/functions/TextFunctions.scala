@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * driver round-trips, no Python workers.
   *
   * Cross-engine determinism note: fingerprints that must be verifiable by an
-  * external SQL oracle use `md5` (bit-identical everywhere); Spark-internal
-  * hashing (MinHash etc.) uses `xxhash64` (faster, long-typed).
+  * external SQL oracle use `md5` (bit-identical everywhere), as do the
+  * MinHash/SimHash kernels (`Dedup.Md5Hasher`).
   */
 object TextFunctions {
 

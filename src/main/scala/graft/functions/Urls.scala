@@ -83,19 +83,15 @@ object Urls {
     * distinct canonical URLs, exact re-crawl duplicates (same canonical,
     * different raw spelling), and the overshoot past the per-domain cap —
     * the "this domain needs throttling / dedup" signal a crawl scheduler
-    * consumes. One projection + one hash aggregation; `approx = true`
-    * swaps the exact distinct for an HLL sketch (the 100 TB default, the
-    * columnProfile policy — exact mode is the oracle-checkable mode). */
-  def domainReport(urls: DataFrame, urlCol: String, cap: Long,
-                   approx: Boolean = false): DataFrame = {
+    * consumes. One projection + one hash aggregation with an exact
+    * distinct, which the oracle recomputes. */
+  def domainReport(urls: DataFrame, urlCol: String, cap: Long): DataFrame = {
     val canon = urls.select(canonicalize(col(urlCol)).as("_cu"))
-    def distinctOf(c: Column) =
-      if (approx) approx_count_distinct(c) else count_distinct(c)
     canon.select(host(col("_cu")).as("host"), col("_cu"))
       .groupBy(col("host"))
       .agg(count(lit(1)).as("n_docs"),
-        distinctOf(col("_cu")).as("n_canonical"),
-        (count(lit(1)) - distinctOf(col("_cu"))).as("n_dup"),
+        count_distinct(col("_cu")).as("n_canonical"),
+        (count(lit(1)) - count_distinct(col("_cu"))).as("n_dup"),
         greatest(count(lit(1)) - lit(cap), lit(0L)).as("suggested_drop"))
   }
 }

@@ -23,12 +23,9 @@ import graft.schema.PropDef
 object GraphOps {
 
   /** J2 — one graph hop: child rows gain their parent's id. `edge` has
-    * columns (childKey, parentKey); broadcast it when small. */
-  def hop(child: DataFrame, edge: DataFrame, childKey: String,
-          broadcastEdge: Boolean = false): DataFrame = {
-    val e = if (broadcastEdge) broadcast(edge) else edge
-    child.join(e, Seq(childKey), "inner")
-  }
+    * columns (childKey, parentKey); Catalyst/AQE picks the join strategy. */
+  def hop(child: DataFrame, edge: DataFrame, childKey: String): DataFrame =
+    child.join(edge, Seq(childKey), "inner")
 
   /** A4 — top-1-per-group (`sorted_by`): many-to-one flatten picks one child
     * row per root by max/min of a sort column. Implemented with `max_by` /

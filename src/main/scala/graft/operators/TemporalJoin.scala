@@ -19,13 +19,12 @@ import org.apache.spark.sql.functions._
   *     there is nothing quadratic to mis-plan; cost is a sort-based
   *     shuffle of |L|+|R| rows — the same shape as a sort-merge join's
   *     shuffle side, minus the probe.
-  *   - [[intervalJoin]] buckets time into `bucketUs` cells and turns the
-  *     range predicate into an EQUI-join on (key, bucket): the right side
-  *     explodes to the (usually ≤ 2) buckets whose left rows could match
-  *     it, the equi-join runs as an ordinary broadcast/sort-merge join,
-  *     and the exact range predicate filters the candidates. Candidate
-  *     blow-up is `(hi-lo)/bucketUs + 1` per right row — constant when
-  *     `bucketUs ≥ hi-lo`, the default.
+  *   - [[intervalJoin]] buckets time into cells one interval span wide
+  *     and turns the range predicate into an EQUI-join on (key, bucket):
+  *     the right side explodes to the (at most 2) buckets whose left rows
+  *     could match it, the equi-join runs as an ordinary
+  *     broadcast/sort-merge join, and the exact range predicate filters
+  *     the candidates.
   *
   * Timestamps are long microseconds throughout (`unix_micros` at the call
   * site): interval arithmetic on integers is exact and ANSI-safe, and the
@@ -83,21 +82,13 @@ object TemporalJoin {
     * bounds inclusive, timestamps long microseconds. Column sets must be
     * disjoint apart from `key`.
     *
-    * `bucketUs` trades shuffle width for candidate count: each right row
-    * replicates to `ceil((upperUs-lowerUs)/bucketUs)+1` buckets (2 at the
-    * default `bucketUs = upperUs - lowerUs`). Pick a smaller bucket only
-    * when keys are so hot that within-bucket candidate pairs dominate. */
+    * Buckets are the interval's span wide (`upperUs - lowerUs`, at least
+    * 1), so each right row replicates to at most 2 buckets. */
   def intervalJoin(left: DataFrame, right: DataFrame, key: String,
                    leftTs: String, rightTs: String,
-                   lowerUs: Long, upperUs: Long,
-                   bucketUs: Long = 0L): DataFrame = {
+                   lowerUs: Long, upperUs: Long): DataFrame = {
     require(upperUs >= lowerUs, s"empty interval [$lowerUs, $upperUs]")
-    val width = if (bucketUs > 0) bucketUs else math.max(upperUs - lowerUs, 1L)
-    // replication factor is a hard multiplier on the right side — refuse
-    // configurations that would silently explode it
-    require((upperUs - lowerUs) / width + 1 <= 1024,
-      s"bucketUs=$width replicates each right row " +
-        s"${(upperUs - lowerUs) / width + 1}x over [$lowerUs, $upperUs]")
+    val width = math.max(upperUs - lowerUs, 1L)
     // a left row in bucket floor(lts/W) matches right rows with
     // rts ∈ [lts+lo, lts+hi]; inverting, a right row's candidate left
     // buckets are floor((rts-hi)/W) .. floor((rts-lo)/W)

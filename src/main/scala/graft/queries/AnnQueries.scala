@@ -158,6 +158,9 @@ object AnnQueries {
       "((count(*) - count(CASE WHEN 2 * n_same > n_nbrs THEN 1 END)) * 1000000) // count(*) AS noise_ppm " +
       "FROM per GROUP BY ql"
 
+  /** Mirror of `Similarity.lshTopK(k = 5, bits = 8, dim = 64)` over
+    * queries vec_id < 8: recompute buckets, probe the signature and its 8
+    * Hamming-1 neighbors, score in-bucket pairs, global top-5 per query. */
   private def annLshOracleSql: String = {
     val (planeCols, bucketExpr) = rhpSqlParts(8, 64)
     val probeList = "[sig" + (0 until 8).map(b => s", xor(sig, ${1L << b})")
@@ -722,7 +725,7 @@ object AnnQueries {
         "nid", "nv",
         emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("qid"), col("embedding").as("qv")),
-        "qid", "qv", k = 5, bits = 8, dim = 64, multiProbe = true)
+        "qid", "qv", k = 5, bits = 8, dim = 64)
     },
       annLshOracleSql),
 
@@ -823,7 +826,7 @@ object AnnQueries {
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       Similarity.recallAtK(
         Similarity.lshTopK(corpus, "nid", "nv", qs, "qid", "qv",
-          k = 5, bits = 8, dim = 64, multiProbe = true),
+          k = 5, bits = 8, dim = 64),
         Similarity.bruteForceTopK(corpus, "nid", "nv", qs, "qid", "qv", k = 5))
     },
       // recall@5 of multi-probe RHP-LSH vs exact: both sides are the same
@@ -1111,8 +1114,8 @@ object AnnQueries {
         "WHERE rn <= 5")),
 
     // ---- product quantization (IVF-PQ compression path) ------------------
-    // driver queries run ANCHOR codebooks (iters = 0, SQL-recomputable —
-    // the oracle-mode pattern Dedup.Hasher established); the prod default
+    // the pq_* queries run ANCHOR codebooks (iters = 0, SQL-recomputable,
+    // as Dedup.Md5Hasher is for the dedup kernels); the prod default
     // is trainCodebooks(iters > 0), whose equivalence/quality PqSpec pins.
     // codes are positional (order IS the payload) → serialized unsorted,
     // mirrored by the oracle's ORDER BY m string_agg

@@ -612,7 +612,7 @@ object CorpusQueries {
     // keep the unique remainder (vs dropping whole docs)
     QuerySpec("corpus_strip_spans", (s, dir) =>
       Dedup.stripSharedSpans(tFan(s, dir, "documents"), "doc_id", "text",
-        n = 5, hasher = Dedup.Md5Hasher),
+        n = 5),
       // positioned windows → shared-window doc-frequency set → covered
       // position sets (range(p, p+5), end-exclusive ≡ the engine's
       // sequence(p, p+4)) → positional token filter, rejoined on ' '
@@ -1181,8 +1181,7 @@ object CorpusQueries {
         "CAST(CASE WHEN sa <> sb THEN 1 ELSE 0 END AS BIGINT) AS is_leak " +
         "FROM sp GROUP BY 1, 2, 4")),
 
-    // corpus-level one-pass summary (exact form; approx=true is the
-    // 100 TB default with HLL distincts)
+    // corpus-level one-pass summary with exact distincts
     QuerySpec("corpus_stats", (s, dir) =>
       Sampling.corpusStats(t(s, dir, "documents"), "doc_id", "text"),
       (s"WITH t AS (SELECT doc_id, toks, md5(array_to_string(toks, ' ')) AS fp " +
@@ -1729,14 +1728,13 @@ object CorpusQueries {
     // screen a new batch (stable buckets 80-99) against the existing
     // corpus (buckets 0-79): exact fingerprint + MinHash LSH band
     // existence probes — left_semi joins, so no quadratic bucket risk and
-    // no cap (an ingest never pairs the corpus with itself). Md5Hasher =
-    // the SQL-recomputable oracle mode, same as dedup_minhash_lsh
+    // no cap (an ingest never pairs the corpus with itself)
     QuerySpec("corpus_ingest", (s, dir) => {
       val docs = tFan(s, dir, "documents").select(col("doc_id"), col("text"))
       val bucket = Sampling.stableBucket(col("doc_id"))
       Dedup.ingestDedupReport(
         docs.filter(bucket < 80), docs.filter(bucket >= 80),
-        "doc_id", "text", hasher = Dedup.Md5Hasher)
+        "doc_id", "text")
     },
       ingestOracleSql),
 
@@ -2025,8 +2023,7 @@ object CorpusQueries {
         "FROM documents) WHERE rn <= 3")),
 
     // quality-gate calibration: data-derived thresholds (percentiles of
-    // the quality features) — exact mode here for the oracle; approx=true
-    // (t-digest sketches) is the 100 TB default
+    // the quality features), exact percentiles
     QuerySpec("corpus_calibrate", (s, dir) =>
       Sampling.qualityCalibration(t(s, dir, "documents"), "doc_id", "text"),
       // exact percentile ≡ DuckDB quantile_cont (same linear-interpolation

@@ -72,7 +72,7 @@ object DedupQueries {
       "CASE WHEN n_truth = 0 THEN 0 ELSE (1000000 * n_hit) // n_truth END AS recall_ppm " +
       "FROM counts"
 
-  /** Mirror of the md5-hasher `dedup_minhash_lsh` query: md5-prefix long
+  /** Mirror of the `dedup_minhash_lsh` query: md5-prefix long
     * per shingle, the 64-function LCG family (constants from
     * Dedup.Md5Hasher.saltConsts baked into the SQL text), md5-hashed band
     * keys over 4-element signature slices, 1000-cap, in-bucket pairs. */
@@ -164,7 +164,7 @@ object DedupQueries {
       "ORDER BY id_a, id_b"
   }
 
-  /** Mirror of the md5-hasher `dedup_simhash` query: md5-prefix long per
+  /** Mirror of the `dedup_simhash` query: md5-prefix long per
     * token, 64 bit-votes, 4×16-bit banding, 1000-cap, Hamming ≤ 8. Bits
     * ≥ 60 of the 60-bit hash are always 0, so their votes are uniformly
     * −1 and the `i < 60` guard never changes a set bit — it only keeps the
@@ -397,12 +397,10 @@ object DedupQueries {
         "SELECT id_a, id_b, round(cos, 6) AS cos FROM c WHERE cos >= 0.8")),
 
     // cross-document repeated spans (Lee et al. 2022): per doc, how many
-    // of its distinct 5-token windows appear in another document. Oracle
-    // mode = Md5Hasher (same cross-engine trick as dedup_minhash_lsh);
-    // prod default is xxhash64
+    // of its distinct 5-token windows appear in another document
     QuerySpec("dedup_substring", (s, dir) =>
       Dedup.substringDupReport(t(s, dir, "documents"), "doc_id", "text", // fan A/B: 0.58x fanned
-        n = 5, hasher = Dedup.Md5Hasher),
+        n = 5),
       // distinct 5-token windows → md5-prefix 60-bit keys (sqlMd5Long, the
       // Md5Hasher twin) → doc-frequency ≥ 2 = shared; per-doc counts from
       // one left join, exactly like the engine's plan
@@ -474,10 +472,10 @@ object DedupQueries {
     // content-defined chunking (rsync/LBFS, Muthitacharoen et al.
     // SOSP'01): variable chunks cut where the rolling 3-token hash ≡ 0
     // mod 16, so boundaries move with the content and near-identical
-    // revisions share every untouched chunk. Md5Hasher oracle mode
+    // revisions share every untouched chunk
     QuerySpec("dedup_cdc", (s, dir) =>
       Dedup.cdcDupReport(tFan(s, dir, "documents"), "doc_id", "text",
-        window = 3, divisor = 16, hasher = Dedup.Md5Hasher),
+        window = 3, divisor = 16),
       // CDC: boundary after token i when md5Long(3-gram ending at i) % 16
       // = 0; chunks = spans between boundaries; shared = chunk fingerprint
       // in ≥ 2 distinct docs — the same per-row slicing the engine codegens
@@ -563,8 +561,8 @@ object DedupQueries {
     QuerySpec("dedup_lsh_delete", (s, dir) => {
       val docs = docsShingled(s, dir)
       val banded = Dedup.lshBands(
-        Dedup.minhashSignatures(docs, "doc_id", "sh", 64, Dedup.Md5Hasher),
-        "doc_id", "sig", bands = 16, rowsPerBand = 4, Dedup.Md5Hasher)
+        Dedup.minhashSignatures(docs, "doc_id", "sh", 64),
+        "doc_id", "sig", bands = 16, rowsPerBand = 4)
       val deleted = t(s, dir, "documents")
         .filter(Sampling.stableBucket(col("doc_id")) >= 60)
         .select(col("doc_id"))
@@ -582,8 +580,8 @@ object DedupQueries {
       val docs = docsShingled(s, dir)
       val bucket = Sampling.stableBucket(col("doc_id"))
       def banded(d: DataFrame) = Dedup.lshBands(
-        Dedup.minhashSignatures(d, "doc_id", "sh", 64, Dedup.Md5Hasher),
-        "doc_id", "sig", bands = 16, rowsPerBand = 4, Dedup.Md5Hasher)
+        Dedup.minhashSignatures(d, "doc_id", "sh", 64),
+        "doc_id", "sig", bands = 16, rowsPerBand = 4)
       Dedup.lshAppendCandidates(
         banded(docs.filter(bucket < 80)),
         banded(docs.filter(bucket >= 80)), "doc_id")
@@ -599,17 +597,13 @@ object DedupQueries {
     },
       s"$ccCompPrefixSql SELECT id, comp FROM comp"),
 
-    // oracle-mode hasher (Md5Hasher): DuckDB has no xxhash64, so the
-    // driver query computes the SAME kernels from md5-prefix longs the
-    // oracle recomputes exactly; production keeps the xxhash64 default
-    // (identical plans — DedupSimilaritySpec pins both hashers)
+    // the kernels hash with md5-prefix longs (Dedup.Md5Hasher), which the
+    // oracle recomputes exactly
     QuerySpec("dedup_minhash_lsh", (s, dir) => {
       val docs = docsShingled(s, dir)
-      val sigs = Dedup.minhashSignatures(docs, "doc_id", "sh", 64,
-        Dedup.Md5Hasher)
+      val sigs = Dedup.minhashSignatures(docs, "doc_id", "sh", 64)
       Dedup.lshCandidates(
-        Dedup.lshBands(sigs, "doc_id", "sig", bands = 16, rowsPerBand = 4,
-          Dedup.Md5Hasher),
+        Dedup.lshBands(sigs, "doc_id", "sig", bands = 16, rowsPerBand = 4),
         "doc_id")
     },
       minhashLshOracleSql),
@@ -675,11 +669,9 @@ object DedupQueries {
     // same role recallAtK plays for the ANN knobs, itself oracle-checked
     QuerySpec("dedup_eval_report", (s, dir) => {
       val docs = docsShingled(s, dir)
-      val sigs = Dedup.minhashSignatures(docs, "doc_id", "sh", 64,
-        Dedup.Md5Hasher)
+      val sigs = Dedup.minhashSignatures(docs, "doc_id", "sh", 64)
       val cands = Dedup.lshCandidates(
-        Dedup.lshBands(sigs, "doc_id", "sig", bands = 16, rowsPerBand = 4,
-          Dedup.Md5Hasher),
+        Dedup.lshBands(sigs, "doc_id", "sig", bands = 16, rowsPerBand = 4),
         "doc_id")
       Dedup.candidateEval(cands,
         Dedup.ngramJaccardPairs(docs, "doc_id", "sh", 0.5, maxPosting = 500))
@@ -689,8 +681,7 @@ object DedupQueries {
     QuerySpec("dedup_simhash", (s, dir) => {
       val docs = Dedup.simhashFingerprints(
         tFan(s, dir, "documents").select(col("doc_id"),
-          docTokens(col("text")).as("toks")), "doc_id", "toks",
-        Dedup.Md5Hasher)
+          docTokens(col("text")).as("toks")), "doc_id", "toks")
       Dedup.simhashPairs(docs, "doc_id", "sh64", hammingMax = 8)
     },
       simhashOracleSql),

@@ -788,7 +788,7 @@ object EventQueries {
       val bucket = Sampling.stableBucket(col("doc_id"))
       EventStream.runStreamingIngestScreen(s, dir, "documents.parquet",
         t(s, dir, "documents").schema, docs.filter(bucket < 80),
-        bucket >= 80, "doc_id", "text", hasher = Dedup.Md5Hasher)
+        bucket >= 80, "doc_id", "text")
     },
       // the streaming screen computes corpus_ingest's exact output (same
       // split, same Md5 kernels) — one oracle text, batch AND stream

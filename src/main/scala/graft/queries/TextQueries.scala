@@ -67,10 +67,6 @@ object TextQueries {
 
   private val sqlBpeRounds = sqlBpeRoundsN(4)
 
-  /** Mirror of `Similarity.lshTopK(k = 5, bits = 8, dim = 64,
-    * multiProbe = true)` over queries vec_id < 8: recompute buckets, probe
-    * the signature and its 8 Hamming-1 neighbors, score in-bucket pairs,
-    * global top-5 per query. */
   /** BM25 top-10 for the three keyword queries — same expression tree as
     * `Bm25.termScore` (ln = natural log in both engines; per-term scores
     * summed as DECIMAL so accumulation order cannot matter). Shared by
@@ -927,16 +923,14 @@ object TextQueries {
     // count-min sketch heavy hitters: fixed depth×width counter frame
     // (corpus-size-independent state — the mergeable monitoring sketch),
     // estimates for the exact top-100 tokens ride next to their true
-    // counts; md5 hasher mode = the SQL-recomputable oracle form
+    // counts; md5-hashed cells, so the oracle recomputes each one
     QuerySpec("vocab_cms_topk", (s, dir) => {
       val toks = tFan(s, dir, "documents")
         .select(explode(TextFunctions.tokens(col("text"))).as("token"))
-      val sk = Cms.sketch(toks, "token", depth = 4, width = 1024,
-        Dedup.Md5Hasher)
+      val sk = Cms.sketch(toks, "token", depth = 4, width = 1024)
       val top = toks.groupBy("token").agg(count(lit(1)).as("n_true"))
         .orderBy(col("n_true").desc, col("token")).limit(100)
-      Cms.estimate(sk, top.select("token"), "token", 4, 1024,
-          Dedup.Md5Hasher)
+      Cms.estimate(sk, top.select("token"), "token", 4, 1024)
         .join(top, "token")
         .select(col("token"), col("n_true"), col("est").as("n_est"))
     },
@@ -1549,11 +1543,10 @@ object TextQueries {
         "FROM ho LEFT JOIN s USING (doc_id)")),
 
     // winnowing fingerprints (Schleimer et al. SIGMOD'03, the MOSS
-    // algorithm): min-hash of each 4-window over word-3-gram hashes —
-    // Md5Hasher oracle mode, xxhash64 prod default
+    // algorithm): min-hash of each 4-window over md5 word-3-gram hashes
     QuerySpec("text_winnow", (s, dir) => driverSafe(
       Dedup.winnowFingerprints(t(s, dir, "documents"), "doc_id", "text",
-        n = 3, window = 4, hasher = Dedup.Md5Hasher)),
+        n = 3, window = 4)),
       // winnowing: per-position window minima over md5-prefix n-gram hashes
       (s"WITH t AS (SELECT doc_id, $sqlToks AS toks FROM documents), " +
         "g AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[]) " +

@@ -130,13 +130,10 @@ final class FsEsClient(val root: Path) extends EsClient {
   * incremental-run timestamp (S11). */
 object EsPublisher {
 
-  def publish(client: FsEsClient, alias: String, docs: DataFrame,
-              docType: String, nowMillis: Long, keep: Int = 1): String =
-    publishCounted(client, alias, docs, docType, nowMillis, keep)._1
-
-  /** Like `publish`, but also returns the written document count: the sum
-    * of the row counts in the footers of the part files the write just
-    * produced, read in this process. No Spark job runs for it, and the
+  /** Publish `docs` as the alias's next version and return (the new index
+    * name, the written document count). The count is the sum of the row
+    * counts in the footers of the part files the write just produced,
+    * read in this process. No Spark job runs for it, and the
     * unmaterialized translation frame is never executed a second time. */
   def publishCounted(client: FsEsClient, alias: String, docs: DataFrame,
                      docType: String, nowMillis: Long,

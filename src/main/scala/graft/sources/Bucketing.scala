@@ -19,7 +19,7 @@ import org.apache.spark.sql.DataFrame
 object Bucketing {
 
   def writeBucketed(df: DataFrame, table: String, key: String,
-                    buckets: Int, sortCols: Seq[String] = Nil): Unit = {
+                    buckets: Int): Unit = {
     // overwrite must also cover the stale-location case: a warehouse dir
     // left by a previous JVM whose (in-memory/derby) metastore is gone —
     // saveAsTable then fails LOCATION_ALREADY_EXISTS even in overwrite
@@ -30,8 +30,7 @@ object Bucketing {
       spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
-    val w = df.write.mode("overwrite").bucketBy(buckets, key)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
+    df.write.mode("overwrite").bucketBy(buckets, key)
       .format("parquet")
       .saveAsTable(table)
   }

@@ -89,29 +89,27 @@ object TubeText {
     }
   }
 
-  /** Edge table → (childIdCol, parentIdCol). `reverse=true` swaps roles
-    * (reference extract_link_reverse, lambdas.py:74-76). */
+  /** Edge table → (childIdCol, parentIdCol): the dump's src is the child,
+    * its dst the parent. */
   def edges(spark: SparkSession, dir: String, childIdCol: String,
-            parentIdCol: String, reverse: Boolean = false): DataFrame = {
-    val (srcAs, dstAs) = if (reverse) (parentIdCol, childIdCol)
-                         else (childIdCol, parentIdCol)
+            parentIdCol: String): DataFrame = {
     dumpKind(spark, dir) match {
       case TextDump =>
         readCsv(spark, dir, 6)
-          .select(col("_c4").alias(srcAs), col("_c5").alias(dstAs))
+          .select(col("_c4").alias(childIdCol), col("_c5").alias(parentIdCol))
       case ParquetDump =>
         val raw = spark.read.parquet(dir)
         val have = raw.columns.map(c => c.toLowerCase -> c).toMap
         def req(n: String) = have.get(n).map(col).getOrElse(
           throw new IllegalArgumentException(
             s"parquet edge dump $dir has no $n column"))
-        raw.select(req("src_id").cast(StringType).alias(srcAs),
-          req("dst_id").cast(StringType).alias(dstAs))
+        raw.select(req("src_id").cast(StringType).alias(childIdCol),
+          req("dst_id").cast(StringType).alias(parentIdCol))
       case NoDump =>
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField(srcAs, StringType),
-                         StructField(dstAs, StringType))))
+          StructType(Seq(StructField(childIdCol, StringType),
+                         StructField(parentIdCol, StringType))))
     }
   }
 }

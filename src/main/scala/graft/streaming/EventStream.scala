@@ -339,9 +339,7 @@ object EventStream {
     * must hold them for the life of the streaming query and unpersist
     * them when it stops ([[runStreamingIngestScreen]] does). */
   def buildCorpusDedupIndex(corpus: DataFrame, idCol: String,
-                            textCol: String,
-                            hasher: graft.functions.Dedup.Hasher)
-      : (DataFrame, DataFrame) = {
+                            textCol: String): (DataFrame, DataFrame) = {
     import graft.functions.{Dedup, TextFunctions}
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val oldFp = corpus
@@ -351,8 +349,8 @@ object EventStream {
         Dedup.minhashSignatures(
           corpus.select(col(idCol),
             TextFunctions.wordShingles(col(textCol), 3).as("_sh")),
-          idCol, "_sh", 64, hasher),
-        idCol, "sig", 16, 4, hasher)
+          idCol, "_sh", 64),
+        idCol, "sig", 16, 4)
       .select(col("band"), col("band_key")).distinct().persist(lvl)
     (oldFp, oldBands)
   }
@@ -376,8 +374,7 @@ object EventStream {
   def ingestScreenStream(newDocs: DataFrame, oldFp: DataFrame,
                          oldBands: DataFrame,
                          idCol: String, textCol: String,
-                         watermark: String, windowLen: String,
-                         hasher: graft.functions.Dedup.Hasher): DataFrame = {
+                         watermark: String, windowLen: String): DataFrame = {
     import graft.functions.{Dedup, TextFunctions}
     val base = newDocs.select(col(idCol), col(textCol), col("ts"))
     val exactProbe = base
@@ -389,10 +386,10 @@ object EventStream {
     val bandProbe = base
       .withColumn("_sh", TextFunctions.wordShingles(col(textCol), 3))
       .filter(size(col("_sh")) > 0) // batch twin: explode drops these
-      .withColumn("_shh", transform(col("_sh"), s => hasher(s)))
-      .withColumn("_sig", Dedup.rowMinhashSignature(col("_shh"), 64, hasher))
+      .withColumn("_shh", transform(col("_sh"), s => Dedup.Md5Hasher(s)))
+      .withColumn("_sig", Dedup.rowMinhashSignature(col("_shh"), 64))
       .select(col(idCol), col("ts"),
-        explode(Dedup.rowBandKeys(col("_sig"), 16, 4, hasher)).as("_bk"))
+        explode(Dedup.rowBandKeys(col("_sig"), 16, 4)).as("_bk"))
       .select(col(idCol), col("ts"),
         col("_bk.band").as("band"), col("_bk.band_key").as("band_key"))
       .join(oldBands.withColumn("_h", lit(true)),
@@ -419,7 +416,6 @@ object EventStream {
                                schema: StructType, corpus: DataFrame,
                                newPred: org.apache.spark.sql.Column,
                                idCol: String, textCol: String,
-                               hasher: graft.functions.Dedup.Hasher,
                                watermark: String = "1 hour",
                                windowLen: String = "1 hour",
                                queryName: String = "graft_ingest_screen")
@@ -427,10 +423,9 @@ object EventStream {
     val stream = streamRead(spark, dir, glob, schema)
       .filter(newPred)
       .withColumn("ts", expr(s"timestamp_micros($idCol)"))
-    val (oldFp, oldBands) = buildCorpusDedupIndex(corpus, idCol, textCol,
-      hasher)
+    val (oldFp, oldBands) = buildCorpusDedupIndex(corpus, idCol, textCol)
     val screened = ingestScreenStream(stream, oldFp, oldBands, idCol,
-      textCol, watermark, windowLen, hasher)
+      textCol, watermark, windowLen)
     try {
       withStreamingPartitions(spark, 2) {
         val q = screened.writeStream

@@ -180,7 +180,7 @@ class PropertySpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     val grams = docs
       .select($"doc_id", explode(TextFunctions.wordNgrams($"text", n)).as("g"))
-      .select($"doc_id", xxhash64($"g").as("h"))
+      .select($"doc_id", graft.functions.Dedup.Md5Hasher($"g").as("h"))
       .collect().groupBy(_.getLong(0))
       .map { case (k, v) => k -> v.map(_.getLong(1)).toSet }
     cases.foreach { pair =>

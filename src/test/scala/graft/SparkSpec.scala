@@ -8,10 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
   * session startup dominates test wall-clock otherwise). Four cores
-  * whatever the box: the plan-shape specs assume four partitions. */
+  * whatever the box: the plan-shape specs assume four partitions. Managed
+  * tables (`saveAsTable`) land in a temp warehouse, not in the working
+  * directory, which is Spark's default. */
 object SparkSpec {
   lazy val spark: SparkSession =
-    Sessions.builder(cores = 4).appName("graft-test").getOrCreate()
+    Sessions.builder(cores = 4).appName("graft-test")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .getOrCreate()
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

@@ -5,8 +5,8 @@ import graft.SparkSpec
 import graft.functions.Dedup
 
 /** graft_minhash (imperative long[k] buffer) must be value-identical to
-  * the k-min-columns frame formulation for BOTH hash families, across
-  * duplicate-heavy, single-shingle, and randomized corpora. */
+  * the k-min-columns frame formulation across duplicate-heavy,
+  * single-shingle, and randomized corpora. */
 class MinhashAggSpec extends SparkSpec {
   import spark.implicits._
 
@@ -21,9 +21,8 @@ class MinhashAggSpec extends SparkSpec {
   }
 
   test("md5lcg family: native agg equals the 64-min-columns frame form") {
-    val nat = Dedup.minhashSignatures(corpus, "id", "sh", 64, Dedup.Md5Hasher)
-    val hof = Dedup.minhashSignaturesComposed(corpus, "id", "sh", 64,
-      Dedup.Md5Hasher)
+    val nat = Dedup.minhashSignatures(corpus, "id", "sh", 64)
+    val hof = Dedup.minhashSignaturesComposed(corpus, "id", "sh", 64)
     val j = nat.withColumnRenamed("sig", "natSig")
       .join(hof.withColumnRenamed("sig", "hofSig"), Seq("id"))
       .collect()
@@ -41,21 +40,9 @@ class MinhashAggSpec extends SparkSpec {
     val df = Seq((1L, Option.empty[Long]), (1L, Option.empty[Long]))
       .toDF("id", "h")
     val r = df.groupBy(col("id"))
-      .agg(call_function("graft_minhash", col("h"), lit(4), lit(false))
-        .as("sig"))
+      .agg(call_function("graft_minhash", col("h"), lit(4)).as("sig"))
       .collect()
     assert(r.length === 1)
     assert(r(0).getSeq[Long](1) === Seq.fill(4)(Long.MaxValue))
-  }
-
-  test("xxhash family: native agg equals the frame form") {
-    val nat = Dedup.minhashSignatures(corpus, "id", "sh", 16, Dedup.XxHasher)
-    val hof = Dedup.minhashSignaturesComposed(corpus, "id", "sh", 16,
-      Dedup.XxHasher)
-    val j = nat.withColumnRenamed("sig", "natSig")
-      .join(hof.withColumnRenamed("sig", "hofSig"), Seq("id"))
-      .collect()
-    assert(j.length === 61)
-    j.foreach(r => assert(r.getSeq[Long](1) === r.getSeq[Long](2)))
   }
 }

@@ -58,10 +58,9 @@ class CdcSpec extends SparkSpec {
 
   test("cdcChunks: deterministic under repartitioning, Md5Hasher parity shape") {
     val docs = Seq((1L, tokenStream(100).mkString(" "))).toDF("doc_id", "text")
-    val a = Dedup.cdcChunks(docs, "doc_id", "text", hasher = Dedup.Md5Hasher)
+    val a = Dedup.cdcChunks(docs, "doc_id", "text")
       .orderBy("chunk_idx").collect().map(_.getString(2)).toSeq
-    val b = Dedup.cdcChunks(docs.repartition(5), "doc_id", "text",
-        hasher = Dedup.Md5Hasher)
+    val b = Dedup.cdcChunks(docs.repartition(5), "doc_id", "text")
       .orderBy("chunk_idx").collect().map(_.getString(2)).toSeq
     assert(a === b)
     assert(a.mkString(" ") === tokenStream(100).mkString(" "))

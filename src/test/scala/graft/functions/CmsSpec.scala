@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Count-min sketch: the never-underestimate guarantee, near-exactness at
-  * generous widths, linear mergeability, and hasher-mode equivalence. */
+  * generous widths, and linear mergeability. */
 class CmsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -18,14 +18,12 @@ class CmsSpec extends SparkSpec {
   private def trueCounts = Map("a" -> 100L, "b" -> 50L, "c" -> 25L,
     "d" -> 10L, "e" -> 5L, "f" -> 2L, "g" -> 1L, "h" -> 1L)
 
-  test("estimates never underestimate (both hashers)") {
-    for (h <- Seq(Dedup.XxHasher, Dedup.Md5Hasher)) {
-      val sk = Cms.sketch(zipf, "item", depth = 4, width = 32, h)
-      val est = Cms.estimate(sk, zipf.distinct(), "item", 4, 32, h)
-        .as[(String, Long)].collect().toMap
-      trueCounts.foreach { case (k, n) =>
-        assert(est(k) >= n, s"hasher $h item $k: ${est(k)} < $n")
-      }
+  test("estimates never underestimate") {
+    val sk = Cms.sketch(zipf, "item", depth = 4, width = 32)
+    val est = Cms.estimate(sk, zipf.distinct(), "item", 4, 32)
+      .as[(String, Long)].collect().toMap
+    trueCounts.foreach { case (k, n) =>
+      assert(est(k) >= n, s"item $k: ${est(k)} < $n")
     }
   }
 

@@ -26,8 +26,7 @@ class ExactSubstrSpec extends SparkSpec {
       Set((1L, 3L, 12L, 8L), (2L, 0L, 12L, 8L)))
     // the approximate report only counts the same 8 windows — the
     // 12-token extent is invisible to it
-    val approx = Dedup.substringDupReport(docs, "doc_id", "text", n = 5,
-      hasher = Dedup.Md5Hasher)
+    val approx = Dedup.substringDupReport(docs, "doc_id", "text", n = 5)
       .collect().map(r => r.getAs[Long]("doc_id") ->
         r.getAs[Long]("n_shared")).toMap
     assert(approx(1L) === 8L)
@@ -38,8 +37,7 @@ class ExactSubstrSpec extends SparkSpec {
     val docs = Seq(
       (1L, "a b c d e x y z a b c d e")).toDF("doc_id", "text")
     assert(runsOf(docs) === Set((1L, 0L, 5L, 1L), (1L, 8L, 5L, 1L)))
-    val approx = Dedup.substringDupReport(docs, "doc_id", "text", n = 5,
-      hasher = Dedup.Md5Hasher)
+    val approx = Dedup.substringDupReport(docs, "doc_id", "text", n = 5)
       .collect().map(r => r.getAs[Long]("n_shared")).sum
     assert(approx === 0L) // df counts DOCS, so the repeat is invisible
   }

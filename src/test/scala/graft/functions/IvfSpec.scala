@@ -120,23 +120,6 @@ class IvfSpec extends SparkSpec {
     assert(run(1) === run(64))
   }
 
-  test("int8-quantized persisted index: 4x-smaller cells, search matches " +
-      "the full-precision index on well-separated clusters") {
-    val path = java.nio.file.Files.createTempDirectory("ivfq").toString
-    Ivf.buildIndex(corpus, "nid", "nv", s"$path/full", numCells = 2)
-    Ivf.buildIndex(corpus, "nid", "nv", s"$path/q", numCells = 2,
-      quantize = true)
-    // the stored vector column really is the quantized struct
-    val stored = spark.read.parquet(s"$path/q/cells").schema("nv").dataType
-    assert(stored.isInstanceOf[org.apache.spark.sql.types.StructType])
-    val queries = Seq((100L, Array(1.0f, 0.0f)), (101L, Array(0.0f, 1.0f)))
-      .toDF("qid", "qv")
-    def hits(p: String) = Ivf.topKIndexed(spark, p, "nid", "nv",
-        queries, "qid", "qv", k = 5, nprobe = 1).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).toSet
-    assert(hits(s"$path/q") === hits(s"$path/full"))
-  }
-
   test("nprobe = numCells recovers brute-force results") {
     val queries = Seq((100L, Array(0.2f, 1.0f))).toDF("qid", "qv")
     val ivf = Ivf.topK(corpus, "nid", "nv", queries, "qid", "qv",

@@ -86,8 +86,8 @@ class LshDeltaSpec extends SparkSpec {
       .select(col("doc_id"), TextFunctions.wordShingles(col("text"), 3).as("sh"))
     val bucket = Sampling.stableBucket(col("doc_id"))
     def banded(d: org.apache.spark.sql.DataFrame) = Dedup.lshBands(
-      Dedup.minhashSignatures(d, "doc_id", "sh", 64, Dedup.Md5Hasher),
-      "doc_id", "sig", bands = 16, rowsPerBand = 4, Dedup.Md5Hasher)
+      Dedup.minhashSignatures(d, "doc_id", "sh", 64),
+      "doc_id", "sig", bands = 16, rowsPerBand = 4)
     val oldB = banded(docs.filter(bucket < 80))
     val newB = banded(docs.filter(bucket >= 80))
     val delta = Dedup.lshAppendCandidates(oldB, newB, "doc_id")

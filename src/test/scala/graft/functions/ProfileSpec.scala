@@ -28,12 +28,6 @@ class ProfileSpec extends SparkSpec {
     assert(!plan.contains("Join") && !plan.contains("Union"), plan)
   }
 
-  test("approx mode keeps the same report shape") {
-    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-    val rows = Profile.columnProfile(df, Seq("id"), approx = true).collect()
-    assert(rows.length === 1 && rows(0).getLong(3) === 2L)
-  }
-
   test("exactQuantilesBisect: equals sorted order statistics, with ties, " +
       "negatives, nulls, and the q=1 endpoint; empty input yields no rows") {
     import spark.implicits._

@@ -190,8 +190,7 @@ class SamplingSpec extends SparkSpec {
     assert(ex.queryExecution.sparkPlan.toString.contains("WindowGroupLimit"))
   }
 
-  test("qualityCalibration: exact percentiles interpolate like quantile_cont; " +
-      "approx mode returns the same shape") {
+  test("qualityCalibration: exact percentiles interpolate like quantile_cont") {
     // alpha ratios: 1.0, 0.4, 0.8, 0.0 → sorted [0, .4, .8, 1]
     val docs = Seq((1L, "aaaa"), (2L, "aa 11"), (3L, "the the the the"),
       (4L, "1234")).toDF("doc_id", "text")
@@ -201,10 +200,6 @@ class SamplingSpec extends SparkSpec {
     assert(r.getDouble(r.fieldIndex("alpha_ratio_p10")) === 0.12)
     assert(r.getDouble(r.fieldIndex("alpha_ratio_p50")) === 0.6)
     assert(r.getDouble(r.fieldIndex("alpha_ratio_p90")) === 0.94)
-    val a = Sampling.qualityCalibration(docs, "doc_id", "text", approx = true)
-      .collect()(0)
-    assert(a.getLong(a.fieldIndex("n_docs")) === 4L)
-    assert(a.getDouble(a.fieldIndex("alpha_ratio_p50")) >= 0.0)
   }
 
   test("tokenBudgetMixture: rates follow the integer formula, under-budget " +

@@ -69,17 +69,14 @@ class TemporalJoinSpec extends SparkSpec {
     val r = spark.range(300).select((col("id") + 1000).as("to_id"),
       pmod(xxhash64(col("id"), lit(2)), lit(5)).as("k"),
       pmod(xxhash64(col("id"), lit(3)), lit(500)).as("to_us"))
-    for (bucket <- Seq(0L, 7L, 100L)) {
-      val got = TemporalJoin.intervalJoin(l, r, "k", "from_us", "to_us",
-        lowerUs = -20L, upperUs = 60L, bucketUs = bucket)
-        .select("from_id", "to_id")
-      val naive = l.join(r, Seq("k"))
-        .filter(col("to_us") >= col("from_us") - 20 &&
-          col("to_us") <= col("from_us") + 60)
-        .select("from_id", "to_id")
-      assert(got.exceptAll(naive).isEmpty && naive.exceptAll(got).isEmpty,
-        s"bucketUs=$bucket")
-    }
+    val got = TemporalJoin.intervalJoin(l, r, "k", "from_us", "to_us",
+      lowerUs = -20L, upperUs = 60L)
+      .select("from_id", "to_id")
+    val naive = l.join(r, Seq("k"))
+      .filter(col("to_us") >= col("from_us") - 20 &&
+        col("to_us") <= col("from_us") + 60)
+      .select("from_id", "to_id")
+    assert(got.exceptAll(naive).isEmpty && naive.exceptAll(got).isEmpty)
   }
 
   test("intervalJoin plans an equi-join, not a nested loop") {

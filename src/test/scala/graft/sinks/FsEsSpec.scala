@@ -20,8 +20,8 @@ class FsEsSpec extends SparkSpec {
     val root: Path = Files.createTempDirectory("fses")
     val es = new FsEsClient(root)
 
-    val v0 = EsPublisher.publish(es, "customer", docs, "customer",
-      nowMillis = 1000L)
+    val v0 = EsPublisher.publishCounted(es, "customer", docs, "customer",
+      nowMillis = 1000L)._1
     assert(v0 === "customer_0")
     assert(es.aliasTargets("customer") === Seq("customer_0"))
 
@@ -47,15 +47,16 @@ class FsEsSpec extends SparkSpec {
     assert(EsControl.needsRun(Some(2000L), es.timestamp("customer")))
 
     // second publish: next version, alias flips, old version retained once
-    val v1 = EsPublisher.publish(es, "customer",
-      docs.withColumn("extra", lit(1L)), "customer", nowMillis = 3000L)
+    val v1 = EsPublisher.publishCounted(es, "customer",
+      docs.withColumn("extra", lit(1L)), "customer", nowMillis = 3000L)._1
     assert(v1 === "customer_1")
     assert(es.aliasTargets("customer") === Seq("customer_1"))
     assert(es.indices().contains("customer_0")) // rollback copy kept
     assert(es.timestamp("customer") === Some(3000L))
 
     // third publish: customer_0 falls off retention (keep = 1)
-    EsPublisher.publish(es, "customer", docs, "customer", nowMillis = 4000L)
+    EsPublisher.publishCounted(es, "customer", docs, "customer",
+      nowMillis = 4000L)._1
     assert(!es.indices().contains("customer_0"))
     assert(es.indices().contains("customer_1"))
   }
@@ -65,7 +66,8 @@ class FsEsSpec extends SparkSpec {
     val es = new FsEsClient(root)
 
     // v1: two documents
-    val v0 = EsPublisher.publish(es, "subject", docs, "subject", 1000L)
+    val v0 = EsPublisher.publishCounted(es, "subject", docs, "subject",
+      1000L)._1
     assert(v0 === "subject_0")
 
     // v2 with backup, as `RunEtl.run --backup` publishes: back up the
@@ -98,7 +100,8 @@ class FsEsSpec extends SparkSpec {
       Files.readAllBytes(root.resolve("subject_2/_mapping.json")), "UTF-8")
     assert(m.contains(""""name":{"type":"keyword""""))
     // fix-forward after a rollback never collides: next publish is v3
-    val v3 = EsPublisher.publish(es, "subject", docs, "subject", 3000L)
+    val v3 = EsPublisher.publishCounted(es, "subject", docs, "subject",
+      3000L)._1
     assert(v3 === "subject_3")
   }
 

@@ -30,18 +30,13 @@ class TubeTextSpec extends SparkSpec {
     assert(rows === Set(("n1", "female", 34L), ("n2", "male", -1L)))
   }
 
-  test("edge rows: (src,dst) = (child,parent); reverse swaps") {
+  test("edge rows: (src,dst) = (child,parent)") {
     val dir = tmpTable(Seq(
       """2020-01-01,{},{},{},c1,p1""",
       """2020-01-01,{},{},{},c2,p1"""))
     val e = TubeText.edges(spark, dir.toString, "_child_id", "_parent_id")
     assert(e.collect().map(r => (r.getString(0), r.getString(1))).toSet ===
       Set(("c1", "p1"), ("c2", "p1")))
-    val rev = TubeText.edges(spark, dir.toString, "_child_id", "_parent_id",
-      reverse = true)
-    assert(rev.columns.toSeq.sorted === Seq("_child_id", "_parent_id"))
-    assert(rev.select("_parent_id").collect().map(_.getString(0)).toSet ===
-      Set("c1", "c2"))
   }
 
   test("missing/empty table dir yields a typed EMPTY frame, not a failure") {

@@ -145,7 +145,7 @@ class EventStreamSpec extends SparkSpec {
     val schema = spark.read.parquet(dir.toString + "/drop").schema
     val out = EventStream.runStreamingIngestScreen(spark,
       dir.toString + "/drop", "*.parquet", schema, corpus,
-      lit(true), "doc_id", "text", Dedup.Md5Hasher,
+      lit(true), "doc_id", "text",
       queryName = "graft_ingest_spec")
     val rows = out.collect().map(r => r.getAs[Long]("doc_id") ->
       ((r.getAs[Boolean]("exact_dup"), r.getAs[Boolean]("near_cand"),
@@ -155,8 +155,7 @@ class EventStreamSpec extends SparkSpec {
     assert(rows(11L)._2 && !rows(11L)._3)        // near candidate, dropped
     assert(rows(12L) === ((false, false, true))) // novel, kept
     // parity: the batch report over the same split agrees flag-for-flag
-    val batch = Dedup.ingestDedupReport(corpus, fresh, "doc_id", "text",
-        hasher = Dedup.Md5Hasher)
+    val batch = Dedup.ingestDedupReport(corpus, fresh, "doc_id", "text")
       .collect().map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Boolean]("exact_dup"), r.getAs[Boolean]("near_cand"),
           r.getAs[Boolean]("keep")))).toMap
@@ -202,7 +201,6 @@ class EventStreamSpec extends SparkSpec {
   test("drop-zone glob naming a table DIRECTORY streams its part files " +
       "(pathGlobFilter matches leaf names only — a dataset directory " +
       "named like the glob used to stream silently empty)") {
-    import graft.functions.Dedup
     val dir = java.nio.file.Files.createTempDirectory("evdirshape")
     val corpus = Seq((1L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
@@ -215,7 +213,7 @@ class EventStreamSpec extends SparkSpec {
     val schema = spark.read.parquet(dir.toString + "/docs.parquet").schema
     val out = EventStream.runStreamingIngestScreen(spark,
       dir.toString, "docs.parquet", schema, corpus,
-      lit(true), "doc_id", "text", Dedup.Md5Hasher,
+      lit(true), "doc_id", "text",
       queryName = "graft_dirshape_spec")
       .collect().map(r => r.getAs[Long]("doc_id") ->
         r.getAs[Boolean]("exact_dup")).toMap
