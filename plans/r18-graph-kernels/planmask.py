@@ -4,7 +4,9 @@
     planmask.py explain <graft.Explain output> <out>
     planmask.py events  <uncompressed Spark event log> <out>
 
-`explain` masks expression ids (#123) and exchange plan ids (plan_id=4).
+`explain` masks expression ids (#123), exchange plan ids (plan_id=4) and
+the JVM's generated lambda class names (Bpe$$$Lambda$4295/0x00007f...),
+whose counter and address depend on class-loading order, not on the plan.
 `events` writes the physical plan of every SQL execution the run started,
 in order, with the same masks plus RDD ids and the call sites of
 checkpointed RDDs."""
@@ -15,6 +17,7 @@ import sys
 
 def mask(text):
     text = re.sub(r"#\d+L?", "#N", text)
+    text = re.sub(r"\$Lambda\$\d+/0x[0-9a-f]+", "$Lambda$N", text)
     return re.sub(r"plan_id=\d+", "plan_id=N", text)
 
 

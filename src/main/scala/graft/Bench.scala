@@ -21,17 +21,20 @@ object Bench {
     def total: Double = times.map(_._2).sum
   }
 
-  /** The queries `only` names, in `all`'s order; every query when `only`
-    * is unset. Fails naming any name `all` does not declare. */
-  def select(all: Map[String, Query], only: Option[String])
-      : Seq[(String, Query)] = only match {
-    case None => all.toSeq
-    case Some(spec) =>
-      val names = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
-      val unknown = names.filterNot(all.contains).toSeq.sorted
-      if (unknown.nonEmpty) throw new IllegalArgumentException(
-        s"unknown query name(s): ${unknown.mkString(", ")}")
-      all.toSeq.filter(kv => names(kv._1))
+  /** The registry's queries that `only` names, in registry order; every
+    * query when `only` is unset. Fails naming any name the registry does
+    * not declare. */
+  def select(only: Option[String]): Seq[(String, Query)] = {
+    val all = SparkEntry.queries
+    only match {
+      case None => all.toSeq
+      case Some(spec) =>
+        val names = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
+        val unknown = names.filterNot(all.contains).toSeq.sorted
+        if (unknown.nonEmpty) throw new IllegalArgumentException(
+          s"unknown query name(s): ${unknown.mkString(", ")}")
+        all.toSeq.filter(kv => names(kv._1))
+    }
   }
 
   /** Drop temp views and cached frames. Streaming drains leave their
@@ -111,7 +114,7 @@ object Bench {
       sys.error("SPARK_GRAFT_SF_DIR must name the input tables' directory"))
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     val selected =
-      try select(SparkEntry.queries, sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+      try select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
       catch { case e: IllegalArgumentException =>
         System.err.println(s"[bench] SPARK_GRAFT_BENCH_ONLY: ${e.getMessage}")
         sys.exit(2)

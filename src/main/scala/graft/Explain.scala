@@ -18,8 +18,7 @@ object Explain {
     val sfDir = args.head
     val names = args.toSeq.tail
     val selected =
-      try Bench.select(SparkEntry.queries,
-        if (names.isEmpty) None else Some(names.mkString(",")))
+      try Bench.select(if (names.isEmpty) None else Some(names.mkString(",")))
       catch { case e: IllegalArgumentException =>
         System.err.println(s"[explain] ${e.getMessage}")
         sys.exit(2)

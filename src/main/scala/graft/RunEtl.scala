@@ -138,16 +138,14 @@ object RunEtl {
     * mapping from the first `etlMapping.yaml` on the reference's config
     * search path
     * (`$XDG_DATA_HOME/gen3/tube` etc.) — so the reference's deployment
-    * scripts drive this entry point without argument changes. `folders`
-    * overrides the search path for tests. */
-  def resolveInputs(positional: Seq[String], env: Map[String, String],
-                    folders: Option[Seq[String]] = None)
+    * scripts drive this entry point without argument changes. */
+  def resolveInputs(positional: Seq[String], env: Map[String, String])
       : (String, String, String, String) = positional match {
     case Seq(s, m, d, o, _*) => (s, m, d, o)
     case Seq(d, o) =>
       val schema = Settings.dictionaryPath(env).getOrElse(sys.error(
         "no schema.json: pass it positionally or set DICTIONARY_URL"))
-      val mapping = Settings.findPath("etlMapping.yaml", "tube", env, folders)
+      val mapping = Settings.findPath("etlMapping.yaml", "tube", env)
         .getOrElse(sys.error(
           "no etlMapping.yaml: pass it positionally or place it on the " +
             "gen3/tube config search path"))

@@ -31,12 +31,12 @@ object Settings {
   }
 
   /** First existing `<folder>/<fileName>` on the search path
-    * (config_helper.py:25-33 `find_paths`, first match). `folders`
-    * overrides the default search path (the testing hook the reference
-    * also exposes). */
-  def findPath(fileName: String, appName: String, env: Map[String, String],
-               folders: Option[Seq[String]] = None): Option[String] =
-    folders.getOrElse(searchFolders(appName, env))
+    * (config_helper.py:25-33 `find_paths`, first match). Tests steer it
+    * through `XDG_DATA_HOME` in the injected env, the folder searched
+    * first. */
+  def findPath(fileName: String, appName: String,
+               env: Map[String, String]): Option[String] =
+    searchFolders(appName, env)
       .map(f => Paths.get(f, fileName))
       .find(Files.exists(_))
       .map(_.toString)
@@ -45,9 +45,8 @@ object Settings {
     * missing file ⇒ empty — every consumer then falls through to its
     * default). Non-string JSON values (the optional `db_use_ssl` boolean)
     * are carried as their text form. */
-  def loadCreds(env: Map[String, String],
-                folders: Option[Seq[String]] = None): Map[String, String] =
-    findPath("creds.json", "tube", env, folders).map { p =>
+  def loadCreds(env: Map[String, String]): Map[String, String] =
+    findPath("creds.json", "tube", env).map { p =>
       new ObjectMapper().readTree(Files.readAllBytes(Paths.get(p)))
         .properties().asScala
         .map(e => e.getKey -> e.getValue.asText())

@@ -8,7 +8,7 @@ object Verify {
     // SPARK_GRAFT_ONLY=a,b,c restricts the dump to named queries (an
     // iteration aid; unset, the dump is complete)
     val selected =
-      try Bench.select(SparkEntry.queries, sys.env.get("SPARK_GRAFT_ONLY"))
+      try Bench.select(sys.env.get("SPARK_GRAFT_ONLY"))
       catch { case e: IllegalArgumentException =>
         System.err.println(s"[verify] SPARK_GRAFT_ONLY: ${e.getMessage}")
         sys.exit(2)

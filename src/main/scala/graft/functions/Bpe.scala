@@ -408,26 +408,4 @@ object Bpe {
       .select(col(idCol),
         coalesce(col(out), array().cast("array<string>")).as(out))
   }
-
-  /** Persist a trained merge table as a (rank, a, b) parquet artifact —
-    * the train-once / serve-everywhere split: training pays the corpus
-    * aggregates once, serving jobs `readMerges` the table
-    * (vocabulary-sized, driver-safe by construction) and run pure
-    * [[encodeWords]]/[[encodeCorpus]] passes with no training
-    * dependency. */
-  def writeMerges(spark: org.apache.spark.sql.SparkSession,
-                  merges: Seq[(String, String)], path: String): Unit = {
-    import spark.implicits._
-    merges.zipWithIndex
-      .map { case ((a, b), i) => (i + 1, a, b) }
-      .toDF("rank", "a", "b")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Read a [[writeMerges]] artifact back in training order. */
-  def readMerges(spark: org.apache.spark.sql.SparkSession,
-                 path: String): Seq[(String, String)] =
-    spark.read.parquet(path).orderBy(col("rank")).collect()
-      .map(r => (r.getAs[String]("a"), r.getAs[String]("b"))).toSeq
 }

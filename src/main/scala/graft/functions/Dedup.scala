@@ -162,8 +162,8 @@ object Dedup {
     * commutative, append ∪ ≡ rebuild EXACTLY (not approximately — the
     * spec asserts frame equality), for any split of the corpus into
     * snapshots. One full-outer equi-join on the 128-bit key; with both
-    * states stored bucketed by content_md5 the exchange disappears
-    * entirely ([[graft.sources.Bucketing]]). */
+    * states stored bucketed by content_md5 the scans report the join
+    * key's partitioning and the exchange disappears entirely. */
   def mergeGroupsState(a: DataFrame, b: DataFrame): DataFrame = {
     val l = a.select(col("content_md5"), col("keep_id").as("_ka"),
       col("group_size").as("_sa"))
@@ -190,8 +190,8 @@ object Dedup {
     * whose keep died: the repair frame is |affected groups|-sized and
     * broadcasts into a semi-join against the survivor scan. At 100 TB
     * that is one filtered pass over the corpus — and with the corpus
-    * stored bucketed/partitioned by content_md5 ([[graft.sources.Bucketing]])
-    * it prunes to the affected buckets only. Deleting docs that were
+    * stored bucketed/partitioned by content_md5 it prunes to the
+    * affected buckets only. Deleting docs that were
     * never ingested is a caller error; it surfaces as a loud
     * negative-size guard failure whenever a fingerprint's count goes
     * negative — including every fingerprint the state never saw (the

@@ -656,6 +656,8 @@ object Sampling {
     * pick's marginal coverage. */
   def maxCoverSelect(docs: DataFrame, idCol: String, shingleCol: String,
                      k: Int): DataFrame = {
+    require(k >= 1, s"k must be >= 1: $k")
+    val spark = docs.sparkSession
     // distinct: the coverage objective is over DISTINCT shingles — a doc
     // repeating one rare shingle must not outscore a doc covering many
     // (callers with pre-deduped arrays, like wordShingles, pay a no-op)
@@ -663,50 +665,33 @@ object Sampling {
       .select(col(idCol).as("_id"), explode(col(shingleCol)).as("_s"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try maxCoverSelectOnPosting(posting, idCol, k)
-    finally posting.unpersist(false)
-  }
-
-  /** [[maxCoverSelect]] over a PRE-BUILT posting frame (`_id`, `_s`,
-    * exploded + distinct) — the exact-greedy twin of
-    * [[maxCoverSelectCelfOnPosting]]'s bucketed-storage entry point.
-    * Pass a table written by [[writePostingBucketed]] and every round's
-    * doc-keyed gain aggregate rides the scan-reported
-    * `HashPartitioning(_id)` with NO exchange, and the winner's
-    * shingle-list probe (`_id = winner`) bucket-prunes at the scan —
-    * per-round cost drops from shuffle-the-posting to
-    * scan-and-aggregate-in-place, the delta the SCALE.md bucketed A/B
-    * measures. Output is IDENTICAL to [[maxCoverSelect]] on the same
-    * corpus (same rounds, same tie-breaks). */
-  def maxCoverSelectOnPosting(posting: DataFrame, idCol: String,
-                              k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
-    val spark = posting.sparkSession
-    var covered = posting.select(col("_s")).limit(0)
-    val picks = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Long)]
-    var done = false
-    var step = 1
-    while (step <= k && !done) {
-      val top = posting.join(broadcast(covered), Seq("_s"), "left_anti")
-        .groupBy("_id").agg(count(lit(1)).as("_gain"))
-        .orderBy(col("_gain").desc, col("_id"))
-        .limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val (winner, gain) = (top(0).get(0), top(0).getLong(1))
-        picks += ((step, winner, gain))
-        // the covered set is only consulted by a NEXT round; no distinct
-        // needed — the anti-join ignores duplicate covered keys, and the
-        // frame stays bounded by the k docs' own shingle lists
-        if (step < k)
-          covered = Frames.truncate(covered.unionByName(
-            posting.filter(col("_id") === lit(winner)).select(col("_s"))))
+    try {
+      var covered = posting.select(col("_s")).limit(0)
+      val picks = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Long)]
+      var done = false
+      var step = 1
+      while (step <= k && !done) {
+        val top = posting.join(broadcast(covered), Seq("_s"), "left_anti")
+          .groupBy("_id").agg(count(lit(1)).as("_gain"))
+          .orderBy(col("_gain").desc, col("_id"))
+          .limit(1).collect()
+        if (top.isEmpty) done = true
+        else {
+          val (winner, gain) = (top(0).get(0), top(0).getLong(1))
+          picks += ((step, winner, gain))
+          // the covered set is only consulted by a NEXT round; no distinct
+          // needed — the anti-join ignores duplicate covered keys, and the
+          // frame stays bounded by the k docs' own shingle lists
+          if (step < k)
+            covered = Frames.truncate(covered.unionByName(
+              posting.filter(col("_id") === lit(winner)).select(col("_s"))))
+        }
+        step += 1
       }
-      step += 1
-    }
-    picksFrame(spark, picks, idCol,
-      posting.select(lit(0).cast("int").as("step"), col("_id").as(idCol),
-        lit(0L).as("gain")).limit(0))
+      picksFrame(spark, picks, idCol,
+        posting.select(lit(0).cast("int").as("step"), col("_id").as(idCol),
+          lit(0L).as("gain")).limit(0))
+    } finally posting.unpersist(false)
   }
 
   /** A greedy selector's picks as (step, idCol, gain) rows in pick order.
@@ -814,8 +799,8 @@ object Sampling {
     * are isin-filtered scans of the persisted posting index with a
     * broadcast covered-set anti-join — no shuffle.
     *
-    * MEASURED (SCALE.md §round-14, superseding the §round-13 caveat;
-    * `lastCelfStats` carries the per-run evidence): CELF's condition is
+    * MEASURED (SCALE.md §round-14, superseding the §round-13 caveat):
+    * CELF's condition is
     * LOW INTER-DOCUMENT OVERLAP — picks must not perturb the remaining
     * gains — NOT a heavy-tailed gain distribution, as §round-13
     * hypothesized. On the low-overlap corpus at sf1.0/k=100 the lazy
@@ -827,43 +812,23 @@ object Sampling {
     * the head removes a uniform fraction of every remaining doc's
     * shingles, all queued bounds stale together, and the fresh head
     * keeps falling below the refill floor. The §round-13 "pays off on
-    * heavy-tailed distributions" claim is retracted. Throughput-bound
-    * callers should prefer [[maxCoverSelectOnPosting]] over an
-    * id-bucketed posting table — measured 2.9× (sf1.0) / 1.35× (sf10)
-    * over the cached exact path, a bigger lever than any lazy-queue
-    * variant, with CELF-on-bucketed close behind (per-pick probes become
-    * bucket-pruned point reads, but each probe is still a separate tiny
-    * job whose scheduling cost can exceed an exchange-free round).
-    * GreeDi and stochastic-greedy remain the distribution-robust cluster
-    * answers; CELF is the exactness-preserving one. */
+    * heavy-tailed distributions" claim is retracted. On the cached
+    * posting CELF is at best 1.38× over [[maxCoverSelect]], and its
+    * per-pick probes are separate tiny jobs, so throughput-bound callers
+    * gain more from storage than from the lazy queue: the same section
+    * measured the exact greedy 2.9× (sf1.0) / 1.35× (sf10) faster off a
+    * posting bucketed by id. GreeDi and stochastic-greedy remain the
+    * distribution-robust cluster answers; CELF is the
+    * exactness-preserving one. */
   def maxCoverSelectCelf(docs: DataFrame, idCol: String, shingleCol: String,
                          k: Int, queueSize: Int = 0): DataFrame = {
+    require(k >= 1, s"k must be >= 1: $k")
+    val m = if (queueSize > 0) queueSize else math.max(4 * k, 64)
+    val spark = docs.sparkSession
     val posting = docs
       .select(col(idCol).as("_id"), explode(col(shingleCol)).as("_s"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try maxCoverSelectCelfOnPosting(posting, idCol, k, queueSize)
-    finally posting.unpersist(false)
-  }
-
-  /** [[maxCoverSelectCelf]] over a PRE-BUILT posting frame (`_id`, `_s`,
-    * already exploded + distinct) — the bucketed-storage entry point
-    * that realizes the tiny-probe cost the cached variant's scaladoc
-    * could only promise. Write the posting once with
-    * [[writePostingBucketed]] (hive-bucketed by `_id`) and pass the
-    * table read here: every per-pick probe (`_id IN (...)` /
-    * `_id = pick`) BUCKET-PRUNES at the scan (the plan's
-    * `SelectedBucketsCount: x out of n`) instead of scanning a
-    * corpus-sized cache, and the refill's `groupBy(_id)` rides the
-    * scan-reported `HashPartitioning(_id)` with NO exchange — the two
-    * plan deltas `BucketingSpec`/SCALE.md pin. Output is IDENTICAL to
-    * [[maxCoverSelectCelf]] on the same corpus (same algorithm, same
-    * tie-breaks); only the storage layout of the probes changes. */
-  def maxCoverSelectCelfOnPosting(posting: DataFrame, idCol: String,
-                                  k: Int, queueSize: Int = 0): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
-    val m = if (queueSize > 0) queueSize else math.max(4 * k, 64)
-    val spark = posting.sparkSession
     var covered = posting.select(col("_s")).limit(0)
 
     // queue of upper bounds, kept sorted (gain DESC, id ASC) on demand.
@@ -923,12 +888,8 @@ object Sampling {
     def gains(frame: DataFrame): DataFrame =
       frame.join(broadcast(covered), Seq("_s"), "left_anti")
         .groupBy("_id").agg(count(lit(1)).as("_gain"))
-    var nRefills = 0L
-    var nProbeCalls = 0L
-    var nProbedIds = 0L
     def refill(): Unit = {
       queue.clear()
-      nRefills += 1
       val top = gains(posting)
         .orderBy(col("_gain").desc, col("_id")).limit(m).collect()
       queue ++= top.map(r => Entry(r.get(0), r.getLong(1), fresh = true))
@@ -936,8 +897,6 @@ object Sampling {
       if (top.isEmpty) exhausted = true
     }
     def reEval(ids: Seq[Any]): Unit = {
-      nProbeCalls += 1
-      nProbedIds += ids.size
       val got = gains(posting.filter(col("_id").isin(ids: _*)))
         .collect().map(r => r.get(0) -> r.getLong(1)).toMap
       val keep = queue.filterNot(e => ids.contains(e.id)) ++
@@ -945,82 +904,59 @@ object Sampling {
       queue.clear(); queue ++= keep // zero-gain docs drop (absent in got)
     }
 
-    val picks = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Long)]
-    var step = 1
-    while (step <= k && !exhausted) {
-      var picked: Option[Entry] = None
-      var justRefilled = false
-      while (picked.isEmpty && !exhausted) {
-        if (queue.isEmpty) { refill(); justRefilled = true }
-        if (!exhausted) {
-          sortQueue()
-          val head = queue.head
-          if (justRefilled) { picked = Some(head); queue.remove(0) }
-          else if (!head.fresh) {
-            // batch-probe every stale bound that could still be the
-            // argmax: >= the best FRESH gain present, else the HEAD's
-            // own bound (the queue max — so the no-fresh state probes
-            // only the top tie-group, classic lazy-CELF, not the whole
-            // queue; a MinValue bar here re-evaluated all m entries
-            // after every pick)
-            val fresh = queue.filter(_.fresh)
-            val bar = if (fresh.nonEmpty) fresh.map(_.gain).max
-                      else head.gain
-            reEval(queue.filter(e => !e.fresh && e.gain >= bar)
-              .map(_.id).toSeq)
-          } else {
-            val staleTied = queue.exists(e => !e.fresh && e.gain >= head.gain)
-            if (staleTied)
-              reEval(queue.filter(e => !e.fresh && e.gain >= head.gain)
+    try {
+      val picks = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Long)]
+      var step = 1
+      while (step <= k && !exhausted) {
+        var picked: Option[Entry] = None
+        var justRefilled = false
+        while (picked.isEmpty && !exhausted) {
+          if (queue.isEmpty) { refill(); justRefilled = true }
+          if (!exhausted) {
+            sortQueue()
+            val head = queue.head
+            if (justRefilled) { picked = Some(head); queue.remove(0) }
+            else if (!head.fresh) {
+              // batch-probe every stale bound that could still be the
+              // argmax: >= the best FRESH gain present, else the HEAD's
+              // own bound (the queue max — so the no-fresh state probes
+              // only the top tie-group, classic lazy-CELF, not the whole
+              // queue; a MinValue bar here re-evaluated all m entries
+              // after every pick)
+              val fresh = queue.filter(_.fresh)
+              val bar = if (fresh.nonEmpty) fresh.map(_.gain).max
+                        else head.gain
+              reEval(queue.filter(e => !e.fresh && e.gain >= bar)
                 .map(_.id).toSeq)
-            else if (head.gain > floor) { picked = Some(head); queue.remove(0) }
-            else queue.clear() // floor tie: force a refill
+            } else {
+              val staleTied =
+                queue.exists(e => !e.fresh && e.gain >= head.gain)
+              if (staleTied)
+                reEval(queue.filter(e => !e.fresh && e.gain >= head.gain)
+                  .map(_.id).toSeq)
+              else if (head.gain > floor) {
+                picked = Some(head); queue.remove(0)
+              }
+              else queue.clear() // floor tie: force a refill
+            }
           }
         }
-      }
-      picked.foreach { e =>
-        picks += ((step, e.id, e.gain))
-        if (step < k) {
-          covered = Frames.truncate(covered.unionByName(
-            posting.filter(col("_id") === lit(e.id)).select(col("_s"))))
-          val staled = queue.map(_.copy(fresh = false))
-          queue.clear(); queue ++= staled
+        picked.foreach { e =>
+          picks += ((step, e.id, e.gain))
+          if (step < k) {
+            covered = Frames.truncate(covered.unionByName(
+              posting.filter(col("_id") === lit(e.id)).select(col("_s"))))
+            val staled = queue.map(_.copy(fresh = false))
+            queue.clear(); queue ++= staled
+          }
+          step += 1
         }
-        step += 1
       }
-    }
-    lastCelfStats.set(CelfStats(picks.size, nRefills, nProbeCalls,
-      nProbedIds))
-    picksFrame(spark, picks, idCol,
-      posting.select(lit(0).cast("int").as("step"), col("_id").as(idCol),
-        lit(0L).as("gain")).limit(0))
+      picksFrame(spark, picks, idCol,
+        posting.select(lit(0).cast("int").as("step"), col("_id").as(idCol),
+          lit(0L).as("gain")).limit(0))
+    } finally posting.unpersist(false)
   }
-
-  /** Diagnostics from the most recent CELF run on this JVM: how many
-    * FULL refill aggregates ran (each = one exact-greedy round) vs how
-    * many bounded id-probes — the direct evidence for whether the lazy
-    * path engaged (`refills ≪ k`) or degenerated to exact greedy
-    * (`refills ≈ k`, the uniform-gain regime SCALE.md documents).
-    * Driver-side counters only; not part of the operator contract. */
-  final case class CelfStats(picks: Int, refills: Long, probeCalls: Long,
-                             probedIds: Long)
-  val lastCelfStats =
-    new java.util.concurrent.atomic.AtomicReference[CelfStats](null)
-
-  /** Build a max-cover posting index — (`_id`, `_s`) exploded + distinct
-    * — and persist it as a hive table BUCKETED by `_id`, the storage
-    * layout [[maxCoverSelectCelfOnPosting]]'s probes partition-prune
-    * against. The ingest-once cost every bucketed design pays: one
-    * shuffle on `_id` here buys exchange-free refill aggregates and
-    * bucket-pruned probes for every subsequent selection run over the
-    * same corpus. */
-  def writePostingBucketed(docs: DataFrame, idCol: String,
-                           shingleCol: String, table: String,
-                           buckets: Int): Unit =
-    graft.sources.Bucketing.writeBucketed(
-      docs.select(col(idCol).as("_id"), explode(col(shingleCol)).as("_s"))
-        .distinct(),
-      table, "_id", buckets)
 
   /** STOCHASTIC greedy max-coverage (Mirzasoleiman et al., AAAI'15
     * "Lazier Than Lazy Greedy"): round r evaluates gains over a

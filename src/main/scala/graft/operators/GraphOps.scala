@@ -28,18 +28,15 @@ object GraphOps {
     child.join(edge, Seq(childKey), "inner")
 
   /** A4 — top-1-per-group (`sorted_by`): many-to-one flatten picks one child
-    * row per root by max/min of a sort column. Implemented with `max_by` /
-    * `min_by` over a struct of all wanted props — a single hash aggregate,
-    * no window shuffle-sort and no `sort_array(collect_list)` memory blowup
+    * row per root by the max of a sort column. Implemented with `max_by`
+    * over a struct of all wanted props — a single hash aggregate, no
+    * window shuffle-sort and no `sort_array(collect_list)` memory blowup
     * on hot roots (reference: aggregation/new_translator.py:256-280). */
   def sortedFirst(joined: DataFrame, rootKey: String, sortCol: Column,
-                  descending: Boolean, props: Seq[Column]): DataFrame = {
-    val packed = struct(props: _*)
-    val pick = if (descending) max_by(packed, sortCol) else min_by(packed, sortCol)
+                  props: Seq[Column]): DataFrame =
     joined.groupBy(col(rootKey))
-      .agg(pick.alias("_top"))
+      .agg(max_by(struct(props: _*), sortCol).alias("_top"))
       .select(col(rootKey), col("_top.*"))
-  }
 
   /** A2 — aggregation over a multi-hop descendant path, as ONE plan:
     * root ⋈ e1 ⋈ e2 … then groupBy(root).agg(...). Per-path descendant

@@ -227,18 +227,11 @@ object CorpusQueries {
     * comparison answers — the shape per-prompt DPO pair construction
     * needs; [[prefComparisons]] is this minus the prompt column, so the
     * comparison semantics have a single source of truth). */
-  private def promptComparisons(s: SparkSession, dir: String): DataFrame =
-    promptComparisonsFrom(t(s, dir, "lineitem"), t(s, dir, "part"))
-
-  /** Frame-parameterized core of [[promptComparisons]] — `ScaleProbe`'s
-    * bucketed-storage A/B feeds it an orderkey-bucketed lineitem table
-    * so the self-join's exchange drops out of the plan. */
-  private[graft] def promptComparisonsFrom(lineitem: DataFrame,
-                                           part: DataFrame): DataFrame = {
-    val a = lineitem
+  private def promptComparisons(s: SparkSession, dir: String): DataFrame = {
+    val a = t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
         col("l_partkey"))
-      .join(part.select(col("p_partkey"), col("p_brand")),
+      .join(t(s, dir, "part").select(col("p_partkey"), col("p_brand")),
         col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey"),
         struct(col("l_linenumber").as("ln"), col("l_quantity").as("q"),

@@ -752,7 +752,7 @@ object RelationalQueries {
     // ---- A4: top-1-per-group via max_by(struct) -------------------------
     QuerySpec("a4_sorted_first", (s, dir) =>
       GraphOps.sortedFirst(t(s, dir, "lineitem"), "l_orderkey",
-        struct(col("l_extendedprice"), col("l_linenumber")), descending = true,
+        struct(col("l_extendedprice"), col("l_linenumber")),
         Seq(col("l_partkey").as("top_partkey"),
           col("l_quantity").as("top_qty"))),
       """SELECT l_orderkey, l_partkey AS top_partkey, l_quantity AS top_qty

@@ -29,12 +29,11 @@ class BenchSpec extends SparkSpec {
   }
 
   test("select keeps the named queries and rejects an unknown name by name") {
-    val all = SparkEntry.queries
-    assert(Bench.select(all, None).size === all.size)
-    assert(Bench.select(all, Some(" dedup_jaccard ,")).map(_._1) ===
+    assert(Bench.select(None).size === SparkEntry.queries.size)
+    assert(Bench.select(Some(" dedup_jaccard ,")).map(_._1) ===
       Seq("dedup_jaccard"))
     val e = intercept[IllegalArgumentException](
-      Bench.select(all, Some("dedup_jaccard,no_such_query")))
+      Bench.select(Some("dedup_jaccard,no_such_query")))
     assert(e.getMessage.contains("no_such_query"))
     assert(!e.getMessage.contains("dedup_jaccard"))
   }

@@ -22,11 +22,13 @@ class SettingsSpec extends AnyFunSuite {
   }
 
   test("db: env beats creds beats default; ssl is an OR and shapes the JDBC url") {
-    val dir = Files.createTempDirectory("creds")
+    // XDG_DATA_HOME/gen3/tube is the first folder on the search path
+    val xdg = Files.createTempDirectory("xdg")
+    val dir = Files.createDirectories(xdg.resolve("gen3/tube"))
     Files.write(dir.resolve("creds.json"),
       """{"db_host":"pg.internal","db_port":"5433","db_username":"alice",
         |"db_use_ssl":true}""".stripMargin.getBytes("UTF-8"))
-    val creds = Settings.loadCreds(Map.empty, Some(Seq(dir.toString)))
+    val creds = Settings.loadCreds(Map("XDG_DATA_HOME" -> xdg.toString))
     assert(creds("db_host") === "pg.internal")
 
     // creds fill what env leaves unset; defaults fill the rest
@@ -45,7 +47,8 @@ class SettingsSpec extends AnyFunSuite {
   }
 
   test("loadCreds: missing file resolves to empty, consumers fall to defaults") {
-    assert(Settings.loadCreds(Map.empty, Some(Seq("/nonexistent-xyz"))) ===
+    val xdg = Files.createTempDirectory("xdg-empty")
+    assert(Settings.loadCreds(Map("XDG_DATA_HOME" -> xdg.toString)) ===
       Map.empty)
   }
 
@@ -87,23 +90,25 @@ class SettingsSpec extends AnyFunSuite {
   test("RunEtl.resolveInputs: positional wins; 2-arg form pulls schema from DICTIONARY_URL and mapping from the search path") {
     assert(RunEtl.resolveInputs(Seq("s", "m", "d", "o"), Map.empty) ===
       (("s", "m", "d", "o")))
-    val dir = Files.createTempDirectory("cfg")
+    // the mapping sits in XDG_DATA_HOME/gen3/tube, the first folder
+    // on the search path
+    val xdg = Files.createTempDirectory("xdg")
+    val dir = Files.createDirectories(xdg.resolve("gen3/tube"))
     Files.write(dir.resolve("etlMapping.yaml"), "x".getBytes("UTF-8"))
-    val env = Map("DICTIONARY_URL" -> "file:///schemas/dd.json")
-    val r = RunEtl.resolveInputs(Seq("dumps", "out"), env,
-      folders = Some(Seq(dir.toString)))
+    val env = Map("XDG_DATA_HOME" -> xdg.toString,
+      "DICTIONARY_URL" -> "file:///schemas/dd.json")
+    val r = RunEtl.resolveInputs(Seq("dumps", "out"), env)
     assert(r === (("/schemas/dd.json", dir.resolve("etlMapping.yaml").toString,
       "dumps", "out")))
     // neither env nor positional ⇒ a loud usage error
     assertThrows[RuntimeException](
-      RunEtl.resolveInputs(Seq("dumps", "out"), Map.empty,
-        folders = Some(Seq("/nonexistent-xyz"))))
+      RunEtl.resolveInputs(Seq("dumps", "out"), Map.empty))
     assertThrows[RuntimeException](RunEtl.resolveInputs(Seq("x"), Map.empty))
     // a remote dictionary is refused up front, naming the variable
     val url = "https://dd.example.org/schema.json"
     val e = intercept[IllegalArgumentException](
-      RunEtl.resolveInputs(Seq("dumps", "out"), Map("DICTIONARY_URL" -> url),
-        folders = Some(Seq(dir.toString))))
+      RunEtl.resolveInputs(Seq("dumps", "out"),
+        env.updated("DICTIONARY_URL", url)))
     assert(e.getMessage.contains("DICTIONARY_URL") && e.getMessage.contains(url))
     // flags: parsed apart from the positional inputs, misspellings refused
     val a = RunEtl.parseArgs(Seq("--force", "s", "m", "--cdc", "d", "o",

@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
   * session startup dominates test wall-clock otherwise). Four cores
-  * whatever the box: the plan-shape specs assume four partitions. Managed
-  * tables (`saveAsTable`) land in a temp warehouse, not in the working
-  * directory, which is Spark's default. */
+  * whatever the box: the plan-shape specs assume four partitions. The
+  * warehouse directory, where the catalog keeps its default database, is
+  * a temp dir, not the working directory, which is Spark's default. */
 object SparkSpec {
   lazy val spark: SparkSession =
     Sessions.builder(cores = 4).appName("graft-test")

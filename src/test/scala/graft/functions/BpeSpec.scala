@@ -151,15 +151,6 @@ class BpeSpec extends SparkSpec {
       docs.select(col("doc_id")).collect().map(_.getLong(0)).toSet)
   }
 
-  test("merge-table artifact round-trips in training order, duplicate " +
-      "pairs included") {
-    val merges = Seq(("a", "b"), ("ab", "c"), ("a", "b"), ("x", "y"))
-    val path = java.nio.file.Files.createTempDirectory("bpe-merges")
-      .toString + "/merges"
-    Bpe.writeMerges(spark, merges, path)
-    assert(Bpe.readMerges(spark, path) === merges)
-  }
-
   test("LOCAL trainer sustains 1000+ merges (the realistic-vocab mode)") {
     // synthetic 3000-word vocabulary over a 20-letter alphabet: enough
     // pair structure that 1200 merges stay productive — the scale the

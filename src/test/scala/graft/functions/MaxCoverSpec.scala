@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Greedy maximum-coverage selection ([[Sampling.maxCoverSelect]]):
   * hand-checkable trajectories, the lowest-id tie order, early stop when
@@ -84,51 +83,18 @@ class MaxCoverSpec extends SparkSpec {
         .as[(Int, Long, Long)].collect().toSeq.sortBy(_._1))
   }
 
-  test("CELF over an id-BUCKETED posting table: identical output; probes " +
-      "bucket-prune and the refill aggregate plans with no exchange") {
-    val spread = spreadDocs(40).toDF("doc_id", "sh")
-    val tbl = "mc_posting_bkt_spec"
-    Sampling.writePostingBucketed(spread, "doc_id", "sh", tbl, buckets = 8)
-    val posting = spark.table(tbl)
-    val got = Sampling.maxCoverSelectCelfOnPosting(posting, "doc_id", k = 6)
-      .as[(Int, Long, Long)].collect().toSeq.sortBy(_._1)
-    val want = Sampling.maxCoverSelect(spread, "doc_id", "sh", k = 6)
-      .as[(Int, Long, Long)].collect().toSeq.sortBy(_._1)
-    assert(got === want)
-    // plan evidence 1 — the REAL probe shape (filter + gains aggregate,
-    // what reEval runs): the scan prunes to the buckets holding the
-    // probed ids instead of reading the whole posting. A bare filter
-    // would NOT show this — the auto-bucketed-scan rule disables
-    // bucketing when no downstream operator needs the distribution, so
-    // the aggregate is load-bearing here exactly as it is in gains()
-    val probe = posting.filter($"_id".isin(7L, 12L))
-      .groupBy($"_id").agg(count(lit(1)).as("_gain"))
-    probe.count()
-    val probePlan = probe.queryExecution.executedPlan.toString
-    assert(probePlan.contains("SelectedBucketsCount"),
-      s"probe scan did not bucket-prune:\n$probePlan")
-    assert(!probePlan.contains("SelectedBucketsCount: 8 out of 8"),
-      s"probe read every bucket:\n$probePlan")
-    assert(graft.sources.Bucketing.isShuffleFree(probe),
-      s"probe aggregate shuffled:\n$probePlan")
-    // plan evidence 2 — refill shape: groupBy(_id) rides the
-    // scan-reported HashPartitioning(_id), no shuffle exchange
-    val refillShaped = posting.groupBy($"_id").agg(count(lit(1)))
-    refillShaped.count()
-    assert(graft.sources.Bucketing.isShuffleFree(refillShaped),
-      refillShaped.queryExecution.executedPlan.toString)
-  }
-
-  test("exact greedy over the same id-BUCKETED posting table: identical " +
-      "output to the docs-frame entry point") {
-    val spread = spreadDocs(40).toDF("doc_id", "sh")
-    val tbl = "mc_posting_bkt_exact_spec"
-    Sampling.writePostingBucketed(spread, "doc_id", "sh", tbl, buckets = 8)
-    val got = Sampling.maxCoverSelectOnPosting(spark.table(tbl), "doc_id",
-        k = 6).as[(Int, Long, Long)].collect().toSeq.sortBy(_._1)
-    val want = Sampling.maxCoverSelect(spread, "doc_id", "sh", k = 6)
-      .as[(Int, Long, Long)].collect().toSeq.sortBy(_._1)
-    assert(got === want)
+  test("a doc repeating one shingle scores its DISTINCT shingles, under " +
+      "both the exact greedy and CELF") {
+    // doc 1 lists "r" ten times: counted per occurrence it would lead
+    // with 11; over distinct shingles it covers 2 and doc 2's 3 wins
+    val docs = Seq(
+      (1L, Seq.fill(10)("r") :+ "a"),
+      (2L, Seq("a", "b", "c"))).toDF("doc_id", "sh")
+    val want = Seq((1, 2L, 3L), (2, 1L, 1L))
+    assert(Sampling.maxCoverSelect(docs, "doc_id", "sh", k = 2)
+      .as[(Int, Long, Long)].collect().toSeq.sortBy(_._1) === want)
+    assert(Sampling.maxCoverSelectCelf(docs, "doc_id", "sh", k = 2)
+      .as[(Int, Long, Long)].collect().toSeq.sortBy(_._1) === want)
   }
 
   test("CELF stays exact under a STARVED queue (every refill/floor path)") {

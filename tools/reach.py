@@ -15,19 +15,27 @@ unreached unit with the test files that name it. A word match
 over-approximates reachability (a local of the same name counts), so the
 list is a lower bound on what is dead.
 
-Section 2, one-value options. For every def that is a member of a
-top-level object, each default parameter that is Boolean-typed or
-object-typed (a non-numeric, non-String type whose default is a stable
-path such as `None`, `Nil` or `Dedup.Md5Hasher`) is checked at every call
-site outside the specs: the main sources plus `perfbench/src/main`. A
-call site names the def as `Obj.name(`, or bare under the same rules as
-section 1. A parameter is listed when the def has at least one call site
-and every call site passes the same fixed value (a literal or a stable
-path), counting an omitted argument as its default. An argument computed
-at run time (a flag, a variable) counts as a second value.
+Section 2, one-value options. The signatures scanned are every def that
+is a member of a top-level object, the primary constructor of every
+top-level class and of every class that is a member of a top-level
+object, and every secondary constructor (`def this`) of a top-level
+class. Each of their parameters is checked at every call site outside
+the specs: the main sources plus `perfbench/src/main`. A call site names
+a def as `Obj.name(`, or bare under the same rules as section 1; a
+constructor as `Cls(` or `new Cls(`, or `Obj.Cls(` for a member class.
+When a class has two constructors, a call counts for the one whose first
+parameter group fits its argument count. A parameter is listed when its
+signature has at least one call site, every call site passes the same
+fixed value (a literal or a stable path), counting an omitted argument
+as its default, and it is an option: Boolean-typed, or of a
+non-numeric, non-String type with a stable-path value such as `None`,
+`Nil` or `Dedup.Md5Hasher` (its default, or for a required parameter the
+value every caller passes). An argument computed at run time (a flag, a
+variable) counts as a second value.
 
 Usage: python3 tools/reach.py [repo root]   (default: the current directory)
 """
+import functools
 import os
 import re
 import sys
@@ -38,6 +46,10 @@ TEST = os.path.join(ROOT, "src/test/scala")
 BENCH = os.path.join(ROOT, "perfbench/src/main/scala")
 ROOT_DIRS = ("queries", "expressions")
 ROOT_OBJECTS = ("SparkEntry",)
+
+# re's own pattern cache holds 512 entries, far fewer than the scan's
+# distinct patterns; without this the scan spends its time recompiling
+rx = functools.lru_cache(maxsize=None)(re.compile)
 
 MODS = (r"(?:(?:private(?:\[\w+\])?|protected|final|override|implicit|lazy|"
         r"sealed|abstract|case)\s+)*")
@@ -121,14 +133,14 @@ def bare(name):
 def names_in(text, u):
     """Does `text` name unit `u` (qualified, or bare where in scope)?"""
     if u.obj is None:
-        return re.search(r"\b%s\b" % u.name, text) is not None
-    if re.search(r"\b%s\.%s\b" % (u.obj, u.name), text):
+        return rx(r"\b%s\b" % u.name).search(text) is not None
+    if rx(r"\b%s\.%s\b" % (u.obj, u.name)).search(text):
         return True
-    if u.name == "apply" and re.search(r"\b%s\(" % u.obj, text):
+    if u.name == "apply" and rx(r"\b%s\(" % u.obj).search(text):
         return True
-    imported = re.search(r"import [\w.]*\b%s\.(_|\{[^}]*\b%s\b)" %
-                         (u.obj, u.name), text)
-    return imported is not None and re.search(bare(u.name), text)
+    imported = rx(r"import [\w.]*\b%s\.(_|\{[^}]*\b%s\b)" %
+                  (u.obj, u.name)).search(text)
+    return imported is not None and rx(bare(u.name)).search(text)
 
 
 def unreached():
@@ -156,7 +168,7 @@ def unreached():
         for u in list(todo):
             if u not in todo:
                 continue
-            if any(r.obj == u.obj and re.search(bare(u.name), r.body)
+            if any(r.obj == u.obj and rx(bare(u.name)).search(r.body)
                    for r in reached):
                 todo.remove(u); reached.append(u); frontier.append(u.body)
     tests = {p: open(p).read() for p in scala_files(TEST)}
@@ -241,16 +253,59 @@ def is_fixed(v):
 
 
 class Option:
-    def __init__(self, rel, line, obj, fn, gi, pi, name, typ, default):
-        self.rel, self.line, self.obj, self.fn = rel, line, obj, fn
-        self.gi, self.pi, self.name = gi, pi, name
-        self.typ, self.default = norm(typ), norm(default)
+    def __init__(self, rel, line, owner, fn, sig, gi, pi, name, typ,
+                 default):
+        self.rel, self.line, self.owner, self.fn = rel, line, owner, fn
+        self.sig, self.gi, self.pi, self.name = sig, gi, pi, name
+        self.typ = norm(typ)
+        self.default = norm(default) if default is not None else None
         self.values = []
+
+    def label(self):
+        """`Obj.fn`, `Cls` (primary constructor) or `Cls.this`."""
+        return ".".join(x for x in (self.owner, self.fn) if x)
+
+
+def arity(group):
+    """(required, total) argument count of one parameter group; a
+    repeated parameter (`xs: T*`) makes the total unbounded."""
+    params = [PARAM.match(raw) for raw in split_top(group)]
+    params = [pm for pm in params if pm]
+    required = sum(1 for pm in params if pm.group(3) is None and
+                   not pm.group(2).strip().endswith("*"))
+    total = (float("inf") if any(pm.group(2).strip().endswith("*")
+                                 for pm in params) else len(params))
+    return required, total
+
+
+CTOR = re.compile(r"\s*(?:\[[^\]]*\])?\s*"
+                  r"(?:(?:private|protected)(?:\[\w+\])?\s*)?")
+
+
+def signature_params(rel, owner, fn, groups, no):
+    """Option candidates of one signature: Boolean- or object-typed
+    parameters, with or without a default."""
+    out = []
+    sig = [arity(g) for g in groups]
+    for gi, group in enumerate(groups):
+        for pi, raw in enumerate(split_top(group)):
+            pm = PARAM.match(raw)
+            if not pm:
+                continue
+            name, typ, default = pm.groups()
+            typ = typ.strip()
+            if typ == "Boolean" or default is None or (
+                    typ not in NUMERIC and STABLE.match(default.strip())):
+                out.append(Option(rel, no + 1, owner, fn, sig, gi, pi, name,
+                                  typ, default))
+    return out
 
 
 def option_params(text, rel):
-    """Boolean- or object-typed default params of top-level object defs."""
-    out, obj = [], None
+    """Parameters of top-level object defs, of top-level classes' primary
+    and secondary constructors, and of classes that are members of a
+    top-level object."""
+    out, obj, cls = [], None, None
     lines = text.split("\n")
     offsets = [0]
     for line in lines:
@@ -258,39 +313,51 @@ def option_params(text, rel):
     for no, line in enumerate(lines):
         top = TOP.match(line)
         if top:
-            obj = top.group(2) if top.group(1) == "object" else None
+            kind, name = top.groups()
+            obj = name if kind == "object" else None
+            cls = name if kind == "class" else None
+            if cls:
+                start = offsets[no] + top.end()
+                out += signature_params(rel, None, cls, groups_after(
+                    text, CTOR.match(text, start).end()), no)
             continue
         if line.startswith("}"):
-            obj = None
+            obj = cls = None
             continue
         m = MEMBER.match(line)
-        if not (obj and m and m.group(1) == "def"):
+        if not m:
             continue
-        fn = m.group(2)
         start = offsets[no] + m.end()
-        for gi, group in enumerate(groups_after(text, start)):
-            for pi, raw in enumerate(split_top(group)):
-                pm = PARAM.match(raw)
-                if not pm or pm.group(3) is None:
-                    continue
-                name, typ, default = pm.groups()
-                typ = typ.strip()
-                if typ == "Boolean" or (
-                        typ not in NUMERIC and STABLE.match(default.strip())):
-                    out.append(Option(rel, no + 1, obj, fn, gi, pi, name,
-                                      typ, default))
+        if obj and m.group(1) == "def":
+            out += signature_params(rel, obj, m.group(2),
+                                    groups_after(text, start), no)
+        elif obj and m.group(1) == "class":
+            out += signature_params(rel, obj, m.group(2), groups_after(
+                text, CTOR.match(text, start).end()), no)
+        elif cls and m.group(1) == "def" and m.group(2) == "this":
+            out += signature_params(rel, cls, "this",
+                                    groups_after(text, start), no)
     return out
 
 
-def call_sites(texts, obj, fn):
-    """Argument groups of every call of `obj.fn` in `texts`."""
-    qualified = re.compile(r"\b%s\.%s\b" % (obj, re.escape(fn)))
-    plain = re.compile(r"(?<!def )" + bare(fn))
-    imports = re.compile(r"import [\w.]*\b%s\.(_|\{[^}]*\b%s\b)" %
-                         (obj, re.escape(fn)))
+def call_sites(texts, owner, fn):
+    """Argument groups of every call of `owner.fn`, of a top-level class
+    `fn`'s constructor (`owner` None) or of its secondary constructors
+    (`fn` "this": `new owner(`), in `texts`. A definition (`def fn(`,
+    `class fn(`) or a pattern (`case fn(`) is not a call."""
+    not_call = r"(?<!def )(?<!class )(?<!case )"
+    if owner is None or fn == "this":
+        qualified = re.compile(not_call + r"(?<![\w.])(?:[a-z_]\w*\.)*%s\b"
+                               % re.escape(owner or fn))
+        plain, imports = None, None
+    else:
+        qualified = re.compile(r"\b%s\.%s\b" % (owner, re.escape(fn)))
+        plain = re.compile(not_call + bare(fn))
+        imports = re.compile(r"import [\w.]*\b%s\.(_|\{[^}]*\b%s\b)" %
+                             (owner, re.escape(fn)))
     for text, owners in texts:
         pats = [qualified]
-        if obj in owners or imports.search(text):
+        if plain and (owner in owners or imports.search(text)):
             pats.append(plain)
         seen = set()
         for pat in pats:
@@ -303,6 +370,14 @@ def call_sites(texts, obj, fn):
                     yield groups
 
 
+def fits(sig, groups):
+    """Does a call's first argument group fit the signature's arity?
+    Overloads (a primary and a secondary constructor) are told apart
+    this way."""
+    required, total = sig[0]
+    return required <= len(split_top(groups[0])) <= total
+
+
 def options():
     texts, params = [], []
     for top in (MAIN, BENCH):
@@ -313,10 +388,13 @@ def options():
             texts.append((text, owners))
             if top == MAIN:
                 params += option_params(text, os.path.relpath(p, MAIN))
-    listed = []
+    listed, sites = [], {}
     for o in params:
-        for groups in call_sites(texts, o.obj, o.fn):
-            if o.gi >= len(groups):
+        key = (o.owner, o.fn)
+        if key not in sites:
+            sites[key] = list(call_sites(texts, o.owner, o.fn))
+        for groups in sites[key]:
+            if o.gi >= len(groups) or not fits(o.sig, groups):
                 continue
             args = split_top(groups[o.gi])
             value = o.default
@@ -328,16 +406,26 @@ def options():
                     value = norm(a)
             o.values.append(value)
         vals = set(o.values)
-        if len(vals) == 1 and is_fixed(next(iter(vals))):
-            listed.append(o)
+        if len(vals) != 1:
+            continue
+        v = next(iter(vals))
+        if v is None or not is_fixed(v):
+            continue
+        # a required parameter is an option only when it is Boolean or
+        # takes a stable path of a non-numeric, non-String type
+        if o.default is None and not (o.typ == "Boolean" or (
+                o.typ not in NUMERIC and STABLE.match(v))):
+            continue
+        listed.append(o)
     print()
-    print("default parameters scanned: %d; one value at every call site: %d"
+    print("parameters scanned: %d; one value at every call site: %d"
           % (len(params), len(listed)))
     for o in listed:
         v = o.values[0]
-        print("%s:%d %s.%s(%s: %s = %s) <- %d call sites, %s" % (
-            o.rel, o.line, o.obj, o.fn, o.name, o.typ, o.default,
-            len(o.values),
+        decl = "%s: %s" % (o.name, o.typ) + (
+            "" if o.default is None else " = " + o.default)
+        print("%s:%d %s(%s) <- %d call sites, %s" % (
+            o.rel, o.line, o.label(), decl, len(o.values),
             "all keep the default" if v == o.default else "all pass " + v))
 
 
