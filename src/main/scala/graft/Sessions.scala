@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** The one place a graft SparkSession is configured (the engine's
   * `make_spark_context`, reference tube/utils/spark.py:15-40). Every main
   * and the test base class build through here, so their sessions cannot
-  * drift apart.
+  * drift apart. What every graft session needs, however it is built,
+  * lives in `GraftExtensions` instead: the native functions and the size
+  * of Spark's generated-class cache.
   *
   * One rule for the core count: `SPARK_GRAFT_CPUS` if set, else every
   * core the JVM sees. Shuffle granularity follows it — both
@@ -49,11 +51,6 @@ object Sessions {
       // Frames.truncate) are only garbage-collected with this on; the
       // default (false) accretes one rdd-<id> dir per iteration round
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // the generated-class cache is JVM-wide and sized once, when
-      // CodeGenerator first initialises; Spark's 100 entries are fewer
-      // than one pass of the Tube run (~130 classes) or of an operator
-      // suite (~205), so every warm pass recompiled them all
-      .config("spark.sql.codegen.cache.maxEntries", 1000L)
 
   /** A local session at `cores`, logging warnings and up. */
   def local(cores: Int = defaultCores()): SparkSession = {

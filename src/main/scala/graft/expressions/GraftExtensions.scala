@@ -1,5 +1,6 @@
 package graft.expressions
 
+import org.apache.spark.{SparkConf, SparkEnv}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -10,6 +11,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * After that, `graft_dot` resolves in SQL and via
   * `functions.call_function("graft_dot", a, b)`.
   *
+  * It is the one hook every graft session passes through, whether built
+  * by `graft.Sessions` or by the user's own builder or spark-submit, so
+  * it also sizes Spark's generated-class cache (see [[sizeCodegenCache]]).
+  *
   * `graft_might_contain(bloomBinary, long)` exposes Spark's own
   * `BloomFilterMightContain` (the codegen'd predicate behind the
   * optimizer's runtime row-level filtering) as a callable function, so
@@ -18,6 +23,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * `GraphOps.buildBloom`/`pruneWithBloom`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    Option(SparkEnv.get).foreach(env => GraftExtensions.sizeCodegenCache(env.conf))
     ext.injectFunction((
       new FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
@@ -95,4 +101,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           .toAggregateExpression()
       }))
   }
+}
+
+object GraftExtensions {
+
+  /** Sizes Spark's generated-class cache at 1000 entries in `conf`,
+    * unless the user set `spark.sql.codegen.cache.maxEntries` there. The
+    * cache is JVM-wide and sized once, from this static conf, when
+    * `CodeGenerator` first initialises. Spark's 100 entries are fewer
+    * than one pass of the Tube run (~220 classes) or of the operator
+    * suite (~205), so every warm pass recompiled them all. `apply` passes
+    * the live driver conf (`SparkContext.getConf` hands out a copy):
+    * `SparkSession.Builder.getOrCreate` applies extensions after the
+    * SparkContext exists and before the session's `SQLConf` or any code
+    * generation reads it. The first session of a JVM fixes the size. */
+  def sizeCodegenCache(conf: SparkConf): Unit =
+    conf.setIfMissing("spark.sql.codegen.cache.maxEntries", "1000")
 }

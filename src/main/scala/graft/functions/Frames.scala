@@ -35,9 +35,10 @@ private[graft] object Frames {
     * only the storage of the truncation point differs.
     *
     * Sessions enabling reliable mode should also set
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (RunEtl
-    * does): Spark only deletes superseded reliable-checkpoint files under
-    * that flag, and an iterative operator writes one per round. */
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`
+    * (`graft.Sessions` sets it for every main): Spark only deletes
+    * superseded reliable-checkpoint files under that flag, and an
+    * iterative operator writes one per round. */
   def truncate(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(true)
